@@ -166,9 +166,7 @@ def _q00b_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("lang_match"),
     )
-    return normalize.ecdf(
-        feats, ["n_chars", "n_words", "mean_word_len"], key_col="doc_id", prefix="u_"
-    )
+    return normalize.ecdf(feats, ["n_chars", "n_words", "mean_word_len"], prefix="u_")
 
 
 def q00b_quality_pipeline_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,11 +414,7 @@ FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate)
 
 def q05_ecdf(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select("o_orderkey", F.col("o_totalprice").alias("n_totalprice"))
-    # persist_input measured a wash here on a quiet host (asis
-    # 2.44-2.61s vs persist 2.37-3.12s at sf1.0: the re-scans are
-    # page-cached parquet, nearly free) — the flag stays available for
-    # derivation-heavy ecdf inputs, where it is a clear win
-    out = normalize.ecdf(o, ["n_totalprice"], key_col="o_orderkey", prefix="u_")
+    out = normalize.ecdf(o, ["n_totalprice"], prefix="u_")
     return out.select("o_orderkey", "u_totalprice")
 
 

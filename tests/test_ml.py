@@ -82,6 +82,24 @@ def test_kmeans_recovers_blobs(spark):
     assert km.inertia < 3 * 300 * 3 * 0.3**2 * 3  # loose sanity bound
 
 
+def test_kmeans_fit_leaves_unset_conf_unset(spark):
+    """kmeans_fit overrides AQE and shuffle.partitions for its loop;
+    keys the caller never set must not be left set afterwards."""
+    df, _, _ = _blob_df(spark, n=50)
+    keys = ["spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"]
+    saved = {k: spark.conf.getAll.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.unset(k)
+        ml.kmeans_fit(df, ["a", "b", "c"], k=3, key_col="key", init_sample=64, max_iter=2)
+        left = spark.conf.getAll
+        assert [k for k in keys if k in left] == []
+    finally:
+        for k, v in saved.items():
+            if v is not None:
+                spark.conf.set(k, v)
+
+
 def test_elbow_semantics():
     # inertia drops sharply then flattens → elbow at the kink
     inertias = [100.0, 40.0, 12.0, 10.0, 9.0, 8.5]  # k = 2..7
@@ -115,7 +133,7 @@ def test_fit_scaled_pca_equals_two_pass(spark):
     cols = ["a", "b", "c"]
     stats1 = ml.column_minmax(df, cols)
     pca1 = ml.fit_pca(ml.minmax_scale(df, cols, stats1), cols, n_components=2)
-    stats2, pca2 = ml.fit_scaled_pca(df, cols, n_components=2)
+    stats2, pca2, _ = ml.fit_scaled_pca_with_init(df, cols, n_components=2)
     assert stats1 == stats2
     np.testing.assert_allclose(pca1.mean, pca2.mean, rtol=1e-9)
     np.testing.assert_allclose(pca1.loadings, pca2.loadings, rtol=1e-7, atol=1e-10)

@@ -17,7 +17,7 @@ def _ecdf_frames(spark):
 def test_ecdf_matches_naive_and_pandas(spark):
     df = _ecdf_frames(spark).cache()
     cols = ["n_chars", "n_words", "mean_word_len"]
-    fast = normalize.ecdf(df, cols, key_col="url").toPandas().sort_values("url").reset_index(drop=True)
+    fast = normalize.ecdf(df, cols).toPandas().sort_values("url").reset_index(drop=True)
     naive = normalize.ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)
     pdf = df.toPandas().sort_values("url").reset_index(drop=True)
     for c in cols:
@@ -29,7 +29,7 @@ def test_ecdf_matches_naive_and_pandas(spark):
 def test_ecdf_properties(spark):
     """Monotone in the value, range (0, 1], max == 1 (SURVEY.md §5.2.5)."""
     df = _ecdf_frames(spark)
-    out = normalize.ecdf(df, ["n_chars"], key_col="url").toPandas().sort_values("n_chars")
+    out = normalize.ecdf(df, ["n_chars"]).toPandas().sort_values("n_chars")
     u = out["u_chars"].to_numpy()
     assert (np.diff(u) >= -1e-12).all()
     assert u.min() > 0 and abs(u.max() - 1.0) < 1e-12
@@ -37,8 +37,8 @@ def test_ecdf_properties(spark):
 
 def test_ecdf_partition_invariance(spark):
     df = _ecdf_frames(spark)
-    a = normalize.ecdf(df.repartition(1), ["n_words"], key_col="url").toPandas().set_index("url")["u_words"]
-    b = normalize.ecdf(df.repartition(16), ["n_words"], key_col="url").toPandas().set_index("url")["u_words"]
+    a = normalize.ecdf(df.repartition(1), ["n_words"]).toPandas().set_index("url")["u_words"]
+    b = normalize.ecdf(df.repartition(16), ["n_words"]).toPandas().set_index("url")["u_words"]
     assert (a.sort_index() == b.sort_index()).all()
 
 
@@ -55,43 +55,42 @@ def test_ecdf_paths_agree(spark):
     df = _ecdf_frames(spark).cache()
     cols = ["n_chars", "n_words"]
     a = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1)
+        normalize.ecdf(df, cols, low_card_threshold=1)
         .toPandas().set_index("url").sort_index()
     )
     b = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=10_000_000)
+        normalize.ecdf(df, cols, low_card_threshold=10_000_000)
         .toPandas().set_index("url").sort_index()
     )
     for c in ["u_chars", "u_words"]:
         assert (a[c] == b[c]).all(), c
 
 
-def test_ecdf_melt_path_matches_direct(spark):
-    """>3 high-card columns fall back to the melted one-shuffle-serves-
-    all path — it must agree exactly with the direct per-column window
-    path and with the pandas oracle."""
+def test_ecdf_four_high_card_columns_match_oracle(spark):
+    """Four high-cardinality columns each take their own bucketed
+    window — the result must match the pandas oracle and agree exactly
+    with a run over a three-column subset."""
     df = _ecdf_frames(spark).withColumn(
         "jitter", (F.xxhash64("url") % 100000) / 7.0
     ).cache()
     cols = ["n_chars", "n_words", "mean_word_len", "jitter"]
-    melt = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1)  # all 4 high → melt
+    four = (
+        normalize.ecdf(df, cols, low_card_threshold=1)  # all 4 high-card
         .toPandas().set_index("url").sort_index()
     )
     pdf = df.toPandas().set_index("url").sort_index()
     for c in cols:
         u = "u_" + c.removeprefix("n_")
         np.testing.assert_allclose(
-            melt[u].to_numpy(), oracle.ecdf_pd(pdf[c].to_numpy()), rtol=1e-12, err_msg=u
+            four[u].to_numpy(), oracle.ecdf_pd(pdf[c].to_numpy()), rtol=1e-12, err_msg=u
         )
-    # direct path on a 3-col subset agrees with the melt run
-    direct = (
-        normalize.ecdf(df, cols[:3], key_col="url", low_card_threshold=1)
+    three = (
+        normalize.ecdf(df, cols[:3], low_card_threshold=1)
         .toPandas().set_index("url").sort_index()
     )
     for c in cols[:3]:
         u = "u_" + c.removeprefix("n_")
-        assert (melt[u] == direct[u]).all(), u
+        assert (four[u] == three[u]).all(), u
 
 
 def test_ecdf_reprobe_path_exact(spark):
@@ -102,7 +101,7 @@ def test_ecdf_reprobe_path_exact(spark):
     df = _ecdf_frames(spark).cache()
     cols = ["n_chars", "mean_word_len"]
     fast = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1, probe_buckets=16)
+        normalize.ecdf(df, cols, low_card_threshold=1, probe_buckets=16)
         .toPandas().sort_values("url").reset_index(drop=True)
     )
     naive = normalize.ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)

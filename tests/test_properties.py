@@ -52,7 +52,7 @@ def test_ecdf_matches_numpy_oracle(vals, low_threshold):
     df = spark.createDataFrame(rows, "k long, x double")
     out = {
         r["k"]: r["u_x"]
-        for r in normalize.ecdf(df, ["x"], key_col="k", low_card_threshold=low_threshold).collect()
+        for r in normalize.ecdf(df, ["x"], low_card_threshold=low_threshold).collect()
     }
     n = len(vals)
     non_null = np.array([v for v in vals if v is not None])

@@ -40,7 +40,7 @@ def test_score_stream_matches_batch(spark, tmp_path):
     # fit constants in batch on scaled heuristic features
     feats = [c for c in CLUSTER_FEATURES if not c.startswith("u_")]
     batch = scrub(model_features(token_features(char_features(pages))))
-    stats, _ = ml.fit_scaled_pca(batch, feats, n_components=3)
+    stats, _, _ = ml.fit_scaled_pca_with_init(batch, feats, n_components=3)
     km = ml.kmeans_fit(ml.minmax_scale(batch, feats, stats), feats, k=3, key_col="url", init_sample=256)
     batch_out = {
         r["url"]: (r["cluster"], r["keep"])

@@ -461,44 +461,6 @@ def test_apply_bpe_matches_python(spark):
     }
 
 
-def test_quantile_buckets_scalable_parity(spark):
-    """r7: the range-bucketed form must assign IDENTICAL tiers to the
-    window-sort form — heavy ties, group sizes not divisible by k,
-    groups smaller than k, nulls (desc puts them last), and a
-    range_buckets small enough that buckets hold many rows each."""
-    import random
-
-    rng = random.Random(11)
-    rows = [
-        (i, ["en", "fr", "de"][i % 3], float(rng.choice([1.0, 2.0, 2.0, 3.0, rng.uniform(0, 5)])))
-        for i in range(157)
-    ]
-    rows += [(1000 + j, "tiny", float(j)) for j in range(2)]  # group smaller than k
-    rows += [(2000, "en", None), (2001, "fr", None)]  # null scores
-    df = spark.createDataFrame(rows, "doc_id long, lang string, score double")
-    for kwargs in (
-        dict(by=["lang"], n_buckets=4),
-        dict(by=["lang"], n_buckets=3, labels=["head", "middle", "tail"]),
-        dict(by=None, n_buckets=5),
-    ):
-        exp = {
-            r["doc_id"]: r["bucket"]
-            for r in textprep.quantile_buckets(df, "score", **kwargs).collect()
-        }
-        for rb in (4, 1024):
-            got = {
-                r["doc_id"]: r["bucket"]
-                for r in textprep.quantile_buckets_scalable(
-                    df, "score", range_buckets=rb, **kwargs
-                ).collect()
-            }
-            assert got == exp, f"kwargs={kwargs} range_buckets={rb}"
-        # output schema: same columns as the ntile form
-        assert set(
-            textprep.quantile_buckets_scalable(df, "score", **kwargs).columns
-        ) == set(textprep.quantile_buckets(df, "score", **kwargs).columns)
-
-
 def test_learn_bpe_incremental_path_parity(spark):
     """r7: learn_bpe dispatches between full-recount (small type
     tables) and incremental pair maintenance (large). Force the

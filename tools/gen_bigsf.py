@@ -19,6 +19,7 @@ import os
 import sys
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
@@ -56,7 +57,7 @@ def main() -> None:
                     arr = base.column(col)
                     if col in OFFSET_COLS.get(name, []) and k > 0:
                         arr = pa.chunked_array(
-                            [pa.compute.add(c, k * OFF) for c in arr.chunks]
+                            [pc.add(c, k * OFF) for c in arr.chunks]
                         )
                     elif name == "embeddings" and col == "embedding" and k > 0:
                         # deterministic per-copy direction perturbation:

@@ -329,8 +329,11 @@ def cosine_col(a, b, dim: int | None = None):
       on a pair-join hot path this costs ~16 µs per 64-dim pair.
     - ``dim=k`` (opt-in for fixed-dim corpora): the same arithmetic
       unrolled as explicit left-assoc element_at folds — whole-stage
-      codegen compiles it (measured 316 s → 90 s on a 20M-pair
-      refine, identical outputs). The fold replays the HOF order
+      codegen compiles it. Measured 316 s → 90 s in the controlled
+      A/B of the cosine alone on q32's 20.06M-pair join (the table
+      in OPTIMIZATION_r07.md), with identical outputs. That is not
+      the per-query figure: the whole q32 went 332 → 72 s in single
+      cold trials on the 10× stand-in. The fold replays the HOF order
       exactly — each accumulator starts at 0.0 and adds terms left to
       right, then dot/(sqrt(na)*sqrt(nb)) — so the doubles are
       bit-for-bit the HOF values. CONTRACT: every array must have

@@ -127,11 +127,11 @@ def cluster_hosts(hosts: DataFrame, k: int = 4, pca_components: int = 3,
     """ECDF → min-max+PCA (fused scan) → KMeans over the host table.
     Returns (clustered hosts df, feature cols, km model). Registers
     its internal persist in ``persisted`` for caller-side release."""
-    h = normalize.ecdf(hosts, HOST_ECDF_FEATURES, key_col="host", prefix="u_")
+    h = normalize.ecdf(hosts, HOST_ECDF_FEATURES, prefix="u_")
     # ecdf strips the n_ prefix (n_pages → u_pages); mean_perplexity
     # keeps its name → u_mean_perplexity
     feats = list(HOST_CLUSTER_FEATURES)
-    stats, pca = ml.fit_scaled_pca(h, feats, n_components=pca_components)
+    stats, pca, _ = ml.fit_scaled_pca_with_init(h, feats, n_components=pca_components)
     scaled = ml.minmax_scale(h, feats, stats)
     pc_cols = [f"pc_{j}" for j in range(pca.loadings.shape[1])]
     proj = ml.pca_project(scaled, pca).select("host", *feats, *pc_cols).persist()

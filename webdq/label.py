@@ -12,7 +12,7 @@ clusters are kept.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Weights over (min-max-scaled) feature columns. Positive = quality
@@ -96,14 +96,3 @@ def summarize_clusters(
         .orderBy(cluster_col)
     )
 
-
-def attach_labels(
-    spark: SparkSession, df: DataFrame, centers: np.ndarray, cols: list[str], keep_top: int = 1
-) -> DataFrame:
-    """Broadcast-join the k-row cluster→keep map onto the big table —
-    the J6 small-dimension lookup join, hinted broadcast."""
-    km = keep_map(centers, cols, keep_top)
-    dim = spark.createDataFrame(
-        [(int(j), bool(v)) for j, v in km.items()], schema="cluster int, keep boolean"
-    )
-    return df.join(F.broadcast(dim), on="cluster", how="left").na.fill({"keep": False})

@@ -108,21 +108,6 @@ def optimal_pca_components(
     return min(max(candidate, nb_min_dim), nb_max_dim)
 
 
-def fit_scaled_pca(
-    df: DataFrame,
-    cols: list[str],
-    n_components: int = 0,
-    kmin: int = 2,
-    kmax: int = 12,
-) -> tuple[dict[str, tuple[float, float]], PCAModel]:
-    """ONE aggregation computes min/max AND raw covariance; the scaled
-    covariance follows analytically (cov_z[i,j] = cov_x[i,j]/(r_i r_j),
-    mean_z = (mean−min)/r). Saves a full scan vs minmax-then-covariance
-    and keeps the min-max → PCA semantics identical (tested)."""
-    stats, model, _ = fit_scaled_pca_with_init(df, cols, n_components=n_components, kmin=kmin, kmax=kmax)
-    return stats, model
-
-
 def fit_scaled_pca_with_init(
     df: DataFrame,
     cols: list[str],
@@ -133,9 +118,15 @@ def fit_scaled_pca_with_init(
     init_sample: int = 0,
     approx_rows: int | None = None,
 ) -> tuple[dict[str, tuple[float, float]], PCAModel, np.ndarray | None]:
-    """fit_scaled_pca PLUS the downstream KMeans init sample, fused
-    into the SAME single aggregation (the driver-synchronous job count
-    is the non-scaling term — VERDICT r3).
+    """Min-max scaling + PCA fit, optionally with the downstream KMeans
+    init sample, all in ONE aggregation (the driver-synchronous job
+    count is the non-scaling term — VERDICT r3).
+
+    The aggregation computes min/max AND raw covariance; the scaled
+    covariance follows analytically (cov_z[i,j] = cov_x[i,j]/(r_i r_j),
+    mean_z = (mean−min)/r). That saves a full scan vs
+    minmax-then-covariance and keeps the min-max → PCA semantics
+    identical (tested against ``column_minmax`` + ``covariance``).
 
     When ``key_col``/``init_sample`` are given and ``approx_rows`` (an
     upstream row-count hint, e.g. the ECDF probe's exact count) dwarfs
@@ -399,14 +390,20 @@ def kmeans_fit(
     # coalesce, but its stage-by-stage materialization adds one extra
     # scheduling round-trip per iteration (measured 0.23 → 0.17 s per
     # iteration on a cached 50k-row frame; at real scale per-iteration
-    # compute dominates and the setting is neutral). Restored in
-    # ``finally`` so the session's configured behavior is untouched.
+    # compute dominates and the setting is neutral). The ``finally``
+    # restores only the keys changed here, and unsets those the caller
+    # had not set, so the session's configuration is left as it was.
     spark = df.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    shuf_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    caller_conf = spark.conf.getAll
+    changed: dict[str, str | None] = {}
+
+    def override(key: str, value: str) -> None:
+        changed.setdefault(key, caller_conf.get(key))
+        spark.conf.set(key, value)
+
     it = 0
     try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        override("spark.sql.adaptive.enabled", "false")
         # With AQE off, the loop loses AQE's reduce-side coalescing: a
         # k-row aggregate would schedule the session's FULL
         # shuffle.partitions as (empty) reduce tasks every iteration —
@@ -419,8 +416,8 @@ def kmeans_fit(
         # centers; local wall a wash).
         try:
             cap = max(16, 4 * k)
-            if int(shuf_before) > cap:
-                spark.conf.set("spark.sql.shuffle.partitions", str(cap))
+            if int(spark.conf.get("spark.sql.shuffle.partitions")) > cap:
+                override("spark.sql.shuffle.partitions", str(cap))
         except ValueError:
             pass
         for it in range(1, max_iter + 1):
@@ -441,8 +438,11 @@ def kmeans_fit(
             if shift < tol:
                 break
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_before)
+        for key, before in changed.items():
+            if before is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, before)
 
     # inertia is diagnostics (elbow sweep) — skip the extra scan unless
     # asked (the label path never needs it)

@@ -8,21 +8,29 @@ Reference semantics being preserved:
 
 Scale note (the part that matters at 10^12 rows): a naive
 ``cume_dist() OVER (ORDER BY x)`` is a single-partition global sort.
-``ecdf`` below is EXACT and parallel: a one-pass ``percentile_approx``
-sketch picks ~``n_buckets`` range-bucket boundaries per feature, rows
-get a bucket id with a pure expression, per-bucket cumulative offsets
-(≤ n_buckets × n_features rows) are computed with one tiny aggregation
-and broadcast back as a literal map, and the within-bucket "count of
-rows ≤ x" is a RANGE-frame window partitioned BY BUCKET — every
-partition sorts independently. ECDF = (offset + within) / N, an exact
-integer ratio. All features are normalized in ONE shuffle by melting
-to long format first (SURVEY.md §4 "one shuffle serves all windows").
+``ecdf`` below is EXACT and parallel. Low-cardinality columns become a
+broadcast (value → ECDF) map built from one value-count aggregation.
+For each high-cardinality column a one-pass ``percentile_approx``
+sketch picks range-bucket boundaries, rows get a bucket id with a pure
+expression, per-bucket cumulative offsets (≤ 4096 rows per column)
+come from the same fused count aggregation and are broadcast back, and
+the within-bucket "count of rows ≤ x" is a RANGE-frame window
+partitioned BY BUCKET — every partition sorts independently.
+ECDF = (offset + within) / N, an exact integer ratio.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# ecdf's percentile-sketch accuracy is 1/_REL_ERR; high-cardinality
+# columns get n_rows/_ROWS_PER_BUCKET range buckets, clamped to
+# [_MIN_BUCKETS, _MAX_BUCKETS]
+_REL_ERR = 0.01
+_MIN_BUCKETS = 64
+_MAX_BUCKETS = 4096
+_ROWS_PER_BUCKET = 1_000_000
 
 
 def ratio_normalize(df: DataFrame, cols: list[str], total_col: str, prefix: str = "r_") -> DataFrame:
@@ -49,30 +57,25 @@ def ecdf_naive(df: DataFrame, cols: list[str], prefix: str = "u_") -> DataFrame:
 def ecdf(
     df: DataFrame,
     cols: list[str],
-    key_col: str,
     prefix: str = "u_",
-    n_buckets: int = 0,
-    rel_err: float = 0.01,
     low_card_threshold: int = 65536,
     probe_buckets: int = 256,
     stats_out: dict | None = None,
-    persist_input: bool = False,
 ) -> DataFrame:
     """Exact, parallel ECDF for every column in ``cols``. Output column
     name: ``prefix + col`` (n_ stripped, matching the reference's
     n_* → u_* renaming, /root/reference/osmdq/utils.py:540-541).
 
-    Hybrid strategy:
+    Two strategies, chosen per column:
     - LOW-cardinality columns (≤ ``low_card_threshold`` distinct — int
       counts, bounded ratios): one value-count aggregation, cumulative
       sum on the driver, broadcast-joined (value → ecdf) map. Zero
       shuffles of the big table, scales linearly. At 10^12 docs a
       bounded feature like n_words stays low-cardinality forever.
-    - HIGH-cardinality columns (continuous scores): the bucketed
-      melt/window path below. ``n_buckets=0`` (default) scales the
-      bucket count with input size — max(64, n/1M), capped at 4096 —
-      so a per-(feature,bucket) window partition stays ≤ ~1M rows at
-      any input scale instead of n/64.
+    - HIGH-cardinality columns (continuous scores): the per-column
+      bucketed window below. The bucket count scales with input size —
+      max(64, n/1M), capped at 4096 — so a per-bucket window partition
+      stays ≤ ~1M rows at any input scale instead of n/64.
     Both are exact: ECDF(x) = count(X ≤ x)/N. Nulls rank lowest and
     tie (cume_dist semantics) on every path.
 
@@ -82,27 +85,15 @@ def ecdf(
     boundaries; job 2 fuses the low-card value counts AND the
     high-card per-bucket counts into one melted aggregation.
 
-    Sketch precision (``rel_err``, ``probe_buckets``) affects only
+    Sketch precision (``_REL_ERR``, ``probe_buckets``) affects only
     bucket BALANCE, never exactness — ECDF values are exact integer
     ratios on every path. The defaults keep the probe cheap (a
     256-point accuracy-100 percentile sketch; measured −25% on the
     headline ECDF query vs the old 1024/1000 probe); when the
     auto-scaled bucket count outgrows the probe grid (≳256M rows) the
-    full-resolution re-probe below restores the grid."""
-    # probe bucket count from a cheap upper bound first so the fused
-    # probe can size its percentile list; corrected below if the auto
-    # bucket count outgrows it (``probe_buckets`` is an internal knob —
-    # tests shrink it to exercise the re-probe path at small scale)
-    # ecdf makes 2-3 passes over ``df`` (probe job, fused-counts job,
-    # final plan). Callers whose input is an un-materialized scan or
-    # derivation pass ``persist_input=True`` so the passes after the
-    # first read the cache instead of recomputing (r7; measured ~25%
-    # on the headline ECDF query whose input is an unsplittable
-    # single-row-group scan). The pipeline path leaves it off — its
-    # features stage is already persisted by the StageRunner.
-    if persist_input:
-        df = df.persist()
-    probe_buckets = n_buckets if n_buckets > 0 else probe_buckets
+    full-resolution re-probe below restores the grid. ``probe_buckets``
+    is an internal knob: tests shrink it to exercise the re-probe path
+    at small scale."""
     qs = [i / probe_buckets for i in range(1, probe_buckets)]
     # cardinality rsd 0.05 (not 0.02): the estimate only picks the
     # low/high PATH per column — both paths produce exact ECDF values,
@@ -113,7 +104,7 @@ def ecdf(
     probe = df.agg(
         F.count(F.lit(1)).alias("_n"),
         *[F.approx_count_distinct(c, 0.05).alias(f"card_{c}") for c in cols],
-        *[F.percentile_approx(F.col(c), qs, int(1 / rel_err)).alias(f"pct_{c}") for c in cols],
+        *[F.percentile_approx(F.col(c), qs, int(1 / _REL_ERR)).alias(f"pct_{c}") for c in cols],
     ).collect()[0]
     n_rows = int(probe["_n"])
     if stats_out is not None:
@@ -126,8 +117,7 @@ def ecdf(
         for c in cols:
             out = out.withColumn(prefix + c.removeprefix("n_"), F.lit(None).cast("double"))
         return out
-    if n_buckets <= 0:
-        n_buckets = max(64, min(4096, n_rows // 1_000_000))
+    n_buckets = max(_MIN_BUCKETS, min(_MAX_BUCKETS, n_rows // _ROWS_PER_BUCKET))
     low = [c for c in cols if int(probe[f"card_{c}"]) <= low_card_threshold * 0.9]
     high = [c for c in cols if c not in low]
 
@@ -143,7 +133,7 @@ def ecdf(
         # (ADVICE r2).
         qs2 = [i / n_buckets for i in range(1, n_buckets)]
         probe2 = df.agg(
-            *[F.percentile_approx(F.col(c), qs2, int(1 / rel_err)).alias(f"pct_{c}") for c in high]
+            *[F.percentile_approx(F.col(c), qs2, int(1 / _REL_ERR)).alias(f"pct_{c}") for c in high]
         ).collect()[0]
         probe_vals = {c: probe2[f"pct_{c}"] for c in high}
         probe_buckets = n_buckets
@@ -161,18 +151,15 @@ def ecdf(
     # an array-filter HOF here is interpreted and re-evaluated per
     # reference). Equal values always land in the same bucket; null
     # comparisons fall through every WHEN → bucket 0 (nulls lowest).
-    def bucket_expr_on(col, bs: list[float], lo: int, hi: int):
+    def bucket_expr(col, bs: list[float], lo: int, hi: int):
         # returns #boundaries in bs[lo:hi] strictly below col, offset lo
         if lo >= hi:
             return F.lit(lo)
         mid = (lo + hi) // 2
         return (
-            F.when(col > F.lit(bs[mid]), bucket_expr_on(col, bs, mid + 1, hi))
-            .otherwise(bucket_expr_on(col, bs, lo, mid))
+            F.when(col > F.lit(bs[mid]), bucket_expr(col, bs, mid + 1, hi))
+            .otherwise(bucket_expr(col, bs, lo, mid))
         )
-
-    def bucket_expr(bs: list[float], lo: int, hi: int):
-        return bucket_expr_on(F.col("_v"), bs, lo, hi)
 
     # fused counts job: melt EVERY ecdf column once; low-card columns
     # group by raw value, high-card by bucket id. One aggregation
@@ -181,7 +168,7 @@ def ecdf(
     melted = df.select(F.expr(f"stack({len(cols)}, {stack_all}) as (_f, _v)"))
     g = F.col("_v")
     for c in high:
-        g = F.when(F.col("_f") == c, bucket_expr(bounds[c], 0, len(bounds[c])).cast("double")).otherwise(g)
+        g = F.when(F.col("_f") == c, bucket_expr(F.col("_v"), bounds[c], 0, len(bounds[c])).cast("double")).otherwise(g)
     # Driver-size bound of this collect: low-card columns contribute
     # ≤ low_card_threshold rows each, high-card ≤ n_buckets (4096 cap)
     # — worst case low_card_threshold × n_cols ≈ 65k × #features. With
@@ -198,6 +185,7 @@ def ecdf(
     for r in fused:
         by_col[r["_f"]].append((r["_g"], int(r["cnt"])))
 
+    spark = df.sparkSession
     out = df
     for c in low:
         # nulls sort FIRST (cume_dist semantics: nulls are the
@@ -209,7 +197,7 @@ def ecdf(
             acc += cnt
             if v is not None:
                 rows.append((float(v), acc / n_rows))
-        dim = df.sparkSession.createDataFrame(rows, f"`{c}` double, `{prefix + c.removeprefix('n_')}` double")
+        dim = spark.createDataFrame(rows, f"`{c}` double, `{prefix + c.removeprefix('n_')}` double")
         out = out.join(F.broadcast(dim), on=c, how="left")
         if n_null_c:
             # null inputs don't equi-join: fill their cume_dist value
@@ -217,107 +205,35 @@ def ecdf(
             out = out.withColumn(
                 u, F.when(F.col(c).isNull(), F.lit(n_null_c / n_rows)).otherwise(F.col(u))
             )
-    if not high:
-        return out
-    df_high = out
 
-    # per-(feature,bucket) cumulative offsets from the fused counts
-    per_feat: dict[str, dict[int, int]] = {}
-    n_total: dict[str, int] = {}
-    for f_name in high:
-        per_feat[f_name] = {int(gv): cnt for gv, cnt in by_col[f_name]}
-    offsets: dict[str, dict[int, int]] = {}
-    for f_name, bc in per_feat.items():
-        n_total[f_name] = sum(bc.values())
-        acc = 0
-        offsets[f_name] = {}
-        for bkt in sorted(bc):
-            offsets[f_name][bkt] = acc
-            acc += bc[bkt]
-    spark = df.sparkSession
-
-    if len(high) <= 3:
-        # DIRECT path (few continuous features — the common pipeline
-        # shape): per column, bucket-assign on the wide frame itself,
-        # broadcast-join the (bucket → offset) dim, and run ONE
-        # RANGE-frame window partitioned by bucket. The chained
-        # windows pipeline as shuffle→sort→shuffle→sort inside a
-        # single job — no melt, no pivot, no key join-back (the melt
-        # path costs 2 long-format shuffles PLUS a join that reshuffles
-        # the wide frame anyway; measured the worst scaler in r1).
-        out2 = df_high
-        for c in high:
-            u = prefix + c.removeprefix("n_")
-            bcol, ocol, ncol = f"_b_{u}", f"_below_{u}", f"_nf_{u}"
-            out2 = out2.withColumn(bcol, bucket_expr_on(F.col(c), bounds[c], 0, len(bounds[c])))
-            off_df = spark.createDataFrame(
-                [(bkt, off, n_total[c]) for bkt, off in offsets[c].items()],
-                f"`{bcol}` int, `{ocol}` long, `{ncol}` long",
-            )
-            out2 = out2.join(F.broadcast(off_df), bcol)
-            w = (
-                Window.partitionBy(bcol)
-                .orderBy(F.col(c))
-                .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            out2 = out2.withColumn(
-                u,
-                (F.col(ocol) + F.count(F.lit(1)).over(w)).cast("double") / F.col(ncol).cast("double"),
-            ).drop(bcol, ocol, ncol)
-        return out2
-
-    cols = high
-    # 2. melt to long: one row per (key, feature, value). Only the key
-    #    and the numeric columns travel through the ECDF shuffles —
-    #    callers must NOT pass wide payload columns here.
-    stack_expr = ", ".join(f"'{c}', `{c}`" for c in cols)
-    long = df.select(
-        F.col(key_col).alias("_k"),
-        F.expr(f"stack({len(cols)}, {stack_expr}) as (_f, _v)"),
-    )
-    b = F.lit(0)
-    for c in cols:
-        b = F.when(F.col("_f") == c, bucket_expr(bounds[c], 0, len(bounds[c]))).otherwise(b)
-    # No persist here: the melt + CASE tree are narrow codegen'd ops
-    # over an input the caller typically already persisted — recomputing
-    # them once is cheaper than a cache write/read of n×features rows
-    # and avoids an unbounded persist (VERDICT r1 "unbounded persists").
-    long = long.withColumn("_b", b)
-
-    # broadcast-joined offsets table (≤ n_buckets × n_features rows):
-    # a literal map column would be re-CONSTRUCTED per row (measured
-    # hot); a broadcast hash join costs one probe per row.
-    off_rows = [
-        (f_name, bkt, offsets[f_name][bkt], n_total[f_name])
-        for f_name, bc in per_feat.items()
-        for bkt in bc
-    ]
-    off_df = spark.createDataFrame(off_rows, "_f string, _b int, _below long, _nf long")
-    long = long.join(F.broadcast(off_df), ["_f", "_b"])
-
-    # 5. within-bucket count of rows with value <= current: RANGE frame
-    w = (
-        Window.partitionBy("_f", "_b")
-        .orderBy(F.col("_v"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    long = long.withColumn(
-        "_ecdf",
-        (F.col("_below") + F.count(F.lit(1)).over(w)).cast("double") / F.col("_nf").cast("double"),
-    )
-
-    # 6. pivot back to wide and join on the key (both sides already
-    #    hash-partitioned by _k/key after the pivot shuffle)
-    wide = (
-        long.groupBy("_k")
-        .pivot("_f", cols)
-        .agg(F.first("_ecdf"))
-        .select(
-            F.col("_k"),
-            *[F.col(c).alias(prefix + c.removeprefix("n_")) for c in cols],
+    # Per column: bucket-assign on the wide frame itself,
+    # broadcast-join the (bucket → cumulative offset) dim, and run ONE
+    # RANGE-frame window partitioned by bucket, so every bucket sorts
+    # independently. The chained windows pipeline as
+    # shuffle→sort→shuffle→sort inside a single job.
+    for c in high:
+        bucket_counts = {int(gv): cnt for gv, cnt in by_col[c]}
+        n_total = sum(bucket_counts.values())
+        off_rows, acc = [], 0
+        for bkt in sorted(bucket_counts):
+            off_rows.append((bkt, acc, n_total))
+            acc += bucket_counts[bkt]
+        u = prefix + c.removeprefix("n_")
+        bcol, ocol, ncol = f"_b_{u}", f"_below_{u}", f"_nf_{u}"
+        out = out.withColumn(bcol, bucket_expr(F.col(c), bounds[c], 0, len(bounds[c])))
+        off_df = spark.createDataFrame(off_rows, f"`{bcol}` int, `{ocol}` long, `{ncol}` long")
+        out = out.join(F.broadcast(off_df), bcol)
+        w = (
+            Window.partitionBy(bcol)
+            .orderBy(F.col(c))
+            .rangeBetween(Window.unboundedPreceding, Window.currentRow)
         )
-    )
-    return df_high.join(wide, on=df_high[key_col] == wide["_k"], how="inner").drop("_k")
+        out = out.withColumn(
+            u,
+            (F.col(ocol) + F.count(F.lit(1)).over(w)).cast("double") / F.col(ncol).cast("double"),
+        ).drop(bcol, ocol, ncol)
+    return out
+
 
 def winsorize(
     df: DataFrame,

@@ -156,14 +156,12 @@ def extract_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def normalize_features(df: DataFrame, cfg: PipelineConfig, stats_out: dict | None = None) -> DataFrame:
-    # Numeric-only projection BEFORE the ECDF shuffles: the text and
-    # scrubbed_text payloads must not travel through the melt / window
-    # / pivot / join (they are ~50× the numeric width); scrubbed_text
-    # is joined back once at label emission.
+    # Numeric-only projection BEFORE the ECDF: the text and
+    # scrubbed_text payloads must not travel through its broadcast
+    # joins and per-bucket window shuffles (they are ~50× the numeric
+    # width); scrubbed_text is joined back once at label emission.
     numeric = [c for c in df.columns if c not in ("text", "scrubbed_text", "lang", "warc_ts", "html")]
-    df = normalize.ecdf(
-        df.select(*numeric), ECDF_FEATURES, key_col="url", prefix="u_", stats_out=stats_out
-    )
+    df = normalize.ecdf(df.select(*numeric), ECDF_FEATURES, prefix="u_", stats_out=stats_out)
     # reference naming: u_chars not u_n_chars (utils.py:540-541 strips n_)
     return df
 

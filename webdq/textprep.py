@@ -459,11 +459,9 @@ def quantile_buckets(
     bucketing — the q87 6dp contract — or last-ulp differences can
     reorder near-equal neighbors).
 
-    Scale note: one window sort per group — languages are few and the
-    sort is the point (exact equal-count tiers). At 10^12 docs use
-    ``quantile_buckets_scalable`` (r7): identical output, with the
-    per-group sort replaced by range-bucketed exact ranks so no task
-    ever sorts a whole group."""
+    Scale note: one window sort per group, so each language group is
+    sorted on one task. Languages are few and the sort is the point
+    (exact equal-count tiers)."""
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
     if labels is not None and len(labels) != n_buckets:
@@ -480,104 +478,6 @@ def quantile_buckets(
         lab = F.when(cond, name) if lab is None else lab.when(cond, name)
     lab = lab.otherwise(labels[-1]) if lab is not None else F.lit(labels[-1])
     return df.withColumn(bucket_col, lab)
-
-
-def quantile_buckets_scalable(
-    df: DataFrame,
-    value_col: str,
-    by: list[str] | None = None,
-    n_buckets: int = 3,
-    labels: list[str] | None = None,
-    id_col: str = "doc_id",
-    bucket_col: str = "bucket",
-    range_buckets: int = 1024,
-) -> DataFrame:
-    """``quantile_buckets`` without the per-group data-sized sort —
-    OUTPUT-IDENTICAL tier assignment (r7, promoting the scale note
-    into code; VERDICT r6 #3 asked for an approximate ecdf-threshold
-    variant, this one is exact):
-
-    - range-bucket each group's values with an affine map over a
-      per-group (min, max, count) broadcast (the ``select_by_budget``
-      / ``pr_curve`` pattern) — equal values always share a bucket,
-      so the (value desc, md5(id), id) tie-break order restricted to
-      a bucket is the global order restricted to it;
-    - per-(group, range-bucket) counts → exclusive above-offsets via
-      a window over ≤ ``range_buckets`` rows PER GROUP (partition-
-      parallel across groups; with ``by=[]`` this one window is a
-      single partition of ≤ range_buckets parameter-bounded rows);
-    - exact global rank = offset + within-bucket row_number (window
-      partitioned by (group, range-bucket));
-    - ntile's exact tier arithmetic from (rank, group count): the
-      first n mod k tiles take ceil(n/k) rows, the rest floor(n/k).
-
-    At 10^12 docs the English partition of the CCNet split is ~half
-    the corpus: ``quantile_buckets`` sorts it on one task, this form
-    sorts each of ~range_buckets slices of it independently. Size
-    ``range_buckets`` so a slice fits a task."""
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    if labels is not None and len(labels) != n_buckets:
-        raise ValueError(f"labels must have {n_buckets} entries, got {len(labels)}")
-    by = list(by or [])
-    v = F.col(value_col).cast("double")
-    stats = df.groupBy(*by).agg(
-        F.min(v).alias("_lo"), F.max(v).alias("_hi"), F.count(F.lit(1)).alias("_gn")
-    )
-    d = (
-        df.join(F.broadcast(stats), by)
-        if by
-        else df.crossJoin(F.broadcast(stats))
-    )
-    # descending-value rank order → ascending bucket id; nulls sort
-    # LAST under desc (Spark default), so they take the sentinel
-    # bucket past every non-null one
-    rb = int(range_buckets)
-    b = (
-        F.when(v.isNull(), F.lit(rb))
-        .when(F.col("_hi") == F.col("_lo"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(rb - 1),
-                F.floor((F.col("_hi") - v) / (F.col("_hi") - F.col("_lo")) * rb),
-            )
-        )
-    )
-    d = d.withColumn("_rb", b)
-    wa = (
-        Window.partitionBy(*by)
-        .orderBy("_rb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = (
-        d.groupBy(*by, "_rb")
-        .agg(F.count(F.lit(1)).alias("_bc"))
-        .select(*by, "_rb", F.coalesce(F.sum("_bc").over(wa), F.lit(0)).alias("_above"))
-    )
-    wi = Window.partitionBy(*by, "_rb").orderBy(
-        F.desc(value_col), F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
-    joined = d.join(F.broadcast(offs), by + ["_rb"])
-    rank = F.col("_above") + F.row_number().over(wi)
-    # ntile(k) over n rows: q = n div k, r = n mod k; tiles 1..r hold
-    # q+1 rows, tiles r+1..k hold q — the exact SQL-standard split
-    q = F.floor(F.col("_gn") / n_buckets)
-    r = F.col("_gn") % n_buckets
-    big = r * (q + 1)
-    tile = (
-        F.when(rank <= big, F.ceil(rank / (q + 1)))
-        .otherwise(r + F.ceil((rank - big) / F.greatest(q, F.lit(1))))
-        .cast("int")
-    )
-    if labels is None:
-        out_col = tile
-    else:
-        lab = None
-        for i, name in enumerate(labels[:-1]):
-            cond = tile == (i + 1)
-            lab = F.when(cond, name) if lab is None else lab.when(cond, name)
-        out_col = lab.otherwise(labels[-1]) if lab is not None else F.lit(labels[-1])
-    return joined.withColumn(bucket_col, out_col).drop("_rb", "_lo", "_hi", "_gn", "_above")
 
 
 def _bpe_merge_fold(arr_col, a: str, b: str):

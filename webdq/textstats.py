@@ -29,12 +29,6 @@ _IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PATTERNS = {"email": _EMAIL, "phone": _PHONE, "ipv4": _IPV4}
 
 
-def words_col(text: Column) -> Column:
-    """Whitespace tokens; empty array for empty/null text."""
-    t = F.trim(F.coalesce(text, F.lit("")))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
-
-
 def _safe_div(num: Column, den: Column) -> Column:
     return F.when(den > 0, num.cast("double") / den.cast("double")).otherwise(F.lit(0.0))
 
@@ -44,31 +38,6 @@ def _char_class_ratio(text: Column, pattern: str) -> Column:
     n = F.length(F.coalesce(text, F.lit("")))
     kept = F.length(F.regexp_replace(F.coalesce(text, F.lit("")), pattern, ""))
     return _safe_div(n - kept, n)
-
-
-def word_ngrams(words: Column, n: int) -> Column:
-    """Word n-grams as strings (space-joined); empty array if too short."""
-    cnt = F.size(words)
-    return F.when(cnt < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), cnt - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        )
-    )
-
-
-def word_ngram_hashes(words: Column, n: int) -> Column:
-    """Word n-grams as xxhash64 of the n-tuple — semantically equal to
-    distinct-counting string n-grams (words are whitespace tokens, so
-    the tuple is unambiguous) but ~5× cheaper: O(1) element_at lookups
-    + one hash per position instead of slice+concat allocations."""
-    cnt = F.size(words)
-    return F.when(cnt < n, F.array().cast("array<long>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), cnt - (n - 1)),
-            lambda i: F.xxhash64(*[F.element_at(words, i + j) for j in range(n)]),
-        )
-    )
 
 
 def char_features(df: DataFrame, text_col: str = "text") -> DataFrame:
