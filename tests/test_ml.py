@@ -148,27 +148,6 @@ def test_auto_kmeans_elbow_recovers_k(spark):
     assert models[3].inertia == models[3].inertia  # not NaN
 
 
-def test_init_sample_prefilter_parity(spark):
-    """The hash-range pre-filtered init sample must be bitwise
-    identical to the full-scan TopK sample (the filter only prunes
-    rows that cannot be in the TopK), including when n_rows is a loose
-    over-estimate; an absurd under-estimate trips the shortfall
-    fallback and still agrees."""
-    df = spark.range(0, 5000, 1, 8).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        (F.col("id") % 97).cast("double").alias("x"),
-        (F.col("id") % 31).cast("double").alias("y"),
-    )
-    base = ml.init_sample_matrix(df, ["x", "y"], "url", 64)
-    pre = ml.init_sample_matrix(df, ["x", "y"], "url", 64, n_rows=5000)
-    np.testing.assert_array_equal(base, pre)
-    loose = ml.init_sample_matrix(df, ["x", "y"], "url", 64, n_rows=50_000)
-    np.testing.assert_array_equal(base, loose)
-    # n_rows wildly too large -> cutoff below every hash -> fallback
-    tiny_frac = ml.init_sample_matrix(df, ["x", "y"], "url", 64, n_rows=10**12)
-    np.testing.assert_array_equal(base, tiny_frac)
-
-
 def test_fused_init_sample_bitwise_parity(spark):
     """fit_scaled_pca_with_init's fused sample (collected during the
     PCA scan, projected to PC space on the driver) must be BITWISE
@@ -217,8 +196,8 @@ def test_pipeline_fused_sample_same_kmeans(spark):
     nstats: dict = {}
     norm = P.normalize_features(feats, cfg, nstats).persist()
     assert nstats["n_rows"] == 1500
-    out_hint, _, _, _, km_hint = P.cluster_documents(norm, cfg, approx_rows=nstats["n_rows"])
-    out_base, _, _, _, km_base = P.cluster_documents(norm, cfg, approx_rows=None)
+    out_hint, km_hint = P.cluster_documents(norm, cfg, approx_rows=nstats["n_rows"])
+    out_base, km_base = P.cluster_documents(norm, cfg, approx_rows=None)
     np.testing.assert_array_equal(km_hint.centers, km_base.centers)
     a = {r["url"]: r["cluster"] for r in out_hint.select("url", "cluster").collect()}
     b = {r["url"]: r["cluster"] for r in out_base.select("url", "cluster").collect()}

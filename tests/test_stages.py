@@ -1,0 +1,58 @@
+"""Stage lifecycle shared by the page and host pipelines
+(pipeline.StageRunner): crash-window resume and cache release."""
+
+import json
+import os
+import shutil
+
+from webdq import hostagg
+from webdq.pipeline import PipelineConfig, run_pipeline
+from webdq.synth import generate_pages
+
+
+def test_lineage_crash_window_recomputes_stage(tmp_path, spark):
+    """A stage whose table is on disk but whose lineage is not (a crash
+    between the two writes) is not done: the resume run recomputes it
+    from the checkpointed upstream stages, with lineage this time."""
+    pages = generate_pages(spark, 400).drop("_tier")
+    wd = str(tmp_path / "run")
+    cfg = PipelineConfig(k=5, kmeans_init_sample=256, workdir=wd)
+    first = run_pipeline(spark, pages, cfg).toPandas().set_index("url").sort_index()
+
+    shutil.rmtree(os.path.join(wd, "_lineage", "stage=labels"))
+    second = run_pipeline(spark, pages.limit(0), cfg).toPandas().set_index("url").sort_index()
+    with open(os.path.join(wd, "metrics.json")) as f:
+        m = {r["stage"]: r for r in json.load(f)}
+    assert m["features"].get("skipped") and m["normalized"].get("skipped")
+    assert not m["labels"].get("skipped") and m["labels"]["rows_out"] == 400
+    assert first.equals(second)
+
+    lineage = spark.read.parquet(os.path.join(wd, "_lineage")).toPandas()
+    rows = lineage.groupby("stage")["rows"].sum().to_dict()
+    assert rows == {"features": 400, "normalized": 400, "labels": 400}
+
+
+def test_runs_release_every_cache_but_the_result(tmp_path, spark):
+    """Checkpoint mode leaves no frame cached; memory mode leaves only
+    the returned one — for both pipelines."""
+    jsc = spark.sparkContext._jsc
+    pages = generate_pages(spark, 400, tier_by_host=True).drop("_tier")
+
+    def page(workdir):
+        cfg = PipelineConfig(k=4, kmeans_init_sample=256, workdir=workdir)
+        return run_pipeline(spark, pages, cfg)
+
+    def host(workdir):
+        return hostagg.run_host_pipeline(spark, pages, k=3, keep_top=1, workdir=workdir)
+
+    for name, run in (("page", page), ("host", host)):
+        before = jsc.getPersistentRDDs().size()
+        out = run(str(tmp_path / name))
+        assert jsc.getPersistentRDDs().size() == before, name
+        assert not out.is_cached, name
+
+        before = jsc.getPersistentRDDs().size()
+        out = run(None)
+        assert jsc.getPersistentRDDs().size() == before + 1, name
+        assert out.is_cached, name
+        out.unpersist()

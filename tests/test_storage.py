@@ -60,3 +60,18 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS wdq_bucket_a")
         spark.sql("DROP TABLE IF EXISTS wdq_bucket_b")
+
+
+def test_spread_scan_sizes_percent_encoded_path(spark, tmp_path):
+    """The bytes cap sizes the input through the Hadoop FileSystem:
+    ``inputFiles`` returns percent-encoded URIs (a space becomes %20),
+    so a directory name with a space must still be sized and a small
+    single-file input must keep its one scan partition."""
+    path = str(tmp_path / "dir with space" / "t.parquet")
+    spark.range(0, 20_000, 1, 1).select(F.sha2(F.col("id").cast("string"), 256).alias("s")).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    assert storage.spread_scan(df, min_split_bytes=10 * 1024 * 1024).rdd.getNumPartitions() == 1
+    # the size read is real: a 1-byte cap spreads to full width
+    full = spark.sparkContext.defaultParallelism
+    assert storage.spread_scan(df, min_split_bytes=1).rdd.getNumPartitions() == full

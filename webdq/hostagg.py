@@ -10,13 +10,16 @@ and labels each record by its contributor's cluster:
   /root/reference/article/article7_OSM-data-quality-assessment.org:118-130
 
 Web analog re-expressed Spark-first: per-HOST metadata (one groupBy of
-the per-page feature frame), host-level ECDF + min-max + PCA + KMeans
-(hosts are a tiny fraction of pages — the model fit is cheap), then a
+the per-page feature frame), a host-level ECDF, then the page
+pipeline's own clustering core (pipeline.cluster_documents: min-max +
+PCA + KMeans, keyed by host over HOST_CLUSTER_FEATURES — hosts are a
+tiny fraction of pages, so the model fit is cheap), then a
 host→(cluster, keep) join back onto pages: broadcast (map-side, no
 page shuffle) while the host count stays under a guard threshold,
 plain shuffle join above it — a multi-GB broadcast is NOT comfortable
 (Spark's broadcast hard limit is 8 GB and executor memory suffers far
-earlier), so the guard keeps the map-side fast path honest.
+earlier), so the guard keeps the map-side fast path honest. Stages,
+resume and cache release go through the page pipeline's StageRunner.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import label as label_mod
-from . import ml, normalize
+from . import normalize
 
 # Host-level aggregate features (the utils.py:422-463 analog: volume,
 # temporal extent, and quality-mix statistics per entity).
@@ -121,37 +124,6 @@ def host_metadata(feats_df: DataFrame) -> DataFrame:
     )
 
 
-def cluster_hosts(hosts: DataFrame, k: int = 4, pca_components: int = 3,
-                  init_sample: int = 2048, max_iter: int = 25, seed: int = 42,
-                  persisted: list | None = None):
-    """ECDF → min-max+PCA (fused scan) → KMeans over the host table.
-    Returns (clustered hosts df, feature cols, km model). Registers
-    its internal persist in ``persisted`` for caller-side release."""
-    h = normalize.ecdf(hosts, HOST_ECDF_FEATURES, prefix="u_")
-    # ecdf strips the n_ prefix (n_pages → u_pages); mean_perplexity
-    # keeps its name → u_mean_perplexity
-    feats = list(HOST_CLUSTER_FEATURES)
-    stats, pca, _ = ml.fit_scaled_pca_with_init(h, feats, n_components=pca_components)
-    scaled = ml.minmax_scale(h, feats, stats)
-    pc_cols = [f"pc_{j}" for j in range(pca.loadings.shape[1])]
-    proj = ml.pca_project(scaled, pca).select("host", *feats, *pc_cols).persist()
-    if persisted is not None:
-        persisted.append(proj)
-    km = ml.kmeans_fit(proj, pc_cols, k=k, key_col="host", max_iter=max_iter,
-                       init_sample=init_sample, seed=seed, n_rows=pca.n_rows)
-    out = ml.kmeans_assign(proj, pc_cols, km.centers, out="host_cluster")
-    return out, feats, km
-
-
-def host_keep_dim(spark: SparkSession, clustered_hosts: DataFrame, feats: list[str], keep_top: int = 1) -> DataFrame:
-    """cluster → keep verdict from mean scaled host features (the same
-    centroid-composite rule as the page pipeline, host weights) — a
-    pure plan, no driver collect."""
-    return label_mod.keep_dim_plan(
-        clustered_hosts, feats, keep_top, cluster_col="host_cluster", weights=HOST_QUALITY_WEIGHTS
-    )
-
-
 def run_host_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -178,40 +150,38 @@ def run_host_pipeline(
 
     ``workdir`` enables the same Luigi-style resumable parquet stages
     (+ per-partition lineage and metrics) as the page pipeline."""
-    from .pipeline import PipelineConfig, StageRunner, extract_features
+    from .pipeline import PipelineConfig, StageRunner, cluster_documents, extract_features
 
-    runner = StageRunner(spark, workdir)
-    if runner.exists("host_labels"):
-        runner.metrics.append({"stage": "host_labels", "skipped": True})
-        runner.flush_metrics()
-        return spark.read.parquet(runner._path("host_labels"))
-
-    feats_df = runner.run("host_features", lambda: extract_features(pages, PipelineConfig(seed=seed)))
-    hosts = runner.run("host_metadata", lambda: host_metadata(feats_df))
-    clustered_hosts, feats, _ = cluster_hosts(
-        hosts, k=k, pca_components=pca_components, init_sample=init_sample, seed=seed,
-        persisted=runner._persisted,
+    # auto-PCA (pca_components=0) clamps to [2, 12] components on hosts
+    cfg = PipelineConfig(
+        workdir=workdir, k=k, pca_components=pca_components, pca_kmin=2, pca_kmax=12,
+        kmeans_init_sample=init_sample, seed=seed,
     )
-    dim = host_keep_dim(spark, clustered_hosts, feats, keep_top)
-    host_dim = clustered_hosts.select("host", "host_cluster").join(F.broadcast(dim), "host_cluster")
-    n_hosts = clustered_hosts.count()
+    runner = StageRunner(spark, workdir)
+    done = runner.resume("host_features", "host_metadata", "host_labels")
+    if done is not None:
+        return done
+
+    feats_df = runner.run("host_features", lambda: extract_features(pages, cfg))
+    hosts = runner.run("host_metadata", lambda: host_metadata(feats_df))
+    # ecdf strips the n_ prefix (n_pages → u_pages); mean_perplexity
+    # keeps its name → u_mean_perplexity. Its probe's exact host count
+    # lets the PCA scan fuse the KMeans init sample, as for pages.
+    nstats: dict = {}
+    h = normalize.ecdf(hosts, HOST_ECDF_FEATURES, prefix="u_", stats_out=nstats)
+    clustered, _ = cluster_documents(
+        h, cfg, HOST_CLUSTER_FEATURES, "host", persisted=runner.persisted, approx_rows=nstats["n_rows"]
+    )
+    # same centroid-composite keep rule as the page pipeline, host weights
+    dim = label_mod.keep_dim_plan(clustered, HOST_CLUSTER_FEATURES, keep_top, weights=HOST_QUALITY_WEIGHTS)
+    host_dim = clustered.select("host", "cluster").join(F.broadcast(dim), "cluster")
+    n_hosts = clustered.count()
     if n_hosts <= broadcast_hosts_threshold:
         host_dim = F.broadcast(host_dim)
     out = (
         feats_df.select("url", host_col().alias("host"))
         .join(host_dim, "host", "left")
         .na.fill({"keep": False})
-        .select("url", "host", "host_cluster", "keep")
+        .select("url", "host", F.col("cluster").alias("host_cluster"), "keep")
     )
-    out = runner.run("host_labels", lambda: out)
-    if not workdir:
-        out.count()  # materialize before releasing upstream caches
-    # run_pipeline discipline: at most one persisted frame survives —
-    # the returned one (in workdir mode `out` is a parquet read and
-    # everything can be released)
-    for df_ in runner._persisted:
-        if df_ is not out:
-            df_.unpersist()
-    runner._persisted = [out] if not workdir else []
-    runner.flush_metrics()
-    return out
+    return runner.finish(runner.run("host_labels", lambda: out))

@@ -82,9 +82,6 @@ class PCAModel:
     mean: np.ndarray  # (d,)
     loadings: np.ndarray  # (d, k), sign-normalized
     eigvals: np.ndarray  # (d,) all of them, descending
-    # input row count from the fit scan — free metadata that lets
-    # downstream kmeans pre-filter its init TopK (no extra count job)
-    n_rows: int = 0
 
 
 def pca_variance(eigvals: np.ndarray) -> dict[str, np.ndarray]:
@@ -189,7 +186,7 @@ def fit_scaled_pca_with_init(
         if L[i, j] < 0:
             L[:, j] = -L[:, j]
     stats = {c: (float(mn[i]), float(mx[i])) for i, c in enumerate(cols)}
-    model = PCAModel(cols=list(cols), mean=mean_z, loadings=L, eigvals=w, n_rows=n)
+    model = PCAModel(cols=list(cols), mean=mean_z, loadings=L, eigvals=w)
 
     X_pc: np.ndarray | None = None
     if fuse_sample:
@@ -233,7 +230,7 @@ def fit_pca(df: DataFrame, cols: list[str], n_components: int = 0, kmin: int = 2
     """Eigendecomposition of the feature covariance. n_components=0 →
     automatic selection (the reference's AutoPCA,
     /root/reference/osmdq/analysis_tasks.py:564-635)."""
-    mean, cov, n = covariance(df, cols)
+    mean, cov, _ = covariance(df, cols)
     w, v = np.linalg.eigh(cov)  # ascending
     order = np.argsort(w)[::-1]
     w, v = w[order], v[:, order]
@@ -246,7 +243,7 @@ def fit_pca(df: DataFrame, cols: list[str], n_components: int = 0, kmin: int = 2
         i = int(np.argmax(np.abs(L[:, j])))
         if L[i, j] < 0:
             L[:, j] = -L[:, j]
-    return PCAModel(cols=list(cols), mean=mean, loadings=L, eigvals=w, n_rows=n)
+    return PCAModel(cols=list(cols), mean=mean, loadings=L, eigvals=w)
 
 
 def pca_project(df: DataFrame, model: PCAModel, prefix: str = "pc_") -> DataFrame:
@@ -314,35 +311,17 @@ class KMeansModel:
     iterations: int
 
 
-def init_sample_matrix(
-    df: DataFrame, cols: list[str], key_col: str, init_sample: int, n_rows: int | None = None
-) -> np.ndarray:
+def init_sample_matrix(df: DataFrame, cols: list[str], key_col: str, init_sample: int) -> np.ndarray:
     """The ``init_sample`` rows with smallest xxhash64(key) — a
     deterministic, order/partition-independent pseudo-random sample
-    (distributed TopK, no global sort).
-
-    When ``n_rows`` (the input count, free metadata from the PCA fit
-    scan) is known and dwarfs the sample, a hash-range PRE-FILTER
-    shrinks the TopK input by orders of magnitude: keep only rows with
-    hash below a cutoff sized for ~4× init_sample expected survivors,
-    then run the same orderBy/limit. If ≥ init_sample rows survive,
-    the filtered TopK IS the global TopK (all init_sample globally
-    smallest hashes lie below the cutoff) — bitwise parity guaranteed;
-    on the Chernoff-unlikely shortfall, fall back to the full scan."""
-    base = df.select(F.xxhash64(F.col(key_col)).alias("_h"), *cols)
-
-    def take(src) -> list:
-        return src.orderBy("_h").limit(init_sample).drop("_h").collect()
-
-    samp: list | None = None
-    if n_rows and n_rows > 8 * init_sample:
-        frac = 4.0 * init_sample / n_rows
-        cut = int(-(2**63) + frac * 2.0**64)
-        samp = take(base.filter(F.col("_h") < F.lit(cut)))
-        if len(samp) < init_sample:
-            samp = None  # shortfall: cutoff excluded part of the true TopK
-    if samp is None:
-        samp = take(base)
+    (distributed TopK, no global sort)."""
+    samp = (
+        df.select(F.xxhash64(F.col(key_col)).alias("_h"), *cols)
+        .orderBy("_h")
+        .limit(init_sample)
+        .drop("_h")
+        .collect()
+    )
     return np.array([[float(r[c]) for c in cols] for r in samp])
 
 
@@ -358,7 +337,6 @@ def kmeans_fit(
     seed: int = 42,
     compute_inertia: bool = False,
     sample_X: np.ndarray | None = None,
-    n_rows: int | None = None,
 ) -> KMeansModel:
     """Deterministic distributed KMeans.
 
@@ -372,10 +350,9 @@ def kmeans_fit(
        aggregation producing k×(d+1) partial sums.
 
     ``sample_X`` short-circuits step 1 so a k-sweep (auto_kmeans)
-    pays the distributed TopK once, not once per k. ``n_rows`` (when
-    known) enables the hash-range pre-filter in init_sample_matrix.
+    pays the distributed TopK once, not once per k.
     """
-    X = sample_X if sample_X is not None else init_sample_matrix(df, cols, key_col, init_sample, n_rows)
+    X = sample_X if sample_X is not None else init_sample_matrix(df, cols, key_col, init_sample)
     best, best_cost = None, math.inf
     for t in range(n_init):
         c0 = _kmeanspp_init(X, k, seed + t)
@@ -479,7 +456,6 @@ def auto_kmeans(
     key_col: str,
     nbmin_clusters: int = 3,
     nbmax_clusters: int = 8,
-    n_rows: int | None = None,
     sample_X: np.ndarray | None = None,
     **fit_kw,
 ) -> tuple[int, dict[int, "KMeansModel"]]:
@@ -492,7 +468,7 @@ def auto_kmeans(
     the caller passes ``sample_X`` from the fused PCA scan); inertia is
     one aggregation per k."""
     X = sample_X if sample_X is not None else init_sample_matrix(
-        df, cols, key_col, int(fit_kw.get("init_sample", 4096)), n_rows
+        df, cols, key_col, int(fit_kw.get("init_sample", 4096))
     )
     models: dict[int, KMeansModel] = {}
     for k in range(nbmin_clusters - 1, nbmax_clusters + 2):

@@ -5,14 +5,14 @@ output file exists is skipped (/root/reference/osmdq/analysis_tasks.py:36-43
 idiom, every task). Re-expressed here: every stage optionally writes a
 parquet stage table under ``workdir``; on re-run a stage whose output
 exists is READ instead of recomputed — same resume semantics, no Luigi.
-Each checkpointed stage also appends per-partition lineage rows and a
+Each checkpointed stage also writes its per-partition lineage rows and a
 metrics row (north rule: "resumable from checkpoint with per-partition
 lineage + metrics").
 
 Stage graph (reference pipeline traced in SURVEY.md §3.1):
     pages
       → features     (heuristics: pure exprs; langid/perplexity: Arrow UDFs;
-                      scrubbed_text; salted repartition first — host skew)
+                      scrubbed_text)
       → normalized   (ECDF u_* + ratio features; bucketed-parallel exact ECDF)
       → clustered    (min-max scale → covariance/eig PCA → KMeans → cluster)
       → labels       (broadcast cluster→keep join + url, scrubbed_text)
@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,28 +64,47 @@ class PipelineConfig:
     pca_kmin: int = 3  # reference clamps auto-k to [3, 12] (BASELINE.md)
     pca_kmax: int = 8
     keep_top: int = 1
-    salt_partitions: int | None = None  # None → leave to AQE
     kmeans_max_iter: int = 25
     kmeans_init_sample: int = 4096
     seed: int = 42
-    extra: dict = field(default_factory=dict)
 
 
 class StageRunner:
-    """Luigi-style stage memoization + lineage/metrics bookkeeping."""
+    """Luigi-style stage memoization + lineage/metrics bookkeeping, and
+    the cache lifecycle of one run: every frame the run caches is
+    registered in ``persisted`` and ``finish`` releases all but the
+    returned one."""
 
     def __init__(self, spark: SparkSession, workdir: str | None):
         self.spark = spark
         self.workdir = workdir
         self.metrics: list[dict] = []
-        self._persisted: list[DataFrame] = []
+        self.persisted: list[DataFrame] = []
 
     def _path(self, name: str) -> str:
         assert self.workdir
         return os.path.join(self.workdir, name)
 
+    def _lineage_path(self, name: str) -> str:
+        return self._path(os.path.join("_lineage", f"stage={name}"))
+
     def exists(self, name: str) -> bool:
-        return bool(self.workdir) and os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
+        """A stage is done only once BOTH its table and its lineage are
+        on disk: a crash between the two writes re-runs the stage."""
+        return bool(self.workdir) and all(
+            os.path.exists(os.path.join(p, "_SUCCESS")) for p in (self._path(name), self._lineage_path(name))
+        )
+
+    def resume(self, *stages: str) -> DataFrame | None:
+        """Luigi-style resume over ``stages`` (run order, terminal
+        last): if the terminal stage is on disk nothing runs — every
+        stage found on disk is recorded as skipped and the terminal
+        table is returned. None when the run must execute."""
+        if not self.exists(stages[-1]):
+            return None
+        self.metrics += [{"stage": s, "skipped": True} for s in stages if self.exists(s)]
+        self.flush_metrics()
+        return self.spark.read.parquet(self._path(stages[-1]))
 
     def run(self, name: str, build) -> DataFrame:
         """Return the stage DataFrame; if checkpointing is on, write it
@@ -96,7 +115,7 @@ class StageRunner:
             # this frame; without a materialization every iteration would
             # re-run the whole upstream DAG including the Arrow UDFs.
             df = build().persist()
-            self._persisted.append(df)
+            self.persisted.append(df)
             return df
         if self.exists(name):
             self.metrics.append({"stage": name, "skipped": True})
@@ -105,14 +124,11 @@ class StageRunner:
         df = build()
         df.write.mode("overwrite").parquet(self._path(name))
         out = self.spark.read.parquet(self._path(name))
-        # per-partition lineage: rows per output partition
-        lin = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(name))
-            .select("stage", "partition_id", "rows")
-        )
-        lin.write.mode("append").parquet(os.path.join(self.workdir, "_lineage"))
+        # per-partition lineage: rows per output partition, one
+        # overwritten directory per stage (a re-run replaces, never
+        # duplicates; ``_lineage`` reads back with a ``stage`` column)
+        lin = out.groupBy(F.spark_partition_id().alias("partition_id")).agg(F.count(F.lit(1)).alias("rows"))
+        lin.write.mode("overwrite").parquet(self._lineage_path(name))
         parts = lin.agg(
             F.count(F.lit(1)).alias("np"),
             F.sum("rows").alias("rows"),
@@ -129,6 +145,20 @@ class StageRunner:
         )
         return out
 
+    def finish(self, out: DataFrame) -> DataFrame:
+        """Materialize the run's result, release every other frame the
+        run cached, flush the metrics: a long-lived session driving many
+        pipelines must not accrue executor memory (VERDICT r1 item 3).
+        Only a memory-mode ``out`` (persisted by ``run``) stays cached."""
+        if not self.workdir:
+            out.count()
+        for df in self.persisted:
+            if df is not out:
+                df.unpersist()
+        self.persisted = [df for df in self.persisted if df is out]
+        self.flush_metrics()
+        return out
+
     def flush_metrics(self) -> None:
         if not self.workdir or not self.metrics:
             return
@@ -137,12 +167,7 @@ class StageRunner:
 
 
 def extract_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """pages → per-document features + scrubbed text. The salted
-    repartition by url-hash breaks host-level input skew BEFORE the
-    Arrow-UDF stage (north rule; hosts on a web corpus are
-    heavy-tailed, xxhash64(url) is uniform)."""
-    if cfg.salt_partitions:
-        df = df.repartition(cfg.salt_partitions, F.xxhash64("url", F.lit(cfg.seed)))
+    """pages → per-document features + scrubbed text."""
     df = textstats.char_features(df)
     df = scorers.all_scorer_features(df)  # one fused ArrowEvalPython
     df = scrub(df)
@@ -167,19 +192,24 @@ def normalize_features(df: DataFrame, cfg: PipelineConfig, stats_out: dict | Non
 
 
 def cluster_documents(
-    df: DataFrame, cfg: PipelineConfig, persisted: list | None = None, approx_rows: int | None = None
+    df: DataFrame, cfg: PipelineConfig, feats: list[str] = CLUSTER_FEATURES, key_col: str = "url",
+    persisted: list | None = None, approx_rows: int | None = None,
 ):
-    """min-max → PCA (auto-k) → KMeans. Returns (clustered df, models).
+    """min-max → PCA (auto-k) → KMeans over the ``feats`` columns of an
+    entity table keyed by ``key_col`` — pages here, hosts in
+    hostagg.run_host_pipeline. Returns (df keyed by ``key_col`` with
+    ``feats`` min-max scaled, pc_* and ``cluster``; KMeans model).
     Registers its internal persist in ``persisted`` so the caller can
-    release it once the output is materialized. ``approx_rows`` (the
-    exact upstream count when known — the ECDF probe surfaces it)
-    fuses the KMeans init sample INTO the PCA fit scan: one driver
-    round-trip serves minmax + covariance + init sample, with a
-    bitwise-identical sample matrix (ml.fit_scaled_pca_with_init)."""
-    missing = [c for c in CLUSTER_FEATURES if c not in df.columns]
+    release it once the output is materialized (StageRunner.finish).
+    ``approx_rows`` (the exact upstream count when known — the ECDF
+    probe surfaces it) fuses the KMeans init sample INTO the PCA fit
+    scan: one driver round-trip serves minmax + covariance + init
+    sample, with a bitwise-identical sample matrix
+    (ml.fit_scaled_pca_with_init); without it KMeans takes the sample
+    with its own TopK job."""
+    missing = [c for c in feats if c not in df.columns]
     if missing:
         raise ValueError(f"cluster feature columns missing from input: {missing}")
-    feats = list(CLUSTER_FEATURES)
     # one pass: min/max + covariance (scaled covariance derived on the
     # driver) instead of separate minmax and covariance scans — plus
     # the fused init sample when the row-count hint is available
@@ -189,49 +219,38 @@ def cluster_documents(
         n_components=cfg.pca_components,
         kmin=cfg.pca_kmin,
         kmax=cfg.pca_kmax,
-        key_col="url",
+        key_col=key_col,
         init_sample=cfg.kmeans_init_sample,
         approx_rows=approx_rows,
     )
     scaled = ml.minmax_scale(df, feats, stats)
     pc_cols = [f"pc_{j}" for j in range(pca.loadings.shape[1])]
     # Lloyd iterations + centroid ranking rescan this frame k×; keep
-    # only (url, features, pc_*) hot — equivalent to the reference
+    # only (key, features, pc_*) hot — equivalent to the reference
     # persisting /individuals between tasks (analysis_tasks.py:632-635).
-    proj = ml.pca_project(scaled, pca).select("url", *feats, *pc_cols).persist()
+    proj = ml.pca_project(scaled, pca).select(key_col, *feats, *pc_cols).persist()
     if persisted is not None:
         persisted.append(proj)
-    # fallback when the fused sample was unavailable: pca.n_rows (free
-    # metadata from the fit scan) still lets the kmeans init TopK
-    # pre-filter by hash range — bitwise-identical sample (ml.py)
-    fit_kw = dict(
-        max_iter=cfg.kmeans_max_iter, init_sample=cfg.kmeans_init_sample, seed=cfg.seed, n_rows=pca.n_rows
-    )
+    fit_kw = dict(max_iter=cfg.kmeans_max_iter, init_sample=cfg.kmeans_init_sample, seed=cfg.seed)
     if cfg.k_auto:
         # reference AutoKMeans: sweep k, pick by elbow 2nd derivative
         best_k, models = ml.auto_kmeans(
-            proj, pc_cols, "url", cfg.kmeans_kmin, cfg.kmeans_kmax, sample_X=sample_X, **fit_kw
+            proj, pc_cols, key_col, cfg.kmeans_kmin, cfg.kmeans_kmax, sample_X=sample_X, **fit_kw
         )
         km = models[best_k]
     else:
-        km = ml.kmeans_fit(proj, pc_cols, k=cfg.k, key_col="url", sample_X=sample_X, **fit_kw)
+        km = ml.kmeans_fit(proj, pc_cols, k=cfg.k, key_col=key_col, sample_X=sample_X, **fit_kw)
     out = ml.kmeans_assign(proj, pc_cols, km.centers, out="cluster")
-    return out, feats, stats, pca, km
+    return out, km
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Full pipeline: pages → labels (url, cluster, keep, scrubbed_text)."""
     cfg = cfg or PipelineConfig()
     runner = StageRunner(spark, cfg.workdir)
-
-    # Luigi-style resume: if the terminal stage exists, nothing runs.
-    if runner.exists("labels"):
-        runner.metrics.append({"stage": "labels", "skipped": True})
-        for s in ("features", "normalized"):
-            if runner.exists(s):
-                runner.metrics.append({"stage": s, "skipped": True})
-        runner.flush_metrics()
-        return spark.read.parquet(runner._path("labels"))
+    done = runner.resume("features", "normalized", "labels")
+    if done is not None:
+        return done
 
     feats_df = runner.run("features", lambda: extract_features(pages, cfg))
     # nstats carries the ECDF probe's exact row count out of the stage
@@ -240,15 +259,15 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
     nstats: dict = {}
     norm_df = runner.run("normalized", lambda: normalize_features(feats_df, cfg, nstats))
 
-    clustered, feats, stats, pca, km = cluster_documents(
-        norm_df, cfg, persisted=runner._persisted, approx_rows=nstats.get("n_rows")
+    clustered, _ = cluster_documents(
+        norm_df, cfg, persisted=runner.persisted, approx_rows=nstats.get("n_rows")
     )
     # Rank clusters by the mean scaled features of their members
     # (`clustered` feature columns are already min-max scaled). This is
     # a PURE PLAN (label_mod.keep_dim_plan): the k-row aggregate +
     # window rank fuse into the label job — no driver collect, one
     # fewer synchronous round trip (the non-scaling cost, VERDICT r1).
-    dim = label_mod.keep_dim_plan(clustered, list(feats), cfg.keep_top)
+    dim = label_mod.keep_dim_plan(clustered, CLUSTER_FEATURES, cfg.keep_top)
     labels = (
         clustered.join(F.broadcast(dim), on="cluster", how="left")
         .na.fill({"keep": False})
@@ -258,16 +277,4 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
         .join(feats_df.select("url", "scrubbed_text"), on="url", how="inner")
         .select("url", "cluster", "keep", "scrubbed_text")
     )
-    labels = runner.run("labels", lambda: labels)
-    if not cfg.workdir:
-        # runner.run persisted `labels` lazily; materialize it once so
-        # every upstream cache (features, normalized, pca projection)
-        # can be released — a long-lived session driving many pipelines
-        # must not accrue executor memory (VERDICT r1 item 3).
-        labels.count()
-        for df_ in runner._persisted:
-            if df_ is not labels:
-                df_.unpersist()
-        runner._persisted = [labels]
-    runner.flush_metrics()
-    return labels
+    return runner.finish(runner.run("labels", lambda: labels))
