@@ -75,6 +75,15 @@ def test_host_label_propagation_and_f1(spark, host_pages):
     assert tier_f1 >= 0.99, f"host-label F1 vs latent clean tiers = {tier_f1}"
 
 
+def test_host_pipeline_empty_pages(spark, host_pages):
+    """No pages: an empty frame with the host label schema, nothing
+    fitted."""
+    out = hostagg.run_host_pipeline(spark, host_pages.drop("_tier").limit(0))
+    assert out.count() == 0
+    assert out.dtypes == [("url", "string"), ("host", "string"), ("host_cluster", "int"), ("keep", "boolean")]
+    out.unpersist()
+
+
 def test_host_pipeline_checkpoint_resume(tmp_path, spark, host_pages):
     """workdir mode: stages checkpoint to parquet; a resume run over an
     EMPTY input reproduces the labels from the checkpoints."""

@@ -83,20 +83,25 @@ def test_kmeans_recovers_blobs(spark):
 
 
 def test_kmeans_fit_leaves_unset_conf_unset(spark):
-    """kmeans_fit overrides AQE and shuffle.partitions for its loop;
-    keys the caller never set must not be left set afterwards."""
+    """kmeans_fit never writes session conf: ``spark.conf.getAll`` is
+    identical before and after a fit, with AQE on and with AQE off, and
+    a key the caller left unset (shuffle.partitions) stays unset."""
     df, _, _ = _blob_df(spark, n=50)
     keys = ["spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"]
     saved = {k: spark.conf.getAll.get(k) for k in keys}
     try:
-        for k in keys:
-            spark.conf.unset(k)
-        ml.kmeans_fit(df, ["a", "b", "c"], k=3, key_col="key", init_sample=64, max_iter=2)
-        left = spark.conf.getAll
-        assert [k for k in keys if k in left] == []
+        spark.conf.unset("spark.sql.shuffle.partitions")
+        for aqe in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            before = spark.conf.getAll
+            ml.kmeans_fit(df, ["a", "b", "c"], k=3, key_col="key", init_sample=64, max_iter=2)
+            assert spark.conf.getAll == before
+            assert "spark.sql.shuffle.partitions" not in before
     finally:
         for k, v in saved.items():
-            if v is not None:
+            if v is None:
+                spark.conf.unset(k)
+            else:
                 spark.conf.set(k, v)
 
 
@@ -169,12 +174,21 @@ def test_fused_init_sample_bitwise_parity(spark):
     X_sep = ml.init_sample_matrix(proj, ["pc_0", "pc_1"], "url", 128)
     np.testing.assert_array_equal(X_fused, X_sep)
 
-    # no hint (or a hint too small to justify fusion) -> no sample
+    # no hint -> no sample
     _, _, none1 = ml.fit_scaled_pca_with_init(df, cols, n_components=2)
-    _, _, none2 = ml.fit_scaled_pca_with_init(
-        df, cols, n_components=2, key_col="url", init_sample=4096, approx_rows=6000
-    )
-    assert none1 is None and none2 is None
+    assert none1 is None
+
+    # a hint within 4x the sample (frac = 4 * init_sample / approx_rows
+    # >= 1) collects every row with no cutoff; a hint just above it
+    # (0.5 < frac < 1) takes the cutoff — both equal the TopK sample
+    for init_sample in (4096, 1024):
+        stats2, pca2, X2 = ml.fit_scaled_pca_with_init(
+            df, cols, n_components=2, key_col="url", init_sample=init_sample, approx_rows=6000
+        )
+        proj2 = ml.pca_project(ml.minmax_scale(df, cols, stats2), pca2)
+        X2_sep = ml.init_sample_matrix(proj2, ["pc_0", "pc_1"], "url", init_sample)
+        assert X2 is not None and X2.shape == (init_sample, 2)
+        np.testing.assert_array_equal(X2, X2_sep)
 
     # absurdly large hint -> cutoff below every hash -> shortfall None
     _, _, short = ml.fit_scaled_pca_with_init(

@@ -110,6 +110,32 @@ def test_ecdf_reprobe_path_exact(spark):
         np.testing.assert_allclose(fast[out], naive[out], rtol=1e-12, err_msg=out)
 
 
+def test_ecdf_edge_inputs_match_naive(spark):
+    """Edge inputs through the observed probe and the Arrow-built
+    lookup tables, each equal to ecdf_naive: an empty frame (no rows,
+    the u_ columns present), an all-null column (its dim is a zero-row
+    table; every u_ is 1.0, the cume_dist of one null peer group) and a
+    constant column (every u_ is 1.0), on the low- and the
+    high-cardinality path."""
+    base = spark.range(0, 50, 1, 4).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.lit(None).cast("double").alias("n_null"),
+        F.lit(3.0).alias("n_const"),
+    ).cache()
+    cols = ["n_null", "n_const"]
+
+    empty = normalize.ecdf(base.limit(0), cols)
+    assert empty.count() == 0
+    assert empty.columns == normalize.ecdf_naive(base.limit(0), cols).columns
+
+    naive = normalize.ecdf_naive(base, cols).toPandas().set_index("url").sort_index()
+    for threshold in (65536, 1):  # 1: the constant column takes the bucketed path
+        got = normalize.ecdf(base, cols, low_card_threshold=threshold).toPandas().set_index("url").sort_index()
+        for u in ("u_null", "u_const"):
+            assert (got[u] == 1.0).all(), (threshold, u)
+            assert (got[u] == naive[u]).all(), (threshold, u)
+
+
 # ---- winsorize ----
 
 def test_winsorize_matches_numpy(spark):

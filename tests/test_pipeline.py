@@ -49,6 +49,37 @@ def test_partition_invariance(spark):
     assert (a["scrubbed_text"] == b["scrubbed_text"]).all()
 
 
+def test_empty_pages_empty_labels(spark):
+    """An empty input returns an empty frame with the label schema and
+    fits nothing (no PCA, no KMeans)."""
+    pages = generate_pages(spark, 50).drop("_tier").limit(0)
+    out = run_pipeline(spark, pages, PipelineConfig(k=5, kmeans_init_sample=64))
+    assert out.count() == 0
+    assert out.dtypes == [("url", "string"), ("cluster", "int"), ("keep", "boolean"), ("scrubbed_text", "string")]
+    out.unpersist()
+
+
+def test_pipeline_job_budget(spark):
+    """q00's bench config over 4,000 pages, warm: 17 Spark jobs a pass
+    — ECDF 3 (observed probe, counts map + result), PCA fit 7 (four
+    ECDF dim broadcasts, normalized cache fill, map + result), Lloyd 3
+    (proj cache fill, two observed rounds), ranking 1, labels 3."""
+    pages = generate_pages(spark, 4000).drop("_tier").cache()
+    pages.count()
+    cfg = PipelineConfig(k=4, pca_components=3, kmeans_init_sample=512, kmeans_max_iter=5)
+    sc = spark.sparkContext
+    run_pipeline(spark, pages, cfg).unpersist()  # warm-up pass
+    sc.setJobGroup("q00-job-budget", "q00-job-budget")
+    try:
+        run_pipeline(spark, pages, cfg).unpersist()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("q00-job-budget"))
+    pages.unpersist()
+    assert jobs == 17, f"{jobs} Spark jobs in a warm q00 pass"
+
+
 def test_checkpoint_resume(tmp_path, spark):
     import json
     import os

@@ -1,7 +1,7 @@
 """Classifier/filter evaluation: precision-recall curves and average
 precision over a scored, labeled corpus — the calibration step between
 training a quality scorer (``webdq.classifier``) and picking the keep
-threshold the pipeline actually runs (``label.keep_dim_plan``,
+threshold the pipeline actually runs (``label.keep_clusters``,
 ``mixing.select_by_budget``).
 
 Spark-first decomposition — exact WITHOUT any single-partition sort,

@@ -6,7 +6,9 @@ experienced-user cluster" (/root/reference/osmdq/utils.py:332-341;
 article7:118-130) — i.e. a tiny cluster→verdict map joined broadcast
 onto the big table. Here: clusters are ranked by a fixed quality
 composite of their centroid coordinates and the top ``keep_top``
-clusters are kept.
+clusters are kept. The pipelines rank with ``keep_clusters`` (one
+observed pass, then ``keep_map`` on the driver); ``keep_dim_plan`` is
+the same rule as a lazy plan.
 """
 
 from __future__ import annotations
@@ -14,6 +16,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ml import cluster_means
 
 # Weights over (min-max-scaled) feature columns. Positive = quality
 # signal, negative = junk signal. Unknown columns weigh 0.
@@ -30,18 +34,45 @@ QUALITY_WEIGHTS: dict[str, float] = {
 }
 
 
-def cluster_scores(centers: np.ndarray, cols: list[str]) -> np.ndarray:
-    w = np.array([QUALITY_WEIGHTS.get(c, 0.0) for c in cols])
+def cluster_scores(centers: np.ndarray, cols: list[str], weights: dict[str, float] | None = None) -> np.ndarray:
+    weights = weights or QUALITY_WEIGHTS
+    w = np.array([weights.get(c, 0.0) for c in cols])
     return centers @ w
 
 
-def keep_map(centers: np.ndarray, cols: list[str], keep_top: int = 1) -> dict[int, bool]:
+def keep_map(
+    centers: np.ndarray,
+    cols: list[str],
+    keep_top: int = 1,
+    weights: dict[str, float] | None = None,
+    sizes: np.ndarray | None = None,
+) -> dict[int, bool]:
     """Rank clusters by composite centroid quality; keep the best
-    ``keep_top``. Ties broken by cluster id (deterministic)."""
-    s = cluster_scores(centers, cols)
-    order = sorted(range(len(s)), key=lambda j: (-s[j], j))
-    kept = set(order[:keep_top])
+    ``keep_top``. Ties broken by cluster id (deterministic). A cluster
+    whose ``sizes`` entry is 0 takes no rank and is never kept, as in
+    keep_dim_plan, whose groupBy never sees it."""
+    s = cluster_scores(centers, cols, weights)
+    live = [j for j in range(len(s)) if sizes is None or sizes[j] > 0]
+    kept = set(sorted(live, key=lambda j: (-s[j], j))[:keep_top])
     return {j: j in kept for j in range(len(s))}
+
+
+def keep_clusters(
+    clustered: DataFrame,
+    cols: list[str],
+    k: int,
+    keep_top: int = 1,
+    weights: dict[str, float] | None = None,
+) -> list[int]:
+    """Ids (of 0..k-1) of the ``cluster`` values to keep, ranked by the
+    mean of their members' ``cols`` (``clustered`` holds the min-max
+    scaled features): per-cluster counts and exact feature sums come
+    from ONE observed pass (ml.cluster_means — one job, one stage), the
+    ranking is keep_map on the driver. The caller emits the verdict as
+    ``isin(kept)``, a k-literal predicate."""
+    sizes, means = cluster_means(clustered, "cluster", cols, k)
+    keep = keep_map(means, cols, keep_top, weights, sizes)
+    return [j for j, kept in keep.items() if kept]
 
 
 def keep_dim_plan(
@@ -51,7 +82,7 @@ def keep_dim_plan(
     cluster_col: str = "cluster",
     weights: dict[str, float] | None = None,
 ) -> DataFrame:
-    """cluster → keep verdict as a PURE PLAN (no driver collect): one
+    """cluster → keep verdict as a lazy plan (no driver collect): one
     aggregation to k rows, composite score as an expression, rank via
     a window over the k-row frame (single tiny partition — k ≤ 16).
     Same semantics as keep_map on collected centroids: rank by

