@@ -1032,7 +1032,7 @@ FROM sig a JOIN sig x ON a.band = x.band AND a.minhash = x.minhash AND a.doc_id 
 
 # --------------------------------------------------------------------------
 # Portable 16-bit SimHash (md5-hex bit votes) — DuckDB-checkable; the
-# fast 64-bit xxhash64 variant is webdq.dedup.simhash (rows-only q35)
+# 64-bit variant is webdq.dedup.simhash64_portable (q35)
 # --------------------------------------------------------------------------
 
 def q30_simhash16(spark, sf_dir):
@@ -1173,8 +1173,7 @@ FROM documents
 # --------------------------------------------------------------------------
 # 64-bit SimHash, engine-portable variant (md5 hex digits → 2 bits per
 # digit, the q30 technique extended to 64 bits; split hi/lo to avoid
-# signed-overflow games). The fast xxhash64 form (webdq.dedup.simhash)
-# stays the engine path, pinned by pytest.
+# signed-overflow games).
 # --------------------------------------------------------------------------
 
 def q35_simhash64(spark, sf_dir):
@@ -2341,7 +2340,7 @@ def q49_partitioned_layout(spark, sf_dir):
     )
     d = _t(spark, sf_dir, "documents")
     storage.write_partitioned(d, stage, ["source", "lang"])
-    back = storage.read_partitioned(spark, stage).filter(F.col("lang") == "en")
+    back = spark.read.parquet(stage).filter(F.col("lang") == "en")
     return back.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -2664,7 +2663,7 @@ def _pq_demo_books():
     """Arithmetic PQ codebooks (m=2 subspaces × k=4 codes × dsub=32)
     for the CONTRACT query: c(s,j,t) = ((7j+3t+5s) mod 13)/13 − 0.5 —
     rebuildable by any engine, so encode + ADC are value-checkable
-    end-to-end. TRAINED codebooks (similarity.pq_fit) keep pytest
+    end-to-end. TRAINED codebooks (tests/test_similarity.py) keep pytest
     gates (recall vs exact, reconstruction error), the same honest
     split as IVF (q47) vs its clustered-fixture tests."""
     import numpy as np

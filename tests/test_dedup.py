@@ -52,18 +52,6 @@ def test_minhash_matches_pandas_oracle(spark):
             assert got[(doc_id, b)] == exp
 
 
-def test_simhash_properties(spark):
-    s = {r["doc_id"]: r["simhash"] for r in dedup.simhash(_df(spark)).collect()}
-    assert s[1] == s[2]  # identical text → identical fingerprint
-    assert s[4] == s[5]  # same token set → identical fingerprint
-    m64 = (1 << 64) - 1
-    ham13 = bin((s[1] ^ s[3]) & m64).count("1")
-    ham16 = bin((s[1] ^ s[6]) & m64).count("1")
-    assert ham13 < ham16  # near dup closer than unrelated
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in dedup.simhash_pairs(_df(spark), max_hamming=10).collect()}
-    assert pairs[(1, 2)] == 0 and pairs[(4, 5)] == 0
-
-
 def test_ngram_jaccard(spark):
     out = {(r["id1"], r["id2"]): r["jaccard"] for r in dedup.ngram_jaccard_pairs(_df(spark), n=3, threshold=0.3).collect()}
     assert out[(1, 2)] == 1.0
@@ -558,3 +546,10 @@ def test_cosine_col_fold_path_bitwise_parity(spark):
         assert struct.pack("<d", r["hof"]) == struct.pack("<d", r["fold"]), (
             r["i"], r["j"], r["hof"], r["fold"])
     assert n_null == 40  # every pair with the null vector
+    # a length other than dim fails loudly instead of truncating
+    import pytest
+
+    for n in (3, 5):
+        bad = spark.createDataFrame([([1.0] * 4, [1.0] * n)], "va array<double>, vb array<double>")
+        with pytest.raises(Exception, match=f"sizes 4 and {n}"):
+            bad.select(dedup.cosine_col(F.col("va"), F.col("vb"), dim=4)).collect()

@@ -5,13 +5,13 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from webdq import normalize, oracle
+from webdq.pipeline import PipelineConfig, extract_features
 from webdq.synth import generate_pages
-from webdq.textstats import heuristic_features
 
 
 def _ecdf_frames(spark):
     pages = generate_pages(spark, 500).select("url", "text", "lang")
-    return heuristic_features(pages).select("url", "n_chars", "n_words", "mean_word_len")
+    return extract_features(pages, PipelineConfig()).select("url", "n_chars", "n_words", "mean_word_len")
 
 
 def test_ecdf_matches_naive_and_pandas(spark):
@@ -40,13 +40,6 @@ def test_ecdf_partition_invariance(spark):
     a = normalize.ecdf(df.repartition(1), ["n_words"]).toPandas().set_index("url")["u_words"]
     b = normalize.ecdf(df.repartition(16), ["n_words"]).toPandas().set_index("url")["u_words"]
     assert (a.sort_index() == b.sort_index()).all()
-
-
-def test_ratio_normalize(spark):
-    df = spark.createDataFrame([(2.0, 10.0), (0.0, 0.0)], "n_x double, total double")
-    rows = normalize.ratio_normalize(df, ["n_x"], "total").collect()
-    vals = sorted(r["r_x"] for r in rows)
-    assert vals == [0.0, 0.2]
 
 
 def test_ecdf_paths_agree(spark):

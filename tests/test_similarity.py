@@ -2,7 +2,7 @@
 
 import numpy as np
 
-from webdq import similarity
+from webdq import ml, similarity
 
 
 def _emb_df(spark, n=120, dim=16, seed=5):
@@ -132,15 +132,17 @@ def test_pq_adc_trained_path(spark):
         "vec_id", "embedding",
         "sqrt(aggregate(embedding, 0.0d, (a, e) -> a + e * e)) AS _n",
     ).selectExpr("vec_id", "transform(embedding, x -> x / _n) AS embedding")
-    books = similarity.pq_fit(norm, m=4, k=16, sample_n=120, iters=15)
+    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+    # codebooks trained on the driver: k-means++ + Lloyd per subspace
+    m, dsub = 4, 4
+    subs = [Xn[:, s * dsub : (s + 1) * dsub] for s in range(m)]
+    books = np.stack([ml._lloyd_numpy(x, ml._kmeanspp_init(x, 16, 7 + s), max_iter=15) for s, x in enumerate(subs)])
     # materialized index, as in q77 (codegen-clean scan split)
     codes = similarity.pq_encode(norm, books).localCheckpoint(eager=True)
     q = norm.filter("vec_id < 8").selectExpr("vec_id as query_id", "embedding")
     approx = similarity.pq_adc_topk(codes, q, books, k=5).collect()
 
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
     code_map = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
-    m, _, dsub = books.shape
     for r in approx:
         qv, cs = Xn[r["query_id"]], code_map[r["neighbor_id"]]
         ref = sum(
@@ -150,15 +152,3 @@ def test_pq_adc_trained_path(spark):
         assert abs(r["adc_dist"] - ref) < 1e-6, (r, ref)
         # fixture: 4 clusters of 30 consecutive ids
         assert r["neighbor_id"] // 30 == r["query_id"] // 30, r
-
-
-def test_pq_fit_deterministic_and_shapes(spark):
-    df, _ = _emb_df(spark)
-    a = similarity.pq_fit(df, m=4, k=8, sample_n=64, iters=5)
-    b = similarity.pq_fit(df.repartition(7), m=4, k=8, sample_n=64, iters=5)
-    assert a.shape == (4, 8, 4)
-    np.testing.assert_array_equal(a, b)
-    import pytest
-
-    with pytest.raises(ValueError):
-        similarity.pq_fit(df, m=5)

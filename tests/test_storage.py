@@ -1,5 +1,4 @@
-"""Storage layout contracts: partition pruning + exchange-free
-bucketed joins (the paid-once-shuffle property)."""
+"""Storage contracts: partition pruning and scan sizing."""
 
 import io
 from contextlib import redirect_stdout
@@ -24,7 +23,7 @@ def test_partitioned_write_prunes(spark, tmp_path):
         (F.col("id") * 7 % 100).alias("score"),
     )
     storage.write_partitioned(df, path, ["source"])
-    back = storage.read_partitioned(spark, path).filter(F.col("source") == "news")
+    back = spark.read.parquet(path).filter(F.col("source") == "news")
     # planning-time pruning: the partition filter reaches the scan node
     plan = _plan(back.groupBy().agg(F.count(F.lit(1)).alias("n")))
     assert "PartitionFilters" in plan and "news" in plan
@@ -33,33 +32,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
     a = back.orderBy("doc_id").select("doc_id", "score").collect()
     b = df.filter("source = 'news'").orderBy("doc_id").select("doc_id", "score").collect()
     assert a == b
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed by the join key into the same bucket count
-    must join with NO Exchange on either side — the write-time shuffle
-    amortizes across every downstream keyed operation."""
-    spark.sql("DROP TABLE IF EXISTS wdq_bucket_a")
-    spark.sql("DROP TABLE IF EXISTS wdq_bucket_b")
-    a = spark.range(0, 5000, 1, 4).select(F.col("id").alias("doc_id"), (F.col("id") % 97).alias("fa"))
-    b = spark.range(0, 5000, 1, 4).select(F.col("id").alias("doc_id"), (F.col("id") % 31).alias("fb"))
-    storage.write_bucketed(a, "wdq_bucket_a", "doc_id", n_buckets=8, sort_col="doc_id")
-    storage.write_bucketed(b, "wdq_bucket_b", "doc_id", n_buckets=8, sort_col="doc_id")
-    ta = spark.table("wdq_bucket_a")
-    tb = spark.table("wdq_bucket_b")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force a shuffle-class join
-    try:
-        joined = ta.join(tb, "doc_id").select("doc_id", "fa", "fb")
-        plan = _plan(joined)
-        assert "Exchange" not in plan, "bucketed join must not reshuffle"
-        assert joined.count() == 5000
-        got = dict((r["doc_id"], (r["fa"], r["fb"])) for r in joined.collect())
-        assert got[123] == (123 % 97, 123 % 31)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS wdq_bucket_a")
-        spark.sql("DROP TABLE IF EXISTS wdq_bucket_b")
 
 
 def test_spread_scan_sizes_percent_encoded_path(spark, tmp_path):

@@ -148,24 +148,6 @@ def test_gopher_fracs_bounded(spark):
             assert 0.0 <= r[c] <= 1.0, (r["doc_id"], c, r[c])
 
 
-def test_dedup_consecutive_lines_matches_python_and_idempotent(spark):
-    got = {
-        r["doc_id"]: (r["clean_text"], r["n_removed"])
-        for r in textprep.dedup_consecutive_lines(_mdocs(spark)).collect()
-    }
-    for r in _mdocs(spark).collect():
-        lines = r["text"].split("\n")
-        kept = [ln for i, ln in enumerate(lines) if i == 0 or ln != lines[i - 1]]
-        assert got[r["doc_id"]] == ("\n".join(kept), len(lines) - len(kept)), r["doc_id"]
-    assert got[2] == ("same\nother", 2)
-    # idempotence: a second pass removes nothing
-    once = spark.createDataFrame(
-        [(k, v[0]) for k, v in got.items()], "doc_id long, text string"
-    )
-    again = textprep.dedup_consecutive_lines(once).collect()
-    assert all(r["n_removed"] == 0 for r in again)
-
-
 def _vocab_docs(spark):
     rows = [
         (0, "the cat sat on the mat"),

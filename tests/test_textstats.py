@@ -1,12 +1,15 @@
-"""Spark feature expressions vs the eager pandas oracle (SURVEY.md §5.2.1)."""
+"""The pipeline's feature stage vs the eager pandas oracle (SURVEY.md §5.2.1).
+
+Every test runs ``pipeline.extract_features``: native char features
+plus the scorer UDFs fused into one ArrowEvalPython node, the path q00
+runs."""
 
 import numpy as np
 import pandas as pd
 
 from webdq import oracle
-from webdq.scorers import model_features
+from webdq.pipeline import PipelineConfig, extract_features
 from webdq.synth import generate_pages
-from webdq.textstats import heuristic_features
 
 FEATS = [
     "n_chars",
@@ -27,7 +30,7 @@ FEATS = [
 def test_features_match_pandas_oracle(spark):
     pages = generate_pages(spark, 300).select("url", "text", "lang")
     got = (
-        model_features(heuristic_features(pages))
+        extract_features(pages, PipelineConfig())
         .select("url", *FEATS)
         .toPandas()
         .sort_values("url")
@@ -46,7 +49,7 @@ def test_edge_cases(spark):
         [("u1", None, "en"), ("u2", "", "en"), ("u3", "  ", "en"), ("u4", "word", "en")],
         "url string, text string, lang string",
     )
-    rows = {r["url"]: r for r in heuristic_features(df).collect()}
+    rows = {r["url"]: r for r in extract_features(df, PipelineConfig()).collect()}
     for u in ["u1", "u2", "u3"]:
         assert rows[u]["n_words"] == 0.0
         assert rows[u]["stopword_ratio"] == 0.0
@@ -57,8 +60,8 @@ def test_edge_cases(spark):
 
 def test_pii_hits(spark):
     df = spark.createDataFrame(
-        [("a", "mail a@b.co and c.d@e.org plus 555-123-4567 at 10.0.0.1")],
-        "url string, text string",
+        [("a", "mail a@b.co and c.d@e.org plus 555-123-4567 at 10.0.0.1", "en")],
+        "url string, text string, lang string",
     )
-    r = heuristic_features(df).collect()[0]
+    r = extract_features(df, PipelineConfig()).collect()[0]
     assert r["pii_hits"] == 4.0

@@ -4,15 +4,13 @@ Gopher figure A1, FineWeb's per-step removal rates): an ORDERED list
 of drop rules is evaluated in one pass, every document is attributed
 to the FIRST rule it trips (cascade semantics — downstream rules never
 see it, so their counts mean "dropped AT this stage"), and the stats
-table reports per-stage dropped / surviving counts alongside the
-filtered corpus.
+table reports per-stage dropped / surviving counts.
 
 Shape: all rule predicates are native Column expressions evaluated in
-ONE projection (zero shuffle for the kept path — it's a filter);
-attribution is a single CASE chain; the stats are one map-side-combined
-groupBy over the attribution label (≤ n_rules + 1 rows) plus a
-driver-free running subtraction over that tiny table. At 10^12 docs
-this adds nothing beyond the filter scan itself.
+ONE projection; attribution is a single CASE chain; the stats are one
+map-side-combined groupBy over the attribution label (≤ n_rules + 1
+rows) plus a driver-free running subtraction over that tiny table. At
+10^12 docs this adds nothing beyond the scan itself.
 
 Reference analog: the reference logs per-step record counts in its
 Luigi tasks (SURVEY.md §2 S6 JSON reports); the cascade makes those
@@ -31,28 +29,6 @@ def _attribution(rules) -> F.Column:
     for name, pred in rules:
         expr = F.when(pred, F.lit(name)) if expr is None else expr.when(pred, F.lit(name))
     return expr.otherwise(F.lit(None)) if expr is not None else F.lit(None).cast("string")
-
-
-def apply_cascade(
-    df: DataFrame,
-    rules: list,
-    reason_col: str | None = None,
-) -> DataFrame:
-    """Filtered corpus: rows tripping NO rule. ``rules`` is an ordered
-    list of (name, drop-when-true Column). With ``reason_col`` the
-    DROPPED rows are returned too, labeled by their first-tripped rule
-    (kept rows carry null) — the audit-sample form."""
-    if not rules:
-        raise ValueError("rules must be non-empty")
-    names = [n for n, _ in rules]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate rule names in {names}")
-    if "kept" in names:
-        raise ValueError("'kept' is a reserved stage name")
-    attr = _attribution(rules)
-    if reason_col is not None:
-        return df.withColumn(reason_col, attr)
-    return df.withColumn("_r", attr).filter(F.col("_r").isNull()).drop("_r")
 
 
 def cascade_stats(df: DataFrame, rules: list) -> DataFrame:

@@ -5,18 +5,16 @@ join/agg-shaped, exactly what Catalyst optimizes):
 
 - exact            hash-groupBy on canonicalized text (md5)
 - minhash_lsh      per-band min-of-hash signatures → bucket equi-join
-- simhash          64-bit weighted-bit-vote fingerprint + banded
-                   hamming candidate pairs
+- simhash          engine-portable 64-bit md5 bit-vote fingerprint
 - ngram_jaccard    shingle inverted index → pair co-count → Jaccard
 - embedding_neardup cosine pairs inside a blocking key
 
 Scale notes (10^12 docs): every candidate generation here is an
 equi-join on a bounded-fanout key — band buckets / rare shingles /
 blocking keys — so the pair explosion is O(sum of bucket²), controlled
-by ``max_bucket`` / document-frequency caps, never a cross join. The
-md5-based hashing is chosen over xxhash64 where an external oracle
-must reproduce signatures (md5 is engine-portable); xxhash64 where
-only internal consistency matters (simhash bits).
+by ``max_bucket`` / document-frequency caps, never a cross join.
+Signatures hash with md5 rather than xxhash64 so that an external
+oracle can reproduce them (md5 is engine-portable).
 
 Reference analog: the reference dedups only by key
 (/root/reference/osmdq/utils.py:365, drop_duplicates before counting);
@@ -170,35 +168,11 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 64) -> DataFrame:
-    """SimHash fingerprint: per distinct token take xxhash64(token);
-    each bit votes ±1; fingerprint bit = sign of the vote sum.
-    Explode + one groupBy — a single shuffle keyed by doc id."""
-    toks = _tokens(text_col)
-    ex = df.select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("_t"))
-    h = F.xxhash64("_t")
-
-    def mask(i: int):
-        # bit 63 as a signed-long literal (two's complement)
-        return F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
-
-    votes = [
-        F.sum(F.when(h.bitwiseAND(mask(i)) != 0, 1).otherwise(-1)).alias(f"v{i}")
-        for i in range(bits)
-    ]
-    agg = ex.groupBy("doc_id").agg(*votes)
-    fp = F.lit(0).cast("long")
-    for i in range(bits):
-        fp = fp + F.when(F.col(f"v{i}") > 0, mask(i)).otherwise(F.lit(0).cast("long"))
-    return agg.select("doc_id", fp.alias("simhash"))
-
-
 def simhash64_portable(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Engine-portable 64-bit SimHash: token hash = the 32 hex digits
     of md5(token), 2 bits per digit (bit 2i = digit&1, bit 2i+1 =
     (digit>>1)&1), so any engine with md5 reproduces the fingerprint
-    exactly (the oracle-parity variant of ``simhash``, extending the
-    q30 16-bit technique to 64 bits). Output is split into two 32-bit
+    exactly (the q30 16-bit technique extended to 64 bits). Output is split into two 32-bit
     halves (sim_hi = bits 32..63, sim_lo = bits 0..31) as BIGINTs to
     stay overflow-free in engines without unsigned 64-bit."""
     toks = _tokens(text_col)
@@ -213,25 +187,6 @@ def simhash64_portable(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
         lo = lo + F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
         hi = hi + F.when(F.col(f"v{i + 32}") > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
     return agg.select("doc_id", hi.alias("sim_hi"), lo.alias("sim_lo"))
-
-
-def simhash_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64-bit fingerprint into 4
-    16-bit keys (pigeonhole: hamming ≤ 3 ⇒ at least one band equal),
-    equi-join on band key, verify with bit_count(xor)."""
-    s = simhash(df, id_col, text_col)
-    band_keys = F.array(
-        *[F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)) for i in range(4)]
-    )
-    keyed = s.select("doc_id", "simhash", F.posexplode(band_keys).alias("band", "bkey"))
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"),
-                F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id1", "id2"])
-    )
 
 
 def ngram_jaccard_pairs(
@@ -336,9 +291,9 @@ def cosine_col(a, b, dim: int | None = None):
       cold trials on the 10× stand-in. The fold replays the HOF order
       exactly — each accumulator starts at 0.0 and adds terms left to
       right, then dot/(sqrt(na)*sqrt(nb)) — so the doubles are
-      bit-for-bit the HOF values. CONTRACT: every array must have
-      exactly ``dim`` elements (ANSI element_at raises past the end;
-      extra elements would be silently ignored). At dim ≫ 64 stage
+      bit-for-bit the HOF values. Every non-null array must have
+      exactly ``dim`` elements: any other length raises (a longer
+      array would otherwise be silently truncated). At dim ≫ 64 stage
       the three folds as separate columns (janino 64 KB, CLAUDE.md).
     """
     if dim is not None:
@@ -348,6 +303,12 @@ def cosine_col(a, b, dim: int | None = None):
                 e = e + t
             return e
 
+        # the guard wraps each array, not the fold: a CASE around the
+        # fold would keep its element_at terms out of common-
+        # subexpression elimination and push the method past 64 KB
+        bad = a.isNotNull() & b.isNotNull() & ((F.size(a) != dim) | (F.size(b) != dim))
+        err = F.raise_error(F.format_string(f"cosine_col(dim={dim}): array sizes %d and %d", F.size(a), F.size(b)))
+        a, b = (F.when(bad, err).otherwise(v) for v in (a, b))
         ae = [F.element_at(a, i + 1).cast("double") for i in range(dim)]
         be = [F.element_at(b, i + 1).cast("double") for i in range(dim)]
         dot = fold([x * y for x, y in zip(ae, be)])
@@ -473,15 +434,14 @@ def dedup_against(
 ) -> DataFrame:
     """Incremental (delta) dedup: flag or drop NEW documents whose
     exact text already exists in the ingested corpus — the
-    batch-over-batch production shape (streaming.dedup_stream is the
-    per-microbatch stateful form of the same check). One equi-join on
+    batch-over-batch production shape. One equi-join on
     md5(text) (same fingerprint as exact_dedup); the corpus side is
     pre-aggregated to distinct fingerprints, so the join's build input
     is one row per distinct corpus text regardless of duplication.
 
-    At 10^12 docs the corpus fingerprint set is a persisted/bucketed
-    stage table (storage.write_bucketed keyed on the fingerprint makes
-    every delta's probe exchange-free)."""
+    At 10^12 docs the corpus fingerprint set is a persisted stage
+    table; bucketing it on the fingerprint (``bucketBy``) makes every
+    delta's probe exchange-free."""
     if mode not in ("flag", "drop"):
         raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
     fp = F.md5(F.coalesce(F.col(text_col), F.lit("")))
@@ -532,7 +492,7 @@ def line_dedup_corpus(
     occurrences of a hot non-empty fingerprint into one task; the
     build side is one row per key, so AQE skew-join splitting
     (spark.sql.adaptive.skewJoin) handles it — leave AQE on at
-    scale. Within-doc variant: ``textprep.dedup_consecutive_lines``;
+    scale. Within-doc variant: ``textprep.dedup_consecutive_tokens``;
     whole-doc exact variant: ``exact_dedup``."""
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
@@ -804,10 +764,10 @@ def neardup_against(
     per occupied bucket regardless of corpus duplication — and the
     probe is one equi-join + one dropDuplicates on the new doc id.
     No pair explosion at all: the delta never joins doc×doc, only
-    doc×bucket. At 10^12 ingested docs the bucket set is a persisted/
-    bucketed stage table keyed on (band, minhash) (storage.
-    write_bucketed makes every delta's probe exchange-free), refreshed
-    incrementally by unioning each accepted delta's signatures."""
+    doc×bucket. At 10^12 ingested docs the bucket set is a persisted
+    stage table bucketed on (band, minhash) (``bucketBy`` makes every
+    delta's probe exchange-free), refreshed incrementally by unioning
+    each accepted delta's signatures."""
     if mode not in ("flag", "drop"):
         raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
     sig_new = minhash_signatures(

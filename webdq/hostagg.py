@@ -30,26 +30,6 @@ from pyspark.sql import functions as F
 from . import label as label_mod
 from . import normalize
 
-# Host-level aggregate features (the utils.py:422-463 analog: volume,
-# temporal extent, and quality-mix statistics per entity).
-HOST_AGG_FEATURES = [
-    "n_pages",
-    "n_active_days",
-    "lifespan_days",
-    "mean_words",
-    "v10_words",
-    "v90_words",
-    "mean_stopword_ratio",
-    "mean_symbol_ratio",
-    "mean_digit_ratio",
-    "mean_upper_ratio",
-    "mean_dup_word_ratio",
-    "mean_dup_5gram_ratio",
-    "mean_perplexity",
-    "mean_langid_conf",
-    "mean_lang_match",
-]
-
 # Volume-ish features get the ECDF treatment (heavy-tailed counts →
 # uniform ranks), mirroring the page pipeline's u_* columns.
 HOST_ECDF_FEATURES = ["n_pages", "n_active_days", "lifespan_days", "mean_perplexity"]

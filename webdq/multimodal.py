@@ -15,8 +15,8 @@ RIFF/AVI video — every image/audio/video format the contract names
 decodes for real, each validated against third-party files and/or a
 value-exact DuckDB oracle (q37/q48/q53). Unknown magic yields zeroed
 features; swapping any ``_decode_one`` branch for PIL/ffmpeg changes
-nothing else. The legacy ``WDQ0`` synthetic container remains for the
-fake-header plumbing (``fake=True`` parses it).
+nothing else. Test media come from the query fixture's documents table
+(``*_media_from_documents``) or the AVI writer (``synth_avi_media``).
 """
 
 from __future__ import annotations
@@ -69,31 +69,6 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def synth_media(spark, n: int, partitions: int = 8) -> DataFrame:
-    """Deterministic fake media table: payload = 16-byte header
-    (magic, width, height, channels, n_frames) + hash-derived body."""
-    df = spark.range(0, n, 1, partitions)
-    h = F.abs(F.xxhash64("id", F.lit("media")))
-    w = (F.pmod(h, 64) + 8).cast("int")
-    ht = (F.pmod(F.abs(F.xxhash64("id", F.lit("h"))), 64) + 8).cast("int")
-    mt = F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")), (F.pmod(h, 3) + 1).cast("int"))
-    # header: 'WDQ0' + width(4) + height(4) + channels(2) + frames(2)
-    header = F.concat(
-        F.encode(F.lit("WDQ0"), "UTF-8"),
-        F.lpad(w.cast("string"), 4, "0").cast("binary"),
-        F.lpad(ht.cast("string"), 4, "0").cast("binary"),
-        F.lpad(F.lit(3).cast("string"), 2, "0").cast("binary"),
-        F.lpad((F.pmod(h, 8) + 1).cast("string"), 2, "0").cast("binary"),
-    )
-    body = F.encode(F.sha2(F.concat(F.lit("body"), F.col("id").cast("string")), 256), "UTF-8")
-    return df.select(
-        F.col("id").alias("media_id"),
-        mt.alias("media_type"),
-        F.concat(header, body).alias("payload"),
-        F.create_map(F.lit("source"), F.lit("synth")).alias("meta"),
-    )
-
-
 def _hist16(body: np.ndarray) -> np.ndarray:
     hist = np.bincount(body >> 4, minlength=16).astype(np.float32)
     s = hist.sum()
@@ -114,7 +89,7 @@ def _decode_ppm(payload: bytes) -> tuple[int, int, int, float, np.ndarray]:
     return w, h, 3, float(body.mean()) if len(body) else 0.0, _hist16(body)
 
 
-def _decode_one(payload: bytes, fake: bool) -> tuple[int, int, int, float, np.ndarray]:
+def _decode_one(payload: bytes) -> tuple[int, int, int, float, np.ndarray]:
     zeros = (0, 0, 0, 0.0, np.zeros(16, dtype=np.float32))
     if payload is None or len(payload) < 8:
         return zeros
@@ -145,27 +120,18 @@ def _decode_one(payload: bytes, fake: bool) -> tuple[int, int, int, float, np.nd
             float(body.mean()) if len(body) else 0.0,
             _hist16(body),
         )
-    if payload[:4] == b"WDQ0":
-        if not fake:
-            raise NotImplementedError("WDQ0 is the synthetic container; decode with fake=True")
-        w = int(payload[4:8])
-        h = int(payload[8:12])
-        ch = int(payload[12:14])
-        body = np.frombuffer(payload[16:], dtype=np.uint8)
-        return w, h, ch, float(body.mean()) if len(body) else 0.0, _hist16(body)
     return zeros
 
 
-def decode_image_features(df: DataFrame, fake: bool = False) -> DataFrame:
+def decode_image_features(df: DataFrame) -> DataFrame:
     """payload → (width, height, channels, mean_byte, 16-bin byte
     histogram) via ``mapInPandas`` (iterator of Arrow batches; constant
     memory). PPM (P6), baseline JPEG and PNG all decode for real
-    (pure numpy/python); ``fake=True`` additionally parses the
-    synthetic WDQ0 container."""
+    (pure numpy/python)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = [_decode_one(p, fake) for p in b["payload"]]
+            rows = [_decode_one(p) for p in b["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": b["media_id"].to_numpy(),
@@ -287,43 +253,6 @@ def png_media_from_documents(spark, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------ WAV
 
-def synth_wav_media(spark, n: int, partitions: int = 8, sample_rate: int = 8000) -> DataFrame:
-    """REAL RIFF/WAVE PCM16 payloads, generated deterministically per
-    media_id inside ``mapInPandas`` (numpy sine + id-seeded phase) —
-    byte-valid WAV files parseable by the python stdlib ``wave``
-    module (pinned by tests)."""
-    import struct
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for mid in b["id"]:
-                n_samp = 400 + int(mid) % 800
-                freq = 100.0 + (int(mid) * 37) % 900
-                t = np.arange(n_samp) / sample_rate
-                pcm = (np.sin(2 * np.pi * freq * t) * 12000).astype("<i2")
-                data = pcm.tobytes()
-                hdr = (
-                    b"RIFF"
-                    + struct.pack("<I", 36 + len(data))
-                    + b"WAVEfmt "
-                    + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16)
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                )
-                payloads.append(hdr + data)
-            yield pd.DataFrame(
-                {
-                    "media_id": b["id"].to_numpy(),
-                    "media_type": "audio",
-                    "payload": payloads,
-                    "meta": [{"source": "synth-wav"}] * len(b),
-                }
-            )
-
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
-
-
 def _wav_chunks(payload: bytes | None) -> tuple[int, int, int, bytes] | None:
     """Shared RIFF/WAVE chunk walk → (sample_rate, n_channels, bits,
     raw data bytes), or None for non-WAV payloads. The SINGLE place
@@ -393,22 +322,11 @@ def decode_audio_features(df: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------------ AVI
 # Real video container: uncompressed 24-bit RGB ('DIB ') RIFF/AVI.
-# Same approach as the WAV pair above — a byte-valid writer built with
-# struct/numpy and an independent chunk-walking parser, no ffmpeg.
+# A byte-valid writer built with struct/numpy and an independent
+# chunk-walking parser, no ffmpeg.
 # Layout (public AVI RIFF form): RIFF('AVI ', LIST('hdrl', avih,
 # LIST('strl', strh, strf)), LIST('movi', '00db' frames...)). Frames
 # are bottom-up BGR rows padded to 4 bytes (the DIB rule).
-
-VIDEO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("mean_byte", T.DoubleType(), True),
-    ]
-)
-
 
 def _avi_frame_bytes(media_id: int, frame_no: int, w: int, h: int) -> np.ndarray:
     """Deterministic BGR bottom-up padded frame (the synth pixel rule:
@@ -475,35 +393,29 @@ def synth_avi_media(spark, n: int, partitions: int = 8, fps: int = 10) -> DataFr
     return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-def _parse_avi(payload: bytes) -> tuple[int, int, int, list[bytes]] | None:
-    """Pure-python RIFF/AVI chunk walker: recursive LIST descent to
-    'avih' (dims + frame count) and the 'movi' '00db'/'00dc' frame
-    chunks. Returns (width, height, n_frames, frames) or None when the
-    payload is not an AVI."""
+def _parse_avi(payload: bytes) -> list[bytes] | None:
+    """Pure-python RIFF/AVI chunk walker: recursive LIST descent to the
+    'movi' '00db'/'00dc' frame chunks. Returns the frames in stream
+    order, or None when the payload is not an AVI."""
     import struct
 
     if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         return None
-    width = height = n_frames = 0
     frames: list[bytes] = []
 
     def walk(pos: int, end: int) -> None:
-        nonlocal width, height, n_frames
         while pos + 8 <= end:
             cid = payload[pos : pos + 4]
             (sz,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
             body = pos + 8
             if cid == b"LIST":
                 walk(body + 4, min(body + sz, end))
-            elif cid == b"avih" and sz >= 40:
-                vals = struct.unpack("<10I", payload[body : body + 40])
-                n_frames, width, height = int(vals[4]), int(vals[8]), int(vals[9])
             elif cid in (b"00db", b"00dc"):
                 frames.append(bytes(payload[body : body + sz]))
             pos = body + sz + (sz % 2)
 
     walk(12, len(payload))
-    return width, height, n_frames, frames
+    return frames
 
 
 def sample_frames_avi(df: DataFrame, every: int = 2) -> DataFrame:
@@ -521,11 +433,8 @@ def sample_frames_avi(df: DataFrame, every: int = 2) -> DataFrame:
             fnos: list[int] = []
             blobs: list[bytes] = []
             for mid, p in zip(b["media_id"], b["payload"]):
-                parsed = _parse_avi(bytes(p)) if p is not None else None
-                if not parsed:
-                    continue
-                _, _, _, frames = parsed
-                for i in range(0, len(frames), every):
+                frames = _parse_avi(bytes(p)) if p is not None else None
+                for i in range(0, len(frames or []), every):
                     mids.append(int(mid))
                     fnos.append(i)
                     blobs.append(frames[i])
@@ -539,58 +448,6 @@ def sample_frames_avi(df: DataFrame, every: int = 2) -> DataFrame:
 
     return df.select("media_id", "payload").mapInPandas(gen, FRAME_SCHEMA)
 
-
-def decode_video_features(df: DataFrame) -> DataFrame:
-    """payload → (width, height, n_frames, mean_byte over all frame
-    bytes) for AVI payloads via ``mapInPandas``."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, p in zip(b["media_id"], b["payload"]):
-                parsed = _parse_avi(bytes(p)) if p is not None else None
-                if not parsed:
-                    rows.append((int(mid), 0, 0, 0, 0.0))
-                    continue
-                w, h, nf, frames = parsed
-                body = np.frombuffer(b"".join(frames), dtype=np.uint8)
-                rows.append((int(mid), w, h, nf, float(body.mean()) if len(body) else 0.0))
-            yield pd.DataFrame(
-                {
-                    "media_id": np.array([r[0] for r in rows], dtype=np.int64),
-                    "width": np.array([r[1] for r in rows], dtype=np.int32),
-                    "height": np.array([r[2] for r in rows], dtype=np.int32),
-                    "n_frames": np.array([r[3] for r in rows], dtype=np.int32),
-                    "mean_byte": np.array([r[4] for r in rows], dtype=np.float64),
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(gen, VIDEO_FEATURES_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
-    """Legacy WDQ0 'video' frame sampling: split the body into
-    n_frames chunks (per the synthetic header), keep every
-    ``every``-th — one row per kept frame, native expressions only.
-    Real containers go through ``sample_frames_avi``."""
-    n_frames = F.substring(F.col("payload"), 15, 2).cast("string").cast("int")
-    body_len = F.length(F.col("payload")) - 16
-    chunk = F.greatest((body_len / n_frames).cast("int"), F.lit(1))
-    frames = df.filter(F.col("media_type") == "video").select(
-        "media_id",
-        "payload",
-        n_frames.alias("_nf"),
-        chunk.alias("_ck"),
-        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_no"),
-    )
-    return (
-        frames.filter(F.col("frame_no") % every == 0)
-        .select(
-            "media_id",
-            F.col("frame_no").cast("int"),
-            F.substring(F.col("payload"), F.lit(17) + F.col("frame_no") * F.col("_ck"), F.col("_ck")).alias("frame"),
-        )
-    )
 
 def _decode_rgb(payload: bytes) -> np.ndarray | None:
     """(h, w, 3) uint8 pixel array for P6/JPEG/PNG payloads via the

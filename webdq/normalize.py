@@ -1,7 +1,6 @@
-"""Normalization: ratio features, ECDF, min-max (SURVEY.md §2.4/2.5/2.7).
+"""Normalization: ECDF, min-max (SURVEY.md §2.4/2.5/2.7).
 
 Reference semantics being preserved:
-- ratio-of-total (F5): /root/reference/osmdq/utils.py:784-798
 - ECDF u_* columns (W5): /root/reference/osmdq/utils.py:521-541 —
   ECDF(x) = P(X <= x), i.e. SQL ``cume_dist`` over a global order.
 - min-max (M1): webdq.ml.minmax_scale.
@@ -34,17 +33,6 @@ _REL_ERR = 0.01
 _MIN_BUCKETS = 64
 _MAX_BUCKETS = 4096
 _ROWS_PER_BUCKET = 1_000_000
-
-
-def ratio_normalize(df: DataFrame, cols: list[str], total_col: str, prefix: str = "r_") -> DataFrame:
-    """c / total with 0-when-empty (reference normalize_features,
-    /root/reference/osmdq/utils.py:784-798)."""
-    out = {}
-    for c in cols:
-        out[prefix + c.removeprefix("n_")] = F.when(
-            F.col(total_col) != 0, F.col(c) / F.col(total_col)
-        ).otherwise(F.lit(0.0))
-    return df.withColumns(out)
 
 
 def ecdf_naive(df: DataFrame, cols: list[str], prefix: str = "u_") -> DataFrame:

@@ -36,9 +36,6 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 LANGS = [*LANG_STOPWORDS.keys(), "zh"]
 
-_LANG_PATTERNS = {
-    lang: r"(?i)\b(?:" + "|".join(ws) + r")\b" for lang, ws in LANG_STOPWORDS.items()
-}
 _CJK = r"[一-鿿㐀-䶿]"
 
 _LANGID_SCHEMA = T.StructType(
@@ -56,7 +53,7 @@ for _i, _lang in enumerate(LANGS[:-1]):
 def _langid_impl(text: pd.Series) -> pd.DataFrame:
     """Stopword-profile linear scorer. One tokenize pass + one groupby
     instead of per-language alternation regexes (~6× faster per Arrow
-    batch; equivalence pinned by tests/test_textstats.py)."""
+    batch). q27's DuckDB re-derivation checks its values."""
     t = text.fillna("").reset_index(drop=True)
     toks = t.str.lower().str.split()
     n_words = toks.str.len().clip(lower=1).to_numpy()
@@ -179,14 +176,6 @@ def _token_features_impl(text: pd.Series) -> pd.DataFrame:
 token_features_udf = pandas_udf(_token_features_impl, _TOKFEAT_SCHEMA)
 
 
-def token_features(df, text_col: str = "text"):
-    s = token_features_udf(F.col(text_col))
-    df = df.withColumn("_tf", s)
-    return df.withColumns(
-        {f.name: F.col(f"_tf.{f.name}") for f in _TOKFEAT_SCHEMA.fields}
-    ).drop("_tf")
-
-
 # ------------------------------------------------------------- perplexity
 
 _PPL_BUCKETS = 1 << 15
@@ -280,18 +269,3 @@ def all_scorer_features(df, text_col: str = "text", lang_col: str = "lang"):
     out["perplexity"] = F.col("_ppl")
     return df.withColumns(out).drop("_tf", "_lid", "_ppl")
 
-
-def model_features(df, text_col: str = "text", lang_col: str = "lang"):
-    """Append langid_conf, lang_match, perplexity. One projection; the
-    struct-returning UDF is evaluated once per batch."""
-    s = langid_udf(F.col(text_col))
-    df = df.withColumn("_lid", s)
-    return (
-        df.withColumn("langid_conf", F.col("_lid.langid_conf"))
-        .withColumn(
-            "lang_match",
-            F.when(F.col("_lid.lang_pred") == F.col(lang_col), F.lit(1.0)).otherwise(F.lit(0.0)),
-        )
-        .withColumn("perplexity", perplexity_udf(F.col(text_col)))
-        .drop("_lid")
-    )

@@ -16,11 +16,12 @@
 The hyperplane projection is a vectorized Arrow UDF (one numpy matmul
 per batch) — the idiomatic fast path for per-row linear algebra.
 
-- ``pq_fit`` / ``pq_encode`` / ``pq_adc_topk``: product quantization
-  (Jégou et al. 2011) — the compressed-domain ANN path: m sub-codes
-  per vector, asymmetric distance computation against a broadcast
-  query set. Encode and ADC are NATIVE fixed-fold-order expressions
-  (no UDF), so they are engine-replayable and stay in codegen.
+- ``pq_encode`` / ``pq_adc_topk``: product quantization (Jégou et
+  al. 2011) — the compressed-domain ANN path: m sub-codes per vector
+  against caller-supplied (m, k, dim/m) codebooks, asymmetric distance
+  computation against a broadcast query set. Encode and ADC are
+  NATIVE fixed-fold-order expressions (no UDF), so they are
+  engine-replayable and stay in codegen.
 """
 
 from __future__ import annotations
@@ -291,42 +292,6 @@ def ann_recall(exact: DataFrame, approx: DataFrame) -> float:
 # and IVF): compress vectors to m sub-codes, score with asymmetric
 # distance computation (ADC). Jégou et al., "Product Quantization for
 # Nearest Neighbor Search", TPAMI 2011 (the FAISS PQ baseline).
-
-
-def pq_fit(
-    corpus: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-    sample_n: int = 4096,
-    iters: int = 25,
-) -> np.ndarray:
-    """Train PQ codebooks (m, k, dim/m): split the vector into m
-    contiguous subspaces and run k-means per subspace on the SAME
-    deterministic hash-ordered bounded sample as ``ivf_fit`` (FAISS
-    practice: training is sample-bounded; only encoding touches the
-    full corpus, and that stays distributed). Fully deterministic:
-    k-means++ init + Lloyd per subspace, fixed seed per subspace."""
-    from . import ml
-
-    samp = (
-        corpus.select(F.xxhash64(F.col(id_col)).alias("_h"), F.col(vec_col).alias("_v"))
-        .orderBy("_h")
-        .limit(sample_n)
-        .collect()
-    )
-    X = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in samp])
-    dim = X.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    books = np.empty((m, k, dsub))
-    for s in range(m):
-        Xs = X[:, s * dsub : (s + 1) * dsub]
-        books[s] = ml._lloyd_numpy(Xs, ml._kmeanspp_init(Xs, k, seed + s), max_iter=iters)
-    return books
 
 
 def _pq_sqdist_expr(vec_col, s: int, dsub: int, centroid, offset: int = 0):

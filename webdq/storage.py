@@ -1,4 +1,4 @@
-"""Storage layout operators: partitioned and bucketed stage tables.
+"""Storage layout and scan-width operators for stage tables.
 
 The reference's stages are flat CSV/HDF5 files (analysis_tasks.py
 to_csv/to_hdf at every boundary). At 100 TB the LAYOUT of a stage
@@ -8,22 +8,16 @@ table is a first-class operator:
   on the partition column prunes entire directories at planning time
   (`PartitionFilters` in the scan node): a per-crawl / per-language
   layout means a single-language query reads that language only.
-- ``write_bucketed`` — pre-shuffled, bucket-sorted tables
-  (``bucketBy``/``sortBy`` + ``saveAsTable``). Two tables bucketed by
-  the same key into the same bucket count join WITHOUT any Exchange:
-  the shuffle was paid once at write time and amortizes over every
-  downstream join/aggregation on that key (the dedup/label pipelines
-  re-key by url constantly). The no-Exchange property is asserted by
-  tests and mirrors co-located joins on a real cluster.
-
-Both are thin, typed wrappers — the value is the contract they pin
-(tests assert pruning and exchange-freedom, so a layout regression
-fails loudly).
+  Tests and q49 read the layout back with ``spark.read.parquet`` and
+  assert the pruning, so a layout regression fails loudly.
+- ``spread_scan`` — restores scan-side parallelism for under-split
+  inputs (one round-robin repartition when the physical scan has
+  fewer partitions than the session has cores).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:
@@ -32,29 +26,6 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode:
     (crawl id, language, source) — a high-cardinality partition column
     creates millions of tiny files, the classic small-files failure."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucket-partitioned managed table: rows are hash-distributed into
-    ``n_buckets`` files per partition by ``bucket_col`` and optionally
-    sorted within each bucket. Joins/aggregations keyed on
-    ``bucket_col`` between same-bucketed tables run with NO Exchange
-    (and no sort, when ``sort_col`` matches the join key)."""
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
 
 
 def spread_scan(df: DataFrame, min_split_bytes: int | None = None) -> DataFrame:

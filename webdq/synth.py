@@ -26,7 +26,6 @@ TIER_BOILERPLATE = 1
 TIER_SPAM = 2
 TIER_REPETITIVE = 3
 TIER_FOREIGN = 4
-N_TIERS = 5
 
 # tier mix in percent (hash mod 100): clean 40, boiler 15, spam 15,
 # repetitive 15, foreign 15.

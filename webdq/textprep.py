@@ -90,16 +90,6 @@ def dedup_consecutive_tokens(
     return _dedup_consecutive(df, id_col, _toks(text_col), " ")
 
 
-def dedup_consecutive_lines(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", line_delim: str = "\n"
-) -> DataFrame:
-    """Collapse runs of identical consecutive LINES (the Gopher §A.1.1
-    repeated-paragraph member at line granularity). Output:
-    (doc_id, clean_text, n_removed)."""
-    lines = F.split(F.coalesce(F.col(text_col), F.lit("")), _re_escape(line_delim))
-    return _dedup_consecutive(df, id_col, lines, line_delim)
-
-
 def _re_escape(delim: str) -> str:
     import re
 
@@ -107,7 +97,7 @@ def _re_escape(delim: str) -> str:
 
 
 def _dedup_consecutive(df: DataFrame, id_col: str, units, join_delim: str) -> DataFrame:
-    """Shared run-collapse over an array column: keep element i when it
+    """Run-collapse over an array column: keep element i when it
     differs from element i-1. arrays_zip-first so the filter/transform
     lambdas touch only their zipped element (the interpreted-HOF
     captured-expression trap, CLAUDE.md)."""

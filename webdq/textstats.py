@@ -42,8 +42,10 @@ def _char_class_ratio(text: Column, pattern: str) -> Column:
 
 def char_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Character-level features as native regex expressions (fully
-    codegen'd, single text pass each). Token-level features live in
-    ``scorers.token_features`` as a vectorized Arrow UDF: Spark's
+    codegen'd, single text pass each). Token-level features come from
+    ``scorers.token_features_udf``, a vectorized Arrow UDF that
+    ``scorers.all_scorer_features`` fuses with the langid and
+    perplexity UDFs (``pipeline.extract_features`` runs both): Spark's
     higher-order array functions are evaluated interpreted with NO
     common-subexpression elimination, so a tokens-based expression tree
     re-evaluates split() per array access — O(n²) per row and ~30×
@@ -62,10 +64,3 @@ def char_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             "pii_hits": pii,
         }
     )
-
-
-def heuristic_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """All heuristic features: native char-level + Arrow-UDF token-level."""
-    from .scorers import token_features
-
-    return token_features(char_features(df, text_col), text_col)
