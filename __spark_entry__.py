@@ -1118,13 +1118,11 @@ def q33_ann_topk(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings", spread=True)
     q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    # cosine_col fold path (dim=64) measured WORSE here at both bench
-    # scales (interleaved A/B: hof 0.46-0.78 s vs fold 1.18-1.96 s):
-    # the 64-dim fold inside this BroadcastHashJoin's consume method
-    # fails janino and pays a ~0.7 s failed-compile attempt per
-    # execution, which q33's ~1e5-pair refine cannot amortize (q32/q57
-    # amortize it across 1e7-1e8 pairs for 4.2-4.6x wins). The dim
-    # knob stays available for corpus sizes where the refine dominates.
+    # cosine_topk scores with cosine_col's HOF path: the 64-dim fold
+    # measured WORSE here at both bench scales (4-core A/B, warm
+    # count(), median of 5: sf0.01 0.55 vs 2.51 s, sf0.1 0.59 vs
+    # 2.63 s) — the fold pays ~2-3 s per execution, which q33's
+    # ~1e5-pair refine cannot amortize (ROADMAP #4).
     return similarity.cosine_topk(e, q, k=3)
 
 
@@ -1933,7 +1931,7 @@ def q63_decontaminate(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 17 == 0)
-    out = dedup.decontaminate(docs, bench, k=3, window=4, mode="flag")
+    out = dedup.decontaminate(docs, bench, k=3, window=4)
     return out.select("doc_id", "contaminated")
 
 
@@ -2291,7 +2289,7 @@ def q72_silhouette(spark, sf_dir):
         F.pmod(F.col("doc_id"), F.lit(7)).cast("double").alias("f2"),
     )
     s = ml.silhouette_sampled(
-        docs, ["f1", "f2"], "cluster", "doc_id", sample_n=400, hash="md5"
+        docs, ["f1", "f2"], "cluster", "doc_id", sample_n=400
     )
     return spark.createDataFrame([(round(s, 6),)], "silhouette double")
 

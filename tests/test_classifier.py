@@ -41,9 +41,9 @@ def test_features_normalized_sorted(feats):
 
 
 def test_fit_matches_numpy_reference(corpus, feats):
-    n_iter, lr, l2 = 10, 2.0, 1e-6
+    n_iter, lr, l2 = 10, 2.0, classifier.L2
     m = classifier.logreg_fit(
-        feats, corpus.select("doc_id", "label"), dim=DIM, n_iter=n_iter, lr=lr, l2=l2
+        feats, corpus.select("doc_id", "label"), dim=DIM, n_iter=n_iter, lr=lr
     )
     rows = (
         feats.join(corpus.select("doc_id", "label"), "doc_id").orderBy("doc_id").collect()

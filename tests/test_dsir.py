@@ -100,6 +100,3 @@ def test_dsir_validation(spark):
     df = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
     with pytest.raises(ValueError):
         dsir.ngram_bucket_counts(df, dim=1)
-    c = dsir.ngram_bucket_counts(df, dim=8)
-    with pytest.raises(ValueError):
-        dsir.fit_log_ratio(c, c, dim=8, alpha=0.0)

@@ -26,7 +26,7 @@ def test_covariance_matches_numpy(spark):
 
 def test_minmax(spark):
     df, X, _ = _blob_df(spark)
-    out = ml.minmax_scale(df, ["a", "b"]).agg(
+    out = ml.minmax_scale(df, ["a", "b"], ml.column_minmax(df, ["a", "b"])).agg(
         F.min("a"), F.max("a"), F.min("b"), F.max("b")
     ).collect()[0]
     assert list(out) == [0.0, 1.0, 0.0, 1.0]
@@ -40,8 +40,6 @@ def test_pca_variance_and_auto_k():
     # clamps
     assert ml.optimal_pca_components(var, 3, 5) == 3
     assert ml.optimal_pca_components(var, 1, 1) == 1
-    # standard-norm: first eig < 1 at index 3 → min(4, ...)
-    assert ml.optimal_pca_components(var, 1, 5, standard_norm=True) == 2
 
 
 def test_pca_projection_matches_numpy(spark):
@@ -122,15 +120,25 @@ def test_silhouette(spark):
 
 
 def test_silhouette_md5_order_full_sample_invariant(spark):
-    # when sample_n covers the whole frame, the sample ORDER cannot
-    # matter — the portable md5 ordering and the default xxhash64
-    # ordering must produce the identical silhouette
+    # the md5-ordered sample does not depend on the input's partitioning,
+    # and when sample_n covers the whole frame it is the full silhouette
     df, _, _ = _blob_df(spark)
     out = ml.kmeans_assign(df, ["a", "b", "c"], np.array([[0, 0, 0], [10, 10, 0], [0, 10, 10]], dtype=float))
     n = out.count()
     a = ml.silhouette_sampled(out, ["a", "b", "c"], "cluster", "key", sample_n=n + 10)
-    b = ml.silhouette_sampled(out, ["a", "b", "c"], "cluster", "key", sample_n=n + 10, hash="md5")
+    b = ml.silhouette_sampled(out.repartition(7), ["a", "b", "c"], "cluster", "key", sample_n=n + 10)
     assert a == b
+    pdf = out.toPandas()
+    P, lab = pdf[["a", "b", "c"]].to_numpy(), pdf["cluster"].to_numpy()
+    d = np.sqrt(((P[:, None, :] - P[None, :, :]) ** 2).sum(-1))
+    s = []
+    for i in range(len(P)):
+        same = lab == lab[i]
+        same[i] = False
+        ai = d[i][same].mean()
+        bi = min(d[i][lab == o].mean() for o in np.unique(lab) if o != lab[i])
+        s.append((bi - ai) / max(ai, bi))
+    assert abs(a - float(np.mean(s))) < 1e-9
 
 
 def test_fit_scaled_pca_equals_two_pass(spark):
@@ -138,7 +146,7 @@ def test_fit_scaled_pca_equals_two_pass(spark):
     cols = ["a", "b", "c"]
     stats1 = ml.column_minmax(df, cols)
     pca1 = ml.fit_pca(ml.minmax_scale(df, cols, stats1), cols, n_components=2)
-    stats2, pca2, _ = ml.fit_scaled_pca_with_init(df, cols, n_components=2)
+    stats2, pca2, _, _ = ml.fit_scaled_pca_with_init(df, cols, n_components=2)
     assert stats1 == stats2
     np.testing.assert_allclose(pca1.mean, pca2.mean, rtol=1e-9)
     np.testing.assert_allclose(pca1.loadings, pca2.loadings, rtol=1e-7, atol=1e-10)
@@ -166,7 +174,7 @@ def test_fused_init_sample_bitwise_parity(spark):
         F.lit(5.0).alias("const"),  # constant column: lit(0.0) path
     )
     cols = ["a", "b", "c", "const"]
-    stats, pca, X_fused = ml.fit_scaled_pca_with_init(
+    stats, pca, X_fused, _ = ml.fit_scaled_pca_with_init(
         df, cols, n_components=2, key_col="url", init_sample=128, approx_rows=6000
     )
     assert X_fused is not None and X_fused.shape == (128, 2)
@@ -175,14 +183,14 @@ def test_fused_init_sample_bitwise_parity(spark):
     np.testing.assert_array_equal(X_fused, X_sep)
 
     # no hint -> no sample
-    _, _, none1 = ml.fit_scaled_pca_with_init(df, cols, n_components=2)
+    _, _, none1, _ = ml.fit_scaled_pca_with_init(df, cols, n_components=2)
     assert none1 is None
 
     # a hint within 4x the sample (frac = 4 * init_sample / approx_rows
     # >= 1) collects every row with no cutoff; a hint just above it
     # (0.5 < frac < 1) takes the cutoff — both equal the TopK sample
     for init_sample in (4096, 1024):
-        stats2, pca2, X2 = ml.fit_scaled_pca_with_init(
+        stats2, pca2, X2, _ = ml.fit_scaled_pca_with_init(
             df, cols, n_components=2, key_col="url", init_sample=init_sample, approx_rows=6000
         )
         proj2 = ml.pca_project(ml.minmax_scale(df, cols, stats2), pca2)
@@ -191,7 +199,7 @@ def test_fused_init_sample_bitwise_parity(spark):
         np.testing.assert_array_equal(X2, X2_sep)
 
     # absurdly large hint -> cutoff below every hash -> shortfall None
-    _, _, short = ml.fit_scaled_pca_with_init(
+    _, _, short, _ = ml.fit_scaled_pca_with_init(
         df, cols, n_components=2, key_col="url", init_sample=128, approx_rows=10**12
     )
     assert short is None

@@ -5,19 +5,21 @@ import pytest
 
 from webdq import multimodal
 
+_TRUNCATED_P6 = b"P6\n4 2\n255\n" + bytes([200] * 6)
+
 
 def test_ppm_real_decode_roundtrip(spark):
     """The pure-numpy PPM parser decodes a known image exactly."""
     w, h = 5, 3
     body = bytes(range(w * h * 3))
     payload = b"P6\n" + f"{w} {h}\n255\n".encode() + body
-    w2, h2, ch, mean, hist = multimodal._decode_one(payload)
+    w2, h2, ch, mean, hist = multimodal._image_features(payload)
     assert (w2, h2, ch) == (w, h, 3)
     assert abs(mean - np.mean(np.frombuffer(body, dtype=np.uint8))) < 1e-12
     assert abs(sum(hist) - 1.0) < 1e-6
     # comment lines in the header are PPM-legal
     payload_c = b"P6\n# a comment\n" + f"{w} {h}\n255\n".encode() + body
-    assert multimodal._decode_one(payload_c)[:2] == (w, h)
+    assert multimodal._image_features(payload_c)[:2] == (w, h)
 
 
 def test_ppm_media_from_documents(spark):
@@ -53,17 +55,21 @@ def test_wav_decode_matches_stdlib(spark):
 
 
 def test_compressed_codecs_fail_loudly_on_malformed(spark):
-    """JPEG and PNG decode for real now; malformed streams must fail
-    loudly (decode errors), never silently zero out."""
+    """P6, JPEG and PNG decode for real; malformed streams must fail
+    loudly (decode errors), never silently zero out or return plausible
+    wrong values."""
     import pytest as _pytest
 
     from webdq.jpegcodec import JpegDecodeError
     from webdq.pngcodec import PngDecodeError
 
     with _pytest.raises(JpegDecodeError):
-        multimodal._decode_one(b"\xff\xd8\xff\xe0" + b"\x00" * 32)
+        multimodal._image_features(b"\xff\xd8\xff\xe0" + b"\x00" * 32)
     with _pytest.raises(PngDecodeError):
-        multimodal._decode_one(b"\x89PNG\r\n\x1a\n" + b"\x00" * 32)
+        multimodal._image_features(b"\x89PNG\r\n\x1a\n" + b"\x00" * 32)
+    # a 4x2 P6 carrying 6 of its 24 body bytes
+    with _pytest.raises(ValueError):
+        multimodal._image_features(_TRUNCATED_P6)
 
 
 def test_png_roundtrip_lossless_and_thirdparty():
@@ -256,26 +262,17 @@ def test_resize_nearest_matches_numpy(spark):
         np.testing.assert_array_equal(got, exp, err_msg=f"img {i}")
 
 
-def test_resize_box_and_edges(spark):
+def test_resize_edges(spark):
     import numpy as np
     import pytest
 
-    # 4x4 gradient -> 2x2 box means (floor)
     img = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
     df = spark.createDataFrame([(0, bytearray(_ppm(img)))], "media_id long, payload binary")
-    out = multimodal.resize_images(df, 2, 2, method="box").collect()[0]
-    got = multimodal._decode_rgb(bytes(out["payload"]))
-    exp = np.empty((2, 2, 3), dtype=np.uint8)
-    for yi in range(2):
-        for xi in range(2):
-            blk = img[yi * 2 : yi * 2 + 2, xi * 2 : xi * 2 + 2].reshape(-1, 3).astype(np.int64)
-            exp[yi, xi] = blk.sum(axis=0) // 4
-    np.testing.assert_array_equal(got, exp)
-    # constant image stays constant under box, up- or down-sampled
+    # constant image stays constant, up- or down-sampled
     flat = np.full((5, 3, 3), 77, dtype=np.uint8)
     df2 = spark.createDataFrame([(1, bytearray(_ppm(flat)))], "media_id long, payload binary")
     got2 = multimodal._decode_rgb(
-        bytes(multimodal.resize_images(df2, 9, 2, method="box").collect()[0]["payload"])
+        bytes(multimodal.resize_images(df2, 9, 2).collect()[0]["payload"])
     )
     assert (got2 == 77).all()
     # undecodable payload -> total row, no task failure
@@ -284,8 +281,6 @@ def test_resize_box_and_edges(spark):
     assert r["payload"] is None and r["width"] == 0 and r["height"] == 0
     with pytest.raises(ValueError):
         multimodal.resize_images(df, 0, 4)
-    with pytest.raises(ValueError):
-        multimodal.resize_images(df, 4, 4, method="bilinear")
 
 
 # ---- audio resample ----
@@ -373,6 +368,7 @@ def test_corrupt_but_magic_matching_payloads_are_total(spark):
         b"\xff\xd8\xff\xe0trash",                # JPEG magic, garbage
         encode_png(img)[:20],                    # truncated PNG
         b"\x89PNG\r\n\x1a\n\x00\x00",            # PNG magic, no chunks
+        _TRUNCATED_P6,                           # P6 body 6 of 24 bytes
     ]
     df = spark.createDataFrame(
         [(i, bytearray(p)) for i, p in enumerate(bad_images)],

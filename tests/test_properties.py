@@ -68,6 +68,44 @@ def test_ecdf_matches_numpy_oracle(vals, low_threshold):
             assert abs(got - want) < 1e-12, (v, got, want)
 
 
+def test_ecdf_and_quantile_buckets_partitioning_invariant():
+    """``normalize.ecdf`` (both its low-cardinality and its bucketed
+    path) and ``textprep.quantile_buckets`` return the same values for
+    every ``spark.sql.shuffle.partitions`` in {4, 8, 32} and every input
+    partition count in {1, 7}."""
+    from webdq import textprep
+
+    spark = _get_spark()
+    rng = np.random.RandomState(17)
+    rows = [
+        (i, float(rng.randint(0, 5)), None if i % 13 == 0 else float(rng.standard_normal()),
+         round(float(rng.standard_normal()), 6), ("en", "de", "fr")[i % 3])
+        for i in range(600)
+    ]
+    base = spark.createDataFrame(rows, "doc_id long, lo double, hi double, score double, lang string")
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    got = {}
+    try:
+        for shuffle_parts in (4, 8, 32):
+            spark.conf.set(key, str(shuffle_parts))
+            for input_parts in (1, 7):
+                df = base.repartition(input_parts)
+                # 5 distinct lo values take the broadcast path, ~550 hi values the buckets
+                e = normalize.ecdf(df, ["lo", "hi"], low_card_threshold=16)
+                q = textprep.quantile_buckets(df, "score", by=["lang"], n_buckets=3)
+                got[(shuffle_parts, input_parts)] = (
+                    sorted((r["doc_id"], r["u_lo"], r["u_hi"]) for r in e.collect()),
+                    sorted((r["doc_id"], r["bucket"]) for r in q.collect()),
+                )
+    finally:
+        spark.conf.set(key, saved)
+    first = got[(4, 1)]
+    assert len(first[0]) == len(first[1]) == 600
+    for combo, out in got.items():
+        assert out == first, combo
+
+
 @settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
     text=st.text(

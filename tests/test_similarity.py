@@ -49,7 +49,7 @@ def test_ivf_topk_recall_and_exhaustive_exact(spark):
     bit-for-bit."""
     df, _ = _emb_df(spark)
     q = df.filter("vec_id < 6").selectExpr("vec_id as query_id", "embedding")
-    cents = similarity.ivf_fit(df, nlist=8, sample_n=120)
+    cents = similarity.ivf_fit(df, nlist=8)
     exact = similarity.cosine_topk(df, q, k=5)
     approx = similarity.ivf_topk(df, q, cents, k=5, nprobe=2)
     assert similarity.ann_recall(exact, approx) >= 0.8
@@ -61,8 +61,8 @@ def test_ivf_topk_recall_and_exhaustive_exact(spark):
 
 def test_ivf_fit_deterministic(spark):
     df, _ = _emb_df(spark)
-    c1 = similarity.ivf_fit(df, nlist=8, sample_n=120)
-    c2 = similarity.ivf_fit(df.repartition(9), nlist=8, sample_n=120)
+    c1 = similarity.ivf_fit(df, nlist=8)
+    c2 = similarity.ivf_fit(df.repartition(9), nlist=8)
     np.testing.assert_array_equal(c1, c2)
 
 

@@ -32,6 +32,28 @@ def test_lineage_crash_window_recomputes_stage(tmp_path, spark):
     assert rows == {"features": 400, "normalized": 400, "labels": 400}
 
 
+def test_resume_of_empty_run_after_crash_returns_empty_labels(tmp_path, spark):
+    """A checkpoint run over empty pages that crashed after writing
+    ``normalized`` resumes with no ECDF probe to say the input is
+    empty: it must return the same empty labelled frame as the fresh
+    run, not fit KMeans on no rows."""
+    pages = generate_pages(spark, 200).drop("_tier").limit(0)
+    wd = str(tmp_path / "empty")
+    cfg = PipelineConfig(k=5, kmeans_init_sample=256, workdir=wd)
+    first = run_pipeline(spark, pages, cfg)
+    assert first.count() == 0
+
+    for d in ("labels", os.path.join("_lineage", "stage=labels")):
+        shutil.rmtree(os.path.join(wd, d))
+    second = run_pipeline(spark, pages, cfg)
+    with open(os.path.join(wd, "metrics.json")) as f:
+        m = {r["stage"]: r for r in json.load(f)}
+    assert m["normalized"].get("skipped") and not m["labels"].get("skipped")
+    assert second.count() == 0
+    assert second.schema == first.schema
+    assert dict(second.dtypes) == {"url": "string", "cluster": "int", "keep": "boolean", "scrubbed_text": "string"}
+
+
 def _cached_rdd_ids(jsc) -> set[int]:
     """Ids of the persisted RDDs, less the ``localCheckpoint`` ones.
     Earlier tests (dbscan, connected components, BPE) leave checkpoint

@@ -233,8 +233,6 @@ def test_tfidf_vocab_bounds(spark):
 def test_bigram_lm_score_matches_python(spark):
     import math
 
-    import pytest
-
     texts = {
         1: "the cat sat on the mat",
         2: "the cat sat on the cat",
@@ -265,20 +263,6 @@ def test_bigram_lm_score_matches_python(spark):
         assert out[i]["n_transitions"] == len(trans)
         assert abs(out[i]["avg_logprob"] - lp) < 1e-9, i
 
-    # separate clean model corpus: unseen transitions hit the add-k floor
-    model = spark.createDataFrame([(10, "the cat sat")], "doc_id long, text string")
-    scored = {
-        r["doc_id"]: r
-        for r in textprep.bigram_lm_score(df, model_df=model).collect()
-    }
-    # model: big={(the,cat):1,(cat,sat):1}, ctx={the:1,cat:1}, V=3
-    exp4 = (
-        math.log((0 + 1.0) / (1 + 3.0))    # (the, mat) unseen, ctx(the)=1
-        + math.log((0 + 1.0) / (0 + 3.0))  # (mat, sat) unseen, ctx(mat)=0
-    ) / 2
-    assert abs(scored[4]["avg_logprob"] - exp4) < 1e-9
-    # repetitive text scores higher than the same tokens shuffled rare
-    assert scored[1]["avg_logprob"] > scored[4]["avg_logprob"]
     # partition invariance
     rep = {
         r["doc_id"]: r["avg_logprob"]
@@ -287,8 +271,6 @@ def test_bigram_lm_score_matches_python(spark):
     for i in texts:
         a, b = rep[i], out[i]["avg_logprob"]
         assert (a is None and b is None) or abs(a - b) < 1e-12
-    with pytest.raises(ValueError):
-        textprep.bigram_lm_score(df, add_k=0.0)
 
 
 # ---- quantile_buckets ----
@@ -462,16 +444,16 @@ def test_learn_bpe_incremental_path_parity(spark):
 
 
 def test_bigram_lm_degenerate_model_null_scores(spark):
-    """r6 advice: an empty/whitespace model corpus (V=0) must yield
-    NULL scores, not silently-propagating +Inf."""
+    """An empty/whitespace corpus (V=0) must yield NULL scores, not
+    silently-propagating +Inf."""
     import math
 
-    docs = spark.createDataFrame([(1, "a b c"), (2, "x y")], "doc_id long, text string")
-    model = spark.createDataFrame([(9, "   "), (10, "")], "doc_id long, text string")
-    out = textprep.bigram_lm_score(docs, model_df=model).collect()
-    assert len(out) == 2
+    empty = spark.createDataFrame([(9, "   "), (10, ""), (11, None)], "doc_id long, text string")
+    out = textprep.bigram_lm_score(empty).collect()
+    assert len(out) == 3
     for r in out:
-        assert r["avg_logprob"] is None, r
-    # sane model still scores finitely
-    ok = textprep.bigram_lm_score(docs, model_df=docs).collect()
+        assert r["avg_logprob"] is None and r["n_transitions"] == 0, r
+    # a sane corpus scores finitely
+    docs = spark.createDataFrame([(1, "a b c"), (2, "x y")], "doc_id long, text string")
+    ok = textprep.bigram_lm_score(docs).collect()
     assert all(r["avg_logprob"] is not None and math.isfinite(r["avg_logprob"]) for r in ok)

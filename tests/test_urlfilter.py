@@ -63,8 +63,8 @@ def test_blocklist_dataframe_path_parity(spark, urls):
 def test_hostile_host_fanout_capped(spark):
     deep = "https://" + ".".join(["x"] * 1000) + ".example.com/p"
     df = spark.createDataFrame([(0, deep)], "doc_id long, url string")
-    n = df.select(F.size(urlfilter.domain_suffix_chain(max_labels=10)).alias("n")).collect()[0]["n"]
-    assert n == 10
+    n = df.select(F.size(urlfilter.domain_suffix_chain()).alias("n")).collect()[0]["n"]
+    assert n == urlfilter.MAX_LABELS == 10
     # the full host (1002 labels) is beyond the cap → an exact-host
     # entry cannot match, but a short parent suffix still does
     out = urlfilter.domain_blocklist_flag(df, ["example.com"], id_col="doc_id").collect()[0]
@@ -87,23 +87,22 @@ def test_pattern_flag_and_drop_mode(urls):
             blocklist=["ads.example.com"],
             patterns=pats,
             id_col="doc_id",
-            mode="drop",
-        ).collect()
+        )
+        .filter(~F.col("blocked_domain") & ~F.col("blocked_pattern"))
+        .collect()
     }
     assert kept == {2, 3, 4, 5}
 
 
-def test_empty_patterns_and_bad_mode(urls):
+def test_empty_patterns(urls):
     out = urlfilter.url_pattern_flag(urls, [])
     assert all(not r["blocked_pattern"] for r in out.collect())
-    with pytest.raises(ValueError):
-        urlfilter.apply_url_filters(urls, mode="nuke")
 
 
 def test_null_url_parity_between_paths(spark):
     # ADVICE r4: list path returned NULL blocked_domain for NULL urls
-    # (drop mode then silently dropped the row); both paths must
-    # coalesce to false
+    # (a filter on the flags then silently dropped the row); both paths
+    # must coalesce to false
     rows = [(0, None), (1, "https://ads.example.com/x")]
     df = spark.createDataFrame(rows, "doc_id long, url string")
     lst = urlfilter.domain_blocklist_flag(df, ["ads.example.com"], id_col="doc_id")
@@ -112,7 +111,9 @@ def test_null_url_parity_between_paths(spark):
     for out in (lst, dfp):
         got = {r["doc_id"]: r["blocked_domain"] for r in out.collect()}
         assert got == {0: False, 1: True}
-    dropped = urlfilter.apply_url_filters(df, ["ads.example.com"], id_col="doc_id", mode="drop")
+    dropped = urlfilter.apply_url_filters(df, ["ads.example.com"], id_col="doc_id").filter(
+        ~F.col("blocked_domain") & ~F.col("blocked_pattern")
+    )
     assert {r["doc_id"] for r in dropped.collect()} == {0}
 
 

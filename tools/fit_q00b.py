@@ -55,7 +55,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     )
     proj = ml.pca_project(scaled, model).persist()
     pc_cols = ["pc_0", "pc_1", "pc_2"]
-    km = ml.kmeans_fit(proj, pc_cols, k=4, key_col="doc_id", seed=42, init_sample=512)
+    km = ml.kmeans_fit(proj, pc_cols, k=4, key_col="doc_id", init_sample=512)
     centers_r = [[round(float(c), 6) for c in row] for row in km.centers]
 
     assigned = ml.kmeans_assign(proj, pc_cols, np.array(centers_r))

@@ -154,6 +154,10 @@ def _batch_stats(pdf: pd.DataFrame, w: np.ndarray, b: float, dim: int):
     return gw, gb, loss, n
 
 
+# logreg_fit's L2 penalty on the weights
+L2 = 1e-6
+
+
 def logreg_fit(
     feats: DataFrame,
     labels: DataFrame,
@@ -162,10 +166,10 @@ def logreg_fit(
     dim: int = 1 << 15,
     n_iter: int = 30,
     lr: float = 2.0,
-    l2: float = 1e-6,
 ) -> LogRegModel:
-    """Full-batch GD on the joined (features, label) frame. One cached
-    frame, one mapInPandas scan per iteration, O(dim) driver state."""
+    """Full-batch GD with L2 penalty ``L2`` on the joined (features,
+    label) frame. One cached frame, one mapInPandas scan per iteration,
+    O(dim) driver state."""
     data = feats.join(
         labels.select(F.col(id_col), F.col(label_col).cast("double").alias("label")),
         id_col,
@@ -194,7 +198,7 @@ def logreg_fit(
             gb = sum(r["gb"] for r in parts) / n_tot
             losses.append(sum(r["loss"] for r in parts) / n_tot)
             step = lr / (1.0 + 0.1 * it)
-            w = w - step * (gw + l2 * w)
+            w = w - step * (gw + L2 * w)
             b = b - step * gb
     finally:
         data.unpersist()
@@ -202,9 +206,9 @@ def logreg_fit(
 
 
 def predict(
-    feats: DataFrame, model: LogRegModel, id_col: str = "doc_id", threshold: float = 0.5
+    feats: DataFrame, model: LogRegModel, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, prob, pred) — one scalar Arrow pass; the D-sized weight
+    """(id, prob, pred = prob ≥ 0.5) — one scalar Arrow pass; the D-sized weight
     vector rides into the workers via the UDF closure (at cluster
     scale: sc.broadcast it and reference bc.value — same shape)."""
     w, b = model.weights, model.bias
@@ -221,4 +225,4 @@ def predict(
     return feats.select(
         F.col(id_col),
         _prob("buckets", "vals").alias("prob"),
-    ).withColumn("pred", (F.col("prob") >= F.lit(float(threshold))).cast("int"))
+    ).withColumn("pred", (F.col("prob") >= F.lit(0.5)).cast("int"))

@@ -391,9 +391,8 @@ def decontaminate(
     text_col: str = "text",
     k: int = 3,
     window: int = 4,
-    mode: str = "flag",
 ) -> DataFrame:
-    """Benchmark decontamination: flag (or drop) corpus documents that
+    """Benchmark decontamination: flag corpus documents that
     share any winnowing fingerprint with ``benchmark`` — i.e. any
     common token run of length ≥ k + window − 1 is guaranteed to be
     caught (the winnowing guarantee, Schleimer et al. '03). This is
@@ -402,11 +401,8 @@ def decontaminate(
     Shape: fingerprint both sides (one shuffle each), broadcast the
     benchmark's DISTINCT fingerprint set (benchmarks are small —
     thousands of docs; for a huge benchmark drop the hint and let the
-    fingerprint equi-join shuffle), then one semi/anti join per doc.
-    ``mode='flag'`` returns df + boolean ``contaminated``;
-    ``mode='drop'`` returns only clean rows."""
-    if mode not in ("flag", "drop"):
-        raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
+    fingerprint equi-join shuffle), then one left join per doc.
+    Returns df + boolean ``contaminated`` (filter on it to drop)."""
     fps = winnow_fingerprints(df, id_col=id_col, text_col=text_col, k=k, window=window)
     bfp = (
         winnow_fingerprints(benchmark, id_col=id_col, text_col=text_col, k=k, window=window)
@@ -418,8 +414,6 @@ def decontaminate(
         .select(F.col("doc_id").alias(id_col))
         .dropDuplicates()
     )
-    if mode == "drop":
-        return df.join(hit, id_col, "left_anti")
     return df.join(
         hit.withColumn("_hit", F.lit(True)), id_col, "left"
     ).withColumn("contaminated", F.coalesce(F.col("_hit"), F.lit(False))).drop("_hit")
@@ -430,10 +424,9 @@ def dedup_against(
     corpus_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "flag",
 ) -> DataFrame:
-    """Incremental (delta) dedup: flag or drop NEW documents whose
-    exact text already exists in the ingested corpus — the
+    """Incremental (delta) dedup: flag NEW documents whose exact text
+    already exists in the ingested corpus (boolean ``in_corpus``) — the
     batch-over-batch production shape. One equi-join on
     md5(text) (same fingerprint as exact_dedup); the corpus side is
     pre-aggregated to distinct fingerprints, so the join's build input
@@ -442,13 +435,9 @@ def dedup_against(
     At 10^12 docs the corpus fingerprint set is a persisted stage
     table; bucketing it on the fingerprint (``bucketBy``) makes every
     delta's probe exchange-free."""
-    if mode not in ("flag", "drop"):
-        raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
     fp = F.md5(F.coalesce(F.col(text_col), F.lit("")))
     seen = corpus_df.select(fp.alias("_fp")).dropDuplicates()
     tagged = new_df.withColumn("_fp", fp)
-    if mode == "drop":
-        return tagged.join(seen, "_fp", "left_anti").drop("_fp")
     return (
         tagged.join(seen.withColumn("_seen", F.lit(True)), "_fp", "left")
         .withColumn("in_corpus", F.coalesce(F.col("_seen"), F.lit(False)))
@@ -461,7 +450,6 @@ def line_dedup_corpus(
     text_col: str = "text",
     min_count: int = 2,
     out_col: str = "text_deduped",
-    sep: str = "\n",
 ) -> DataFrame:
     """CORPUS-WIDE line-level deduplication with document
     reconstruction — the C4/CCNet boilerplate-removal step (navbars,
@@ -499,7 +487,7 @@ def line_dedup_corpus(
     lines = df.select(
         F.col(id_col),
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), sep)
+            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
         ).alias("_idx", "_line"),
     ).withColumn("_fp", F.md5(F.col("_line")))
     nonempty = lines.filter(F.col("_line") != "")
@@ -526,7 +514,7 @@ def line_dedup_corpus(
         .agg(F.array_sort(F.collect_list(F.struct("_idx", "_line"))).alias("_ls"))
         .select(
             F.col(id_col),
-            F.concat_ws(sep, F.transform("_ls", lambda s: s["_line"])).alias(out_col),
+            F.concat_ws("\n", F.transform("_ls", lambda s: s["_line"])).alias(out_col),
         )
     )
     return df.select(id_col).join(rebuilt, id_col, "left").select(
@@ -541,7 +529,6 @@ def span_dedup_corpus(
     k: int = 8,
     min_count: int = 2,
     out_col: str = "text_deduped",
-    keep_first: bool = True,
 ) -> DataFrame:
     """CORPUS-WIDE exact substring (token-span) deduplication — the
     Lee et al. 2021 "Deduplicating Training Data Makes Language Models
@@ -550,8 +537,7 @@ def span_dedup_corpus(
     the corpus is a duplicated span; every NON-FIRST occurrence (first
     = minimum (id, position), deterministic and partition-invariant)
     is excised from its document, and the surviving tokens are
-    reassembled in order. ``keep_first=False`` excises every
-    occurrence (the "remove boilerplate everywhere" variant). Unlike
+    reassembled in order. Unlike
     line dedup the span grid is overlapping, so a duplicated region of
     any length >= k is covered by its k-windows without an alignment
     assumption. Like the reference suffix-array formulation this is
@@ -597,14 +583,9 @@ def span_dedup_corpus(
         F.count(F.lit(1)).alias("_n"),
         F.min(F.struct(F.col(id_col), F.col("_g"))).alias("_first"),
     )
-    dup = grams.join(stats, "_fp").filter(F.col("_n") >= int(min_count))
-    if keep_first:
-        dup = dup.filter(
-            ~(
-                (F.col(id_col) == F.col(f"_first.{id_col}"))
-                & (F.col("_g") == F.col("_first._g"))
-            )
-        )
+    dup = grams.join(stats, "_fp").filter(F.col("_n") >= int(min_count)).filter(
+        ~((F.col(id_col) == F.col(f"_first.{id_col}")) & (F.col("_g") == F.col("_first._g")))
+    )
     removed = dup.select(
         F.col(id_col),
         F.explode(F.sequence(F.col("_g"), F.col("_g") + (k - 1))).alias("_t"),
@@ -747,17 +728,15 @@ def neardup_against(
     text_col: str = "text",
     n_bands: int = 8,
     shingle_n: int = 1,
-    rows_per_band: int = 1,
-    mode: str = "flag",
     flag_col: str = "near_dup_in_corpus",
 ) -> DataFrame:
-    """Incremental NEAR-dup dedup: flag or drop NEW documents that
-    share any MinHash LSH bucket with the already-ingested corpus —
+    """Incremental NEAR-dup dedup: flag (boolean ``flag_col``) NEW
+    documents that share any MinHash LSH bucket with the ingested corpus —
     the delta-batch production shape of ``minhash_lsh_pairs`` (and the
     near-dup analog of ``dedup_against``'s exact check). A new doc is
     a candidate iff some (band, minhash) of its signature appears in
     the corpus signature set; precision/recall tune exactly as in
-    ``minhash_signatures`` (n_bands, shingle_n, rows_per_band).
+    ``minhash_signatures`` (n_bands, shingle_n; one row per band).
 
     Shape: both sides run the single-explode signature aggregation;
     the corpus side collapses to DISTINCT (band, minhash) — one row
@@ -768,14 +747,12 @@ def neardup_against(
     stage table bucketed on (band, minhash) (``bucketBy`` makes every
     delta's probe exchange-free), refreshed incrementally by unioning
     each accepted delta's signatures."""
-    if mode not in ("flag", "drop"):
-        raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
     sig_new = minhash_signatures(
-        new_df, id_col, text_col, n_bands, shingle_n, rows_per_band
+        new_df, id_col, text_col, n_bands, shingle_n
     )
     buckets = (
         minhash_signatures(
-            corpus_df, id_col, text_col, n_bands, shingle_n, rows_per_band
+            corpus_df, id_col, text_col, n_bands, shingle_n
         )
         .select("band", "minhash")
         .dropDuplicates()
@@ -785,8 +762,6 @@ def neardup_against(
         .select(F.col("doc_id").alias(id_col))
         .dropDuplicates()
     )
-    if mode == "drop":
-        return new_df.join(hit, id_col, "left_anti")
     return (
         new_df.join(hit.withColumn("_hit", F.lit(True)), id_col, "left")
         .withColumn(flag_col, F.coalesce(F.col("_hit"), F.lit(False)))

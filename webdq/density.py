@@ -43,7 +43,6 @@ def dbscan(
     eps: float,
     min_pts: int,
     key_col: str,
-    max_iter: int = 50,
     max_cell: int | None = None,
     eager: bool = True,
 ) -> DataFrame:
@@ -156,15 +155,14 @@ def dbscan(
 
     # min-label propagation + path halving over the core graph — the
     # shared kernel in webdq.graph (eager localCheckpoint per round,
-    # monotone-sum convergence probe, loud warning on max_iter
-    # exhaustion — silent partial merges would look like extra
-    # clusters, ADVICE r3). core_edges already carries both
+    # monotone-sum convergence probe, loud warning when its
+    # graph.MAX_ROUNDS run out — silent partial merges would look like
+    # extra clusters, ADVICE r3). core_edges already carries both
     # directions, so symmetrize=False.
     lab = connected_components(
         core_edges,
         nodes=core.select("_id"),
         node_col="_id",
-        max_iter=max_iter,
         symmetrize=False,
     ).select("_id", F.col("component").alias("lab"))
 

@@ -78,16 +78,14 @@ def fit_log_ratio(
     target_counts: DataFrame,
     raw_counts: DataFrame,
     dim: int,
-    alpha: float = 1.0,
 ) -> DataFrame:
     """(bucket, w) for EVERY bucket in [0, dim): the Laplace-smoothed
     log-likelihood ratio ln p_target(b) − ln p_raw(b), fit from two
     ``ngram_bucket_counts`` outputs (any id column; only (bucket, n)
-    are read). A bucket unseen on one side gets the α-smoothed floor —
+    are read), add-1 smoothed. A bucket unseen on one side gets the
+    smoothed floor —
     the dense spark.range spine means ``dsir_score`` can inner-join
     without dropping documents."""
-    if alpha <= 0:
-        raise ValueError(f"alpha must be positive, got {alpha}")
     spark = raw_counts.sparkSession
     t = target_counts.groupBy("bucket").agg(F.sum("n").alias("_ct"))
     r = raw_counts.groupBy("bucket").agg(F.sum("n").alias("_cr"))
@@ -101,8 +99,8 @@ def fit_log_ratio(
         )
     )
     spine = spark.range(int(dim)).select(F.col("id").cast("int").alias("bucket"))
-    a = float(alpha)
-    ad = a * float(dim)
+    a = 1.0  # add-1 smoothing
+    ad = float(dim)
     ct = F.coalesce(F.col("_ct"), F.lit(0)).cast("double")
     cr = F.coalesce(F.col("_cr"), F.lit(0)).cast("double")
     return (

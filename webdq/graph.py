@@ -32,13 +32,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# connected_components gives up (with a RuntimeWarning) after this many
+# label-propagation rounds
+MAX_ROUNDS = 50
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     nodes: DataFrame | None = None,
     node_col: str = "_id",
-    max_iter: int = 50,
     symmetrize: bool = True,
 ) -> DataFrame:
     """Label each node with the minimum node id in its connected
@@ -83,7 +87,7 @@ def connected_components(
     lab = nodes.select(node_col, F.col(node_col).alias("lab")).localCheckpoint(eager=True)
     prev_sum = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         cand = (
             e.join(lab.select(F.col(node_col).alias("src"), F.col("lab").alias("_sl")), "src")
             .groupBy("dst")
@@ -119,7 +123,7 @@ def connected_components(
         prev_sum = s
     if not converged:
         warnings.warn(
-            f"connected_components did not converge in {max_iter} rounds; "
+            f"connected_components did not converge in {MAX_ROUNDS} rounds; "
             "labels may be partially merged",
             RuntimeWarning,
             stacklevel=2,

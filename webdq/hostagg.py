@@ -108,16 +108,14 @@ def run_host_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     k: int = 4,
-    pca_components: int = 3,
     keep_top: int = 1,
-    init_sample: int = 2048,
-    seed: int = 42,
     workdir: str | None = None,
     broadcast_hosts_threshold: int = 10_000_000,
 ) -> DataFrame:
     """pages → per-page features → host metadata → host clusters →
     (url, host, host_cluster, keep): every page labeled by ITS HOST's
-    cluster — the reference's two-level labeling shape.
+    cluster — the reference's two-level labeling shape. Hosts take
+    3 principal components and a 2048-host KMeans init sample.
 
     The host dimension joins back onto pages map-side (broadcast) only
     while the host count stays ≤ ``broadcast_hosts_threshold`` (default
@@ -135,11 +133,7 @@ def run_host_pipeline(
     (+ per-partition lineage and metrics) as the page pipeline."""
     from .pipeline import PipelineConfig, StageRunner, cluster_documents, extract_features
 
-    # auto-PCA (pca_components=0) clamps to [2, 12] components on hosts
-    cfg = PipelineConfig(
-        workdir=workdir, k=k, pca_components=pca_components, pca_kmin=2, pca_kmax=12,
-        kmeans_init_sample=init_sample, seed=seed,
-    )
+    cfg = PipelineConfig(workdir=workdir, k=k, pca_components=3, kmeans_init_sample=2048)
     runner = StageRunner(spark, workdir)
     done = runner.resume("host_features", "host_metadata", "host_labels")
     if done is not None:

@@ -89,8 +89,9 @@ def cluster_means(df: DataFrame, cluster_col: str, cols: list[str], k: int) -> t
 # ---------------------------------------------------------------- minmax
 
 def column_minmax(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, float]]:
-    """One aggregation: (min, max) per column. Reference M1 'RobustScaler
-    (0,100) == MinMax' (/root/reference/osmdq/analysis_tasks.py:470-471)."""
+    """One aggregation: (min, max) per column, for ``minmax_scale``
+    outside the pipelines (tools/fit_q00b.py) and as the reference
+    ``fit_scaled_pca_with_init``'s fused min/max is tested against."""
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
@@ -98,8 +99,10 @@ def column_minmax(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, floa
     return {c: (float(row[f"mn_{c}"] or 0.0), float(row[f"mx_{c}"] or 0.0)) for c in cols}
 
 
-def minmax_scale(df: DataFrame, cols: list[str], stats: dict[str, tuple[float, float]] | None = None) -> DataFrame:
-    stats = stats or column_minmax(df, cols)
+def minmax_scale(df: DataFrame, cols: list[str], stats: dict[str, tuple[float, float]]) -> DataFrame:
+    """Scale ``cols`` to [0, 1] by the (min, max) ``stats`` (constant
+    columns become exactly 0.0). Reference M1 'RobustScaler (0,100) ==
+    MinMax' (osmdq/analysis_tasks.py:470-471 of the reference)."""
     out = {}
     for c in cols:
         mn, mx = stats[c]
@@ -149,14 +152,13 @@ def pca_variance(eigvals: np.ndarray) -> dict[str, np.ndarray]:
     return {"eig": eig, "varexp": varexp, "cumvar": np.cumsum(varexp)}
 
 
-def optimal_pca_components(
-    variance: dict[str, np.ndarray], nb_min_dim: int, nb_max_dim: int, standard_norm: bool = False
-) -> int:
-    """Smallest i+1 with cumvar>70% (eig<1 rule when standard-normalized),
-    clamped — reference optimal_PCA_components semantics."""
+def optimal_pca_components(variance: dict[str, np.ndarray], nb_min_dim: int, nb_max_dim: int) -> int:
+    """Smallest i+1 with cumvar>70%, clamped to [nb_min_dim, nb_max_dim]
+    — reference optimal_PCA_components semantics on min-max scaled
+    features (its eig<1 rule applies only to standard-normalized ones)."""
     candidate = 0
-    for i in range(len(variance["eig"])):
-        if (standard_norm and variance["eig"][i] < 1) or variance["cumvar"][i] > 70:
+    for i in range(len(variance["cumvar"])):
+        if variance["cumvar"][i] > 70:
             candidate = i + 1
             break
     return min(max(candidate, nb_min_dim), nb_max_dim)
@@ -171,10 +173,11 @@ def fit_scaled_pca_with_init(
     key_col: str | None = None,
     init_sample: int = 0,
     approx_rows: int | None = None,
-) -> tuple[dict[str, tuple[float, float]], PCAModel, np.ndarray | None]:
+) -> tuple[dict[str, tuple[float, float]], PCAModel, np.ndarray | None, int]:
     """Min-max scaling + PCA fit, optionally with the downstream KMeans
     init sample, all in ONE aggregation (the driver-synchronous job
-    count is the non-scaling term — VERDICT r3).
+    count is the non-scaling term — VERDICT r3). Returns (min-max
+    stats, PCA model, init sample or None, row count).
 
     The aggregation computes min/max AND raw covariance; the scaled
     covariance follows analytically (cov_z[i,j] = cov_x[i,j]/(r_i r_j),
@@ -198,7 +201,7 @@ def fit_scaled_pca_with_init(
     minmax_scale/pca_project arithmetic operation-for-operation (same
     IEEE doubles, same left-associated accumulation) — the returned
     matrix is bitwise-identical to init_sample_matrix over the
-    projected frame (tested). Returns None as the third element on
+    projected frame (tested). The sample is None on
     shortfall (hint too high ⇒ too few rows under the cutoff) or when
     fusion wasn't requested; callers fall back to the separate TopK
     job."""
@@ -257,7 +260,7 @@ def fit_scaled_pca_with_init(
             X_pc = _project_sample_rows(
                 [[float(s[f"f{i}"]) for i in range(d)] for s in samp], stats, model
             )
-    return stats, model, X_pc
+    return stats, model, X_pc, n
 
 
 def _project_sample_rows(
@@ -387,16 +390,20 @@ def init_sample_matrix(df: DataFrame, cols: list[str], key_col: str, init_sample
     return np.array([[float(r[c]) for c in cols] for r in samp])
 
 
+# kmeans_fit: k-means++ restarts on the init sample (seeds _SEED.._SEED
+# + _N_INIT - 1) and the Lloyd stop rule (squared center shift < _TOL)
+_N_INIT = 10
+_SEED = 42
+_TOL = 1e-8
+
+
 def kmeans_fit(
     df: DataFrame,
     cols: list[str],
     k: int,
     key_col: str,
     max_iter: int = 25,
-    tol: float = 1e-8,
     init_sample: int = 4096,
-    n_init: int = 10,
-    seed: int = 42,
     compute_inertia: bool = False,
     sample_X: np.ndarray | None = None,
 ) -> KMeansModel:
@@ -405,12 +412,13 @@ def kmeans_fit(
     1. Take the ``init_sample`` rows with smallest xxhash64(key) — a
        deterministic, order/partition-independent pseudo-random sample
        (distributed TopK, no global sort).
-    2. On the driver: ``n_init`` k-means++ restarts + Lloyd on the
-       sample; keep the lowest-inertia centers (the reference's
+    2. On the driver: ``_N_INIT`` seeded k-means++ restarts + Lloyd on
+       the sample; keep the lowest-inertia centers (the reference's
        sklearn n_init=100 semantics at sample scale).
     3. Distributed Lloyd refinement: each iteration = one observed
        pass (``cluster_means``: one job, one stage, no exchange)
-       producing k counts and k×d exact sums. The session's
+       producing k counts and k×d exact sums, until the squared center
+       shift drops below ``_TOL`` or ``max_iter`` rounds. The session's
        configuration is never touched.
 
     ``sample_X`` short-circuits step 1 so a k-sweep (auto_kmeans)
@@ -418,8 +426,8 @@ def kmeans_fit(
     """
     X = sample_X if sample_X is not None else init_sample_matrix(df, cols, key_col, init_sample)
     best, best_cost = None, math.inf
-    for t in range(n_init):
-        c0 = _kmeanspp_init(X, k, seed + t)
+    for t in range(_N_INIT):
+        c0 = _kmeanspp_init(X, k, _SEED + t)
         c = _lloyd_numpy(X, c0)
         cost = float(((X[:, None, :] - c[None, :, :]) ** 2).sum(-1).min(1).sum())
         if cost < best_cost:
@@ -434,7 +442,7 @@ def kmeans_fit(
         new = np.where(sizes[:, None] > 0, means, centers)
         shift = float(((new - centers) ** 2).sum())
         centers = new
-        if shift < tol:
+        if shift < _TOL:
             break
 
     # inertia is diagnostics (elbow sweep) — skip the extra scan unless
@@ -472,23 +480,19 @@ def auto_kmeans(
     key_col: str,
     nbmin_clusters: int = 3,
     nbmax_clusters: int = 8,
-    sample_X: np.ndarray | None = None,
-    **fit_kw,
+    init_sample: int = 4096,
 ) -> tuple[int, dict[int, "KMeansModel"]]:
     """The reference's AutoKMeans flagship
     (/root/reference/osmdq/analysis_tasks.py:809-873): fit KMeans for
     k ∈ [kmin−1, kmax+1], apply the elbow 2nd-derivative rule over the
     inertias of k ∈ [kmin, kmax], return (chosen k, all fitted models).
     Each fit reuses the same persisted input AND the same init sample
-    (one distributed TopK for the whole sweep — or zero extra jobs when
-    the caller passes ``sample_X`` from the fused PCA scan); inertia is
-    one aggregation per k."""
-    X = sample_X if sample_X is not None else init_sample_matrix(
-        df, cols, key_col, int(fit_kw.get("init_sample", 4096))
-    )
+    (one distributed TopK for the whole sweep); inertia is one
+    aggregation per k."""
+    X = init_sample_matrix(df, cols, key_col, init_sample)
     models: dict[int, KMeansModel] = {}
     for k in range(nbmin_clusters - 1, nbmax_clusters + 2):
-        models[k] = kmeans_fit(df, cols, k=k, key_col=key_col, compute_inertia=True, sample_X=X, **fit_kw)
+        models[k] = kmeans_fit(df, cols, k=k, key_col=key_col, compute_inertia=True, sample_X=X)
     inertias = [models[k].inertia for k in range(nbmin_clusters, nbmax_clusters + 1)]
     best = compute_nb_clusters(inertias, nbmin_clusters)
     return best, models
@@ -500,21 +504,14 @@ def silhouette_sampled(
     cluster_col: str,
     key_col: str,
     sample_n: int = 2000,
-    hash: str = "xxhash64",
 ) -> float:
     """Diagnostic sampled silhouette (reference caps at 2000 rows,
     /root/reference/osmdq/unsupervised_learning.py:22). Deterministic
-    hash-ordered sample; numpy on the driver. ``hash='md5'`` orders
-    the sample by the md5 hex digest of the key instead of xxhash64 —
-    engine-portable, so an external oracle can replay the exact sample
-    (the q72 cross-check); xxhash64 stays the cheaper default."""
-    h = (
-        F.md5(F.col(key_col).cast("string"))
-        if hash == "md5"
-        else F.xxhash64(F.col(key_col))
-    )
+    sample: the ``sample_n`` rows with the smallest md5 hex digest of
+    the key — engine-portable, so an external oracle can replay the
+    exact sample (the q72 cross-check); numpy on the driver."""
     samp = (
-        df.select(h.alias("_h"), F.col(cluster_col).alias("_c"), *cols)
+        df.select(F.md5(F.col(key_col).cast("string")).alias("_h"), F.col(cluster_col).alias("_c"), *cols)
         .orderBy("_h")
         .limit(sample_n)
         .collect()

@@ -14,7 +14,7 @@ scanline unfiltering), RIFF/WAVE PCM16 audio, and uncompressed-RGB
 RIFF/AVI video — every image/audio/video format the contract names
 decodes for real, each validated against third-party files and/or a
 value-exact DuckDB oracle (q37/q48/q53). Unknown magic yields zeroed
-features; swapping any ``_decode_one`` branch for PIL/ffmpeg changes
+features; swapping any ``_decode_rgb`` branch for PIL/ffmpeg changes
 nothing else. Test media come from the query fixture's documents table
 (``*_media_from_documents``) or the AVI writer (``synth_avi_media``).
 """
@@ -75,63 +75,63 @@ def _hist16(body: np.ndarray) -> np.ndarray:
     return hist / s if s else hist
 
 
-def _decode_ppm(payload: bytes) -> tuple[int, int, int, float, np.ndarray]:
+def _decode_ppm(payload: bytes) -> np.ndarray:
     """REAL binary-PPM (P6) parser, pure numpy: ASCII header
     'P6 <w> <h> <maxval>' (any whitespace, # comments allowed), one
-    whitespace byte, then raw RGB."""
+    whitespace byte, then w·h·3 raw RGB bytes (any tail is ignored).
+    A header that does not parse or a short body raises ValueError."""
     import re
 
     m = re.match(rb"P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s", payload)
     if not m:
-        return 0, 0, 0, 0.0, np.zeros(16, dtype=np.float32)
+        raise ValueError("P6 payload without a parsable header")
     w, h = int(m.group(1)), int(m.group(2))
-    body = np.frombuffer(payload, dtype=np.uint8, count=min(w * h * 3, len(payload) - m.end()), offset=m.end())
-    return w, h, 3, float(body.mean()) if len(body) else 0.0, _hist16(body)
+    body = payload[m.end() : m.end() + w * h * 3]
+    if len(body) < w * h * 3:
+        raise ValueError(f"P6 {w}x{h} body has {len(body)} of {w * h * 3} bytes")
+    return np.frombuffer(body, dtype=np.uint8).reshape(h, w, 3)
 
 
-def _decode_one(payload: bytes) -> tuple[int, int, int, float, np.ndarray]:
-    zeros = (0, 0, 0, 0.0, np.zeros(16, dtype=np.float32))
+def _decode_rgb(payload: bytes) -> np.ndarray | None:
+    """(h, w, 3) uint8 pixels of a P6, baseline-JPEG or PNG payload via
+    the real codecs — the one image dispatcher. None for a NULL, short
+    (< 8 bytes) or foreign-magic payload; a payload whose magic matches
+    but whose body is malformed raises (ValueError, JpegDecodeError,
+    PngDecodeError, ...), never returns plausible wrong pixels."""
     if payload is None or len(payload) < 8:
-        return zeros
+        return None
     payload = bytes(payload)
     if payload[:2] == b"P6":
         return _decode_ppm(payload)
     if payload[:2] == b"\xff\xd8":
         from .jpegcodec import decode_jpeg
 
-        rgb = decode_jpeg(payload)  # (h, w, 3) uint8
-        body = rgb.reshape(-1)
-        return (
-            int(rgb.shape[1]),
-            int(rgb.shape[0]),
-            3,
-            float(body.mean()) if len(body) else 0.0,
-            _hist16(body),
-        )
+        return decode_jpeg(payload)
     if payload[:4] == b"\x89PNG":
         from .pngcodec import decode_png
 
-        rgb = decode_png(payload)  # (h, w, 3) uint8
-        body = rgb.reshape(-1)
-        return (
-            int(rgb.shape[1]),
-            int(rgb.shape[0]),
-            3,
-            float(body.mean()) if len(body) else 0.0,
-            _hist16(body),
-        )
-    return zeros
+        return decode_png(payload)
+    return None
+
+
+def _image_features(payload: bytes) -> tuple[int, int, int, float, np.ndarray]:
+    rgb = _decode_rgb(payload)
+    if rgb is None:
+        return 0, 0, 0, 0.0, np.zeros(16, dtype=np.float32)
+    body = rgb.reshape(-1)
+    return int(rgb.shape[1]), int(rgb.shape[0]), 3, float(body.mean()) if len(body) else 0.0, _hist16(body)
 
 
 def decode_image_features(df: DataFrame) -> DataFrame:
     """payload → (width, height, channels, mean_byte, 16-bin byte
     histogram) via ``mapInPandas`` (iterator of Arrow batches; constant
     memory). PPM (P6), baseline JPEG and PNG all decode for real
-    (pure numpy/python)."""
+    (pure numpy/python); foreign payloads yield zeroed features and a
+    malformed body under a matching magic fails the task."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = [_decode_one(p) for p in b["payload"]]
+            rows = [_image_features(p) for p in b["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": b["media_id"].to_numpy(),
@@ -336,11 +336,13 @@ def _avi_frame_bytes(media_id: int, frame_no: int, w: int, h: int) -> np.ndarray
     return ((media_id * 31 + frame_no * 7 + idx) % 256).astype(np.uint8)
 
 
-def synth_avi_media(spark, n: int, partitions: int = 8, fps: int = 10) -> DataFrame:
-    """Byte-valid uncompressed-RGB AVI payloads, generated
+def synth_avi_media(spark, n: int, partitions: int = 8) -> DataFrame:
+    """Byte-valid uncompressed-RGB AVI payloads at 10 fps, generated
     deterministically per media_id inside ``mapInPandas`` — parseable
     by any AVI reader that handles the standard 'DIB ' form."""
     import struct
+
+    fps = 10
 
     def build_one(mid: int) -> bytes:
         w = 8 + mid % 8
@@ -449,44 +451,6 @@ def sample_frames_avi(df: DataFrame, every: int = 2) -> DataFrame:
     return df.select("media_id", "payload").mapInPandas(gen, FRAME_SCHEMA)
 
 
-def _decode_rgb(payload: bytes) -> np.ndarray | None:
-    """(h, w, 3) uint8 pixel array for P6/JPEG/PNG payloads via the
-    real codecs; None for undecodable/foreign payloads."""
-    if payload is None or len(payload) < 8:
-        return None
-    payload = bytes(payload)
-    if payload[:2] == b"P6":
-        import re
-
-        m = re.match(rb"P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s", payload)
-        if not m:
-            return None
-        w, h = int(m.group(1)), int(m.group(2))
-        body = np.frombuffer(payload, dtype=np.uint8, count=min(w * h * 3, len(payload) - m.end()), offset=m.end())
-        if len(body) < w * h * 3:
-            return None
-        return body.reshape(h, w, 3)
-    # Codec calls are totalized: a payload with valid magic can still be
-    # truncated / progressive / 16-bit etc. (JpegDecodeError,
-    # NotImplementedError, struct.error, zlib.error, IndexError...).
-    # Untrusted bytes must yield None, never a task failure.
-    if payload[:2] == b"\xff\xd8":
-        from .jpegcodec import decode_jpeg
-
-        try:
-            return decode_jpeg(payload)
-        except Exception:
-            return None
-    if payload[:4] == b"\x89PNG":
-        from .pngcodec import decode_png
-
-        try:
-            return decode_png(payload)
-        except Exception:
-            return None
-    return None
-
-
 def _encode_ppm(img: np.ndarray) -> bytes:
     h, w = img.shape[:2]
     return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(img, dtype=np.uint8).tobytes()
@@ -496,7 +460,6 @@ def resize_images(
     df: DataFrame,
     out_w: int,
     out_h: int,
-    method: str = "nearest",
     id_col: str = "media_id",
     payload_col: str = "payload",
 ) -> DataFrame:
@@ -505,18 +468,15 @@ def resize_images(
     multimodal plumbing set (decode / feature-extract / RESIZE /
     frame-sample). Arrow ``mapInPandas``, pure numpy per batch.
 
-    ``nearest``: src index = floor(dst · src_dim / out_dim) in INTEGER
-    arithmetic — fully engine-replayable, which is what lets the q80
-    oracle recompute the resized image's statistics arithmetically
+    Nearest neighbour: src index = floor(dst · src_dim / out_dim) in
+    INTEGER arithmetic — fully engine-replayable, which is what lets the
+    q80 oracle recompute the resized image's statistics arithmetically
     from the deterministic source pattern (up- AND down-sampling).
-    ``box``: integer-edge partition mean with floor rounding (empty
-    upsampling cells fall back to the single source pixel row/col).
-    Undecodable payloads yield (NULL payload, 0×0) — total function,
-    no task failure on a corrupt shard."""
+    Undecodable payloads — foreign, or a matching magic over a
+    truncated / progressive / 16-bit body — yield (NULL payload, 0×0):
+    total function, no task failure on a corrupt shard."""
     if out_w <= 0 or out_h <= 0:
         raise ValueError(f"output dims must be positive, got {out_w}x{out_h}")
-    if method not in ("nearest", "box"):
-        raise ValueError(f"unknown method {method!r}")
     schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
@@ -530,25 +490,17 @@ def resize_images(
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = _decode_rgb(payload)
+                try:
+                    img = _decode_rgb(payload)
+                except Exception:  # malformed body: the documented NULL row
+                    img = None
                 if img is None:
                     rows.append((mid, None, 0, 0))
                     continue
                 h, w = img.shape[:2]
-                if method == "nearest":
-                    ys = (np.arange(out_h) * h) // out_h
-                    xs = (np.arange(out_w) * w) // out_w
-                    out = img[ys][:, xs]
-                else:
-                    ye = (np.arange(out_h + 1) * h) // out_h
-                    xe = (np.arange(out_w + 1) * w) // out_w
-                    out = np.empty((out_h, out_w, 3), dtype=np.uint8)
-                    for yi in range(out_h):
-                        y0, y1 = ye[yi], max(ye[yi + 1], ye[yi] + 1)
-                        for xi in range(out_w):
-                            x0, x1 = xe[xi], max(xe[xi + 1], xe[xi] + 1)
-                            blk = img[y0:y1, x0:x1].reshape(-1, 3).astype(np.int64)
-                            out[yi, xi] = blk.sum(axis=0) // blk.shape[0]
+                ys = (np.arange(out_h) * h) // out_h
+                xs = (np.arange(out_w) * w) // out_w
+                out = img[ys][:, xs]
                 rows.append((mid, _encode_ppm(out), out_w, out_h))
             yield pd.DataFrame(rows, columns=[id_col, payload_col, "width", "height"])
 
@@ -626,7 +578,7 @@ def resample_audio(
     out_rate] — engine-replayable, so the q81 oracle recomputes the
     resampled stream's statistics arithmetically (the standard
     production resampler would be windowed-sinc; nearest is the
-    deterministic baseline, same trade as image nearest vs box).
+    deterministic baseline, as for image resize).
     Undecodable/non-PCM16-mono payloads yield (NULL, 0) — total, no
     task failure."""
     if out_rate <= 0:

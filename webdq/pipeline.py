@@ -52,21 +52,19 @@ CLUSTER_FEATURES = [
 
 ECDF_FEATURES = ["n_chars", "n_words", "mean_word_len", "perplexity"]
 
+# auto-PCA (pca_components=0) clamps its component count to this range
+# (the reference clamps auto-k to [3, 12], BASELINE.md)
+PCA_KMIN, PCA_KMAX = 3, 8
+
 
 @dataclass
 class PipelineConfig:
     workdir: str | None = None  # None → fully lazy, no checkpoints
     k: int = 5
-    k_auto: bool = False  # True → reference AutoKMeans elbow sweep
-    kmeans_kmin: int = 3
-    kmeans_kmax: int = 8
-    pca_components: int = 0  # 0 → auto (cumvar > 70%)
-    pca_kmin: int = 3  # reference clamps auto-k to [3, 12] (BASELINE.md)
-    pca_kmax: int = 8
+    pca_components: int = 0  # 0 → auto (cumvar > 70%, within PCA_KMIN..PCA_KMAX)
     keep_top: int = 1
     kmeans_max_iter: int = 25
     kmeans_init_sample: int = 4096
-    seed: int = 42
 
 
 class StageRunner:
@@ -197,10 +195,12 @@ def cluster_documents(
     df: DataFrame, cfg: PipelineConfig, feats: list[str] = CLUSTER_FEATURES, key_col: str = "url",
     persisted: list | None = None, approx_rows: int | None = None,
 ):
-    """min-max → PCA (auto-k) → KMeans over the ``feats`` columns of an
-    entity table keyed by ``key_col`` — pages here, hosts in
-    hostagg.run_host_pipeline. Returns (df keyed by ``key_col`` with
-    ``feats`` min-max scaled, pc_* and ``cluster``; KMeans model).
+    """min-max → PCA (auto-k) → KMeans with ``cfg.k`` clusters over the
+    ``feats`` columns of an entity table keyed by ``key_col`` — pages
+    here, hosts in hostagg.run_host_pipeline. Returns (df keyed by
+    ``key_col`` with ``feats`` min-max scaled, pc_* and ``cluster``;
+    KMeans model), or None when the PCA scan counts no rows: an empty
+    table fits no KMeans.
     Registers its internal persist in ``persisted`` so the caller can
     release it once the output is materialized (StageRunner.finish).
     ``approx_rows`` (the exact upstream count when known — the ECDF
@@ -215,16 +215,18 @@ def cluster_documents(
     # one pass: min/max + covariance (scaled covariance derived on the
     # driver) instead of separate minmax and covariance scans — plus
     # the fused init sample when the row-count hint is available
-    stats, pca, sample_X = ml.fit_scaled_pca_with_init(
+    stats, pca, sample_X, n = ml.fit_scaled_pca_with_init(
         df,
         feats,
         n_components=cfg.pca_components,
-        kmin=cfg.pca_kmin,
-        kmax=cfg.pca_kmax,
+        kmin=PCA_KMIN,
+        kmax=PCA_KMAX,
         key_col=key_col,
         init_sample=cfg.kmeans_init_sample,
         approx_rows=approx_rows,
     )
+    if n == 0:
+        return None
     scaled = ml.minmax_scale(df, feats, stats)
     pc_cols = [f"pc_{j}" for j in range(pca.loadings.shape[1])]
     # Lloyd iterations + centroid ranking rescan this frame k×; keep
@@ -233,15 +235,10 @@ def cluster_documents(
     proj = ml.pca_project(scaled, pca).select(key_col, *feats, *pc_cols).persist()
     if persisted is not None:
         persisted.append(proj)
-    fit_kw = dict(max_iter=cfg.kmeans_max_iter, init_sample=cfg.kmeans_init_sample, seed=cfg.seed)
-    if cfg.k_auto:
-        # reference AutoKMeans: sweep k, pick by elbow 2nd derivative
-        best_k, models = ml.auto_kmeans(
-            proj, pc_cols, key_col, cfg.kmeans_kmin, cfg.kmeans_kmax, sample_X=sample_X, **fit_kw
-        )
-        km = models[best_k]
-    else:
-        km = ml.kmeans_fit(proj, pc_cols, k=cfg.k, key_col=key_col, sample_X=sample_X, **fit_kw)
+    km = ml.kmeans_fit(
+        proj, pc_cols, k=cfg.k, key_col=key_col, max_iter=cfg.kmeans_max_iter,
+        init_sample=cfg.kmeans_init_sample, sample_X=sample_X,
+    )
     out = ml.kmeans_assign(proj, pc_cols, km.centers, out="cluster")
     return out, km
 
@@ -249,10 +246,11 @@ def cluster_documents(
 def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Full pipeline: pages → labels (url, cluster, keep, scrubbed_text).
 
-    An empty ``pages`` (in memory mode, or a checkpoint run whose
-    normalized stage is computed, not resumed) returns an empty frame
-    with that schema — ``cluster`` int, ``keep`` boolean — and runs no
-    PCA or KMeans: there is nothing to fit."""
+    An empty ``pages`` returns an empty frame with that schema —
+    ``cluster`` int, ``keep`` boolean — and runs no KMeans: there is
+    nothing to fit. A fresh run learns it from the ECDF probe and skips
+    the PCA scan too; a run resuming its normalized stage from disk
+    learns it from the PCA scan's row count."""
     cfg = cfg or PipelineConfig()
     runner = StageRunner(spark, cfg.workdir)
     done = runner.resume("features", "normalized", "labels")
@@ -265,15 +263,15 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
     # sample then falls back to the separate TopK, same results)
     nstats: dict = {}
     norm_df = runner.run("normalized", lambda: normalize_features(feats_df, cfg, nstats))
-    if nstats.get("n_rows") == 0:
+    fit = None if nstats.get("n_rows") == 0 else cluster_documents(
+        norm_df, cfg, persisted=runner.persisted, approx_rows=nstats.get("n_rows")
+    )
+    if fit is None:
         empty = feats_df.select(
             "url", F.lit(None).cast("int").alias("cluster"), F.lit(False).alias("keep"), "scrubbed_text"
         )
         return runner.finish(runner.run("labels", lambda: empty))
-
-    clustered, km = cluster_documents(
-        norm_df, cfg, persisted=runner.persisted, approx_rows=nstats.get("n_rows")
-    )
+    clustered, km = fit
 
     def labels() -> DataFrame:
         # Rank clusters by the mean scaled features of their members

@@ -120,9 +120,10 @@ def decode_png(payload: bytes) -> np.ndarray:
     return px  # color == 2 (RGB)
 
 
-def encode_png(img: np.ndarray, compress_level: int = 6) -> bytes:
+def encode_png(img: np.ndarray) -> bytes:
     """Encode (h, w, 3) uint8 RGB or (h, w) grayscale: filter 0 rows,
-    one deflated IDAT. Lossless — decode_png(encode_png(x)) == x."""
+    one IDAT deflated at zlib level 6. Lossless —
+    decode_png(encode_png(x)) == x."""
     img = np.asarray(img, dtype=np.uint8)
     gray = img.ndim == 2
     h, w = img.shape[:2]
@@ -130,7 +131,7 @@ def encode_png(img: np.ndarray, compress_level: int = 6) -> bytes:
     body = img.reshape(h, -1)
     scan = np.zeros((h, body.shape[1] + 1), dtype=np.uint8)
     scan[:, 1:] = body
-    idat = zlib.compress(scan.tobytes(), compress_level)
+    idat = zlib.compress(scan.tobytes(), 6)
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
         crc = zlib.crc32(ctype + data) & 0xFFFFFFFF

@@ -43,18 +43,17 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, rank, neighbor_id, cosine).
     Self-matches (same id) are excluded. Ties break on neighbor id.
-    ``dim`` (fixed-dimension corpora) takes cosine_col's codegen fold
-    path — bitwise-identical scores, no interpreted HOF per pair."""
+    Scores use cosine_col's HOF path: at q33's ~1e5-pair refine the
+    64-dim fold measured slower (ROADMAP #4)."""
     q = queries.select(F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
     scored = (
         c.join(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("_qid"))
-        .withColumn("cosine", cosine_col(F.col("_cv"), F.col("_qv"), dim=dim))
+        .withColumn("cosine", cosine_col(F.col("_cv"), F.col("_qv")))
     )
     w = Window.partitionBy("_qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -64,18 +63,23 @@ def cosine_topk(
     )
 
 
-def _hyperplanes(dim: int, n_bits: int, seed: int = 7) -> np.ndarray:
-    """Deterministic seeded Gaussian hyperplanes — a model constant,
-    identical on every executor (shipped inside the UDF closure; at
-    very high dim it would be a broadcast variable instead)."""
-    return np.random.RandomState(seed).randn(n_bits, dim)
+# seed of the LSH hyperplanes (table t draws from _SEED + 1000·t) and
+# of the IVF quantizer's k-means++ init
+_SEED = 7
+
+
+def _hyperplanes(dim: int, n_bits: int, table: int) -> np.ndarray:
+    """Deterministic seeded Gaussian hyperplanes of LSH table ``table``
+    — a model constant, identical on every executor (shipped inside the
+    UDF closure; at very high dim it would be a broadcast variable
+    instead)."""
+    return np.random.RandomState(_SEED + 1000 * table).randn(n_bits, dim)
 
 
 def lsh_buckets(
     df: DataFrame,
     dim: int,
     n_bits: int = 12,
-    seed: int = 7,
     vec_col: str = "embedding",
     out: str = "bucket",
     n_tables: int = 1,
@@ -84,7 +88,7 @@ def lsh_buckets(
     per (table, bucket) — L independent hyperplane sets (the standard
     multi-table LSH recall knob: candidate recall ≈ 1-(1-p^b)^L). The
     L projections are ONE batched matmul per Arrow batch."""
-    H = np.stack([_hyperplanes(dim, n_bits, seed + 1000 * t) for t in range(n_tables)])  # (L, b, dim)
+    H = np.stack([_hyperplanes(dim, n_bits, t) for t in range(n_tables)])  # (L, b, dim)
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def buckets_udf(vs: pd.Series) -> pd.Series:
@@ -105,29 +109,26 @@ def lsh_topk(
     dim: int,
     k: int = 10,
     n_bits: int = 12,
-    seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    multiprobe: bool = True,
     n_tables: int = 1,
 ) -> DataFrame:
-    """Approximate top-k: candidates share the query's LSH bucket in
-    any of ``n_tables`` independent tables (or a hamming-1 neighbor
-    bucket with multiprobe), re-ranked exactly. Recall scales with
+    """Approximate top-k: candidates share the query's LSH bucket, or
+    a hamming-1 neighbor of it (multi-probe), in any of ``n_tables``
+    independent tables, re-ranked exactly. Recall scales with
     L = n_tables at O(L) candidate cost — the standard production
-    knob; multiprobe stretches each table further."""
+    knob; multi-probe stretches each table further."""
     c = lsh_buckets(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")),
-        dim, n_bits, seed, "_cv", n_tables=n_tables,
+        dim, n_bits, "_cv", n_tables=n_tables,
     )
     q = lsh_buckets(
         queries.select(F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qv")),
-        dim, n_bits, seed, "_qv", n_tables=n_tables,
+        dim, n_bits, "_qv", n_tables=n_tables,
     )
-    if multiprobe:
-        probes = F.array(F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)])
-        q = q.withColumn("bucket", F.explode(probes))
+    probes = F.array(F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)])
+    q = q.withColumn("bucket", F.explode(probes))
     join_keys = ["_table", "bucket"] if n_tables > 1 else ["bucket"]
     cand = (
         c.join(q, join_keys)
@@ -148,22 +149,20 @@ def ivf_fit(
     nlist: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 7,
-    sample_n: int = 4096,
-    iters: int = 25,
 ) -> np.ndarray:
     """Coarse quantizer for IVF ANN: k-means centroids (nlist, dim)
-    trained on a deterministic hash-ordered corpus sample — the
+    trained on a deterministic hash-ordered corpus sample of up to
+    4096 vectors — the
     standard IVF practice (e.g. FAISS trains the quantizer on a
     sample; only ASSIGNMENT is corpus-wide and that stays
     distributed). Same init as ml.kmeans_fit: k-means++ on the sample
-    + Lloyd, fully deterministic."""
+    + up to 25 Lloyd rounds, fully deterministic."""
     from . import ml
 
     samp = (
         corpus.select(F.xxhash64(F.col(id_col)).alias("_h"), F.col(vec_col).alias("_v"))
         .orderBy("_h")
-        .limit(sample_n)
+        .limit(4096)
         .collect()
     )
     X = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in samp])
@@ -172,7 +171,7 @@ def ivf_fit(
     # the inverted lists align with cosine neighborhoods (the FAISS
     # inner-product-IVF practice).
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return ml._lloyd_numpy(X, ml._kmeanspp_init(X, nlist, seed), max_iter=iters)
+    return ml._lloyd_numpy(X, ml._kmeanspp_init(X, nlist, _SEED), max_iter=25)
 
 
 def _ivf_lists_udf(centroids: np.ndarray, nprobe: int):
@@ -246,8 +245,6 @@ def embedding_neardup_pairs_lsh(
     threshold: float = 0.9,
     n_bits: int = 8,
     n_tables: int = 4,
-    seed: int = 7,
-    max_bucket: int = 10_000,
 ) -> DataFrame:
     """Self-contained embedding near-dup: candidates share a sign-LSH
     bucket in ANY of ``n_tables`` tables (the production blocking key
@@ -255,18 +252,18 @@ def embedding_neardup_pairs_lsh(
     in for), verified by exact cosine ≥ threshold. EXACT duplicates
     always collide (identical vectors ⇒ identical sign patterns in
     every table), so recall on true duplicates is 1 by construction;
-    near-duplicate recall follows 1−(1−(1−θ/π)^b)^L. ``max_bucket``
-    drops degenerate hub buckets (the LSH skew guard — a bucket of m
-    rows contributes m² candidate pairs)."""
+    near-duplicate recall follows 1−(1−(1−θ/π)^b)^L. Buckets of more
+    than 10,000 rows are dropped as degenerate hubs (the LSH skew guard
+    — a bucket of m rows contributes m² candidate pairs)."""
     from .dedup import cosine_col as _cos
 
     keyed = lsh_buckets(
         df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        dim, n_bits, seed, "_v", n_tables=n_tables,
+        dim, n_bits, "_v", n_tables=n_tables,
     )
     join_keys = ["_table", "bucket"] if n_tables > 1 else ["bucket"]
     cnt = Window.partitionBy(*join_keys)
-    keyed = keyed.withColumn("_n", F.count(F.lit(1)).over(cnt)).filter(F.col("_n") <= max_bucket).drop("_n")
+    keyed = keyed.withColumn("_n", F.count(F.lit(1)).over(cnt)).filter(F.col("_n") <= 10_000).drop("_n")
     a = keyed.select(*join_keys, F.col("_id").alias("id1"), F.col("_v").alias("_v1"))
     b = keyed.select(*join_keys, F.col("_id").alias("id2"), F.col("_v").alias("_v2"))
     return (

@@ -20,12 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:
-    """Hive-style partitioned parquet: one directory per distinct
-    partition-column tuple. Keep partition columns LOW-cardinality
-    (crawl id, language, source) — a high-cardinality partition column
-    creates millions of tiny files, the classic small-files failure."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Hive-style partitioned parquet, overwriting ``path``: one
+    directory per distinct partition-column tuple. Keep partition
+    columns LOW-cardinality (crawl id, language, source) — a
+    high-cardinality partition column creates millions of tiny files,
+    the classic small-files failure."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def spread_scan(df: DataFrame, min_split_bytes: int | None = None) -> DataFrame:

@@ -90,12 +90,6 @@ def dedup_consecutive_tokens(
     return _dedup_consecutive(df, id_col, _toks(text_col), " ")
 
 
-def _re_escape(delim: str) -> str:
-    import re
-
-    return re.escape(delim)
-
-
 def _dedup_consecutive(df: DataFrame, id_col: str, units, join_delim: str) -> DataFrame:
     """Run-collapse over an array column: keep element i when it
     differs from element i-1. arrays_zip-first so the filter/transform
@@ -170,7 +164,6 @@ def gopher_repetition(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    line_delim: str = "\n",
     ngram_ns: tuple[int, ...] = (2, 3, 4),
 ) -> DataFrame:
     """The Gopher §A.1.1 repetition metric family (Rae et al. 2021,
@@ -192,7 +185,8 @@ def gopher_repetition(
     expressions (the interpreted-HOF trap), no explode, no shuffle."""
     from .dedup import _shingles
 
-    lines = F.split(F.coalesce(F.col(text_col), F.lit("")), _re_escape(line_delim))
+    # lines split on "\n" (the pattern is re.escape("\n"))
+    lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\\\n")
     base = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_text"),
@@ -327,48 +321,44 @@ def tfidf(
     )
 
 
+# add-k smoothing constant of bigram_lm_score (add-1, Laplace)
+_ADD_K = 1.0
+
+
 def bigram_lm_score(
     df: DataFrame,
-    model_df: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    add_k: float = 1.0,
     score_col: str = "avg_logprob",
 ) -> DataFrame:
     """Count-based bigram language-model quality scoring — the CCNet /
     Wenzek et al. '20 shape (train a small LM on a clean reference
     corpus, score every candidate document, filter/bucket by
     perplexity) with the LM re-expressed as two count aggregations
-    instead of a trained model: p(w|v) = (c(v,w) + k) / (c(v·) + k·V)
-    (add-k smoothing over the model corpus's transition counts; V =
-    model vocabulary size), and a document's score is the MEAN log
+    instead of a trained model: p(w|v) = (c(v,w) + 1) / (c(v·) + V)
+    (add-1 smoothing over the corpus's transition counts; V = corpus
+    vocabulary size), and a document's score is the MEAN log
     transition probability over its (w_{i-1}, w_i) pairs (null for
-    docs with < 2 tokens — no transitions to score). ``model_df``
-    is the clean reference corpus; ``None`` scores ``df`` against
-    itself (self-perplexity — boilerplate-heavy and repetitive docs
-    score HIGH, gibberish scores LOW, so both filter directions are
-    useful).
+    docs with < 2 tokens — no transitions to score). ``df`` is scored
+    against itself (self-perplexity — boilerplate-heavy and repetitive
+    docs score HIGH, gibberish scores LOW, so both filter directions
+    are useful).
 
     Shape: transitions are an arrays_zip of two pre-sliced token
     arrays (no captured-expression HOF — the r3 quadratic trap), one
     explode each for model counts and scoring; context counts c(v·)
     aggregate OVER the bigram table (one row per distinct bigram —
     no second pass over the corpus); V is a 1-row aggregate broadcast
-    via crossJoin (no driver sync). The model tables join back on
-    (prev, cur) / prev — broadcast when the model corpus is the usual
-    bounded clean reference (wiki-sized), shuffle equi-join otherwise.
-    Unseen transitions (model_df ≠ df) fall back to the add-k floor
-    via left joins + coalesce(0). At 10^12 docs the scored side is
+    via crossJoin (no driver sync). The count tables join back on
+    (prev, cur) / prev as left joins with coalesce(0): every scored
+    transition is in them, but that plan shape is the one the q87/q92
+    oracles were checked against. At 10^12 docs the scored side is
     one explode + two equi-joins + one map-side-combined groupBy —
     no window, no Python.
 
     Reference analog: the reference's per-record quality features
     feeding KMeans (SURVEY.md §2 M9); the LM score is the web-corpus
     quality feature CCNet adds on top (§8 quality scoring)."""
-    if add_k <= 0:
-        raise ValueError(f"add_k must be positive, got {add_k}")
-    model_src = df if model_df is None else model_df
-
     def _transitions(d: DataFrame) -> DataFrame:
         t = d.select(F.col(id_col), _toks(text_col).alias("_w"))
         n = F.size("_w")
@@ -386,21 +376,20 @@ def bigram_lm_score(
             )
         )
 
-    mt = _transitions(model_src)
+    mt = _transitions(df)
     big = mt.groupBy("_prev", "_cur").agg(F.count(F.lit(1)).alias("_cb"))
     ctx = big.groupBy("_prev").agg(F.sum("_cb").alias("_cc"))
     vocab = (
-        model_src.select(F.explode(_toks(text_col)).alias("_tok"))
+        df.select(F.explode(_toks(text_col)).alias("_tok"))
         .filter(F.col("_tok") != "")
         .agg(F.count_distinct("_tok").alias("_v"))
     )
     st = _transitions(df)
-    k = F.lit(float(add_k))
-    # degenerate-model guard (ADVICE r6): an empty/whitespace-only
-    # model corpus has V = 0, making the smoothed denominator 0 and
-    # every logp +Inf — silently propagating Inf scores. The when()
-    # guard (the contamination_score 0-denominator pattern) yields
-    # NULL scores instead: an explicit "no model" signal.
+    k = F.lit(_ADD_K)
+    # V = 0 would make the smoothed denominator 0 and every logp +Inf.
+    # A self-scored corpus has V = 0 only when it has no transition to
+    # score, so this guard never fires; it stays because it is part of
+    # the q87/q92 plans their oracles were checked against.
     logp = F.when(
         F.col("_v") > 0,
         F.log(
@@ -528,8 +517,6 @@ def learn_bpe(
     df: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    min_word_count: int = 1,
-    min_pair_count: int = 2,
     incremental_threshold: int = 150_000,
 ) -> list:
     """Corpus-level BPE merge learning (Sennrich '16 word-level BPE,
@@ -542,13 +529,12 @@ def learn_bpe(
     O(n_merges) driver state, the KMeans-centroid pattern.
 
     Word types, not occurrences, carry the iteration cost: a 10^12-
-    token corpus has ~10^8 word types, and ``min_word_count`` bounds
-    the table further (hapaxes rarely influence early merges). The
-    word table is eagerly localCheckpointed EVERY iteration — the
-    merge fold otherwise nests one aggregate per round and the plan
-    grows without bound (the DBSCAN iterative-loop gotcha). Symbols
-    split on UTF-16 code-unit boundaries (Java regex); astral-plane
-    text would need a codepoint splitter.
+    token corpus has ~10^8 word types. The word table is eagerly
+    localCheckpointed EVERY iteration — the merge fold otherwise nests
+    one aggregate per round and the plan grows without bound (the
+    DBSCAN iterative-loop gotcha). Symbols split on UTF-16 code-unit
+    boundaries (Java regex); astral-plane text would need a codepoint
+    splitter.
 
     Incremental pair maintenance (r7 — VERDICT r6 #5, the structure
     of Sennrich's reference implementation): only word types that
@@ -581,7 +567,7 @@ def learn_bpe(
     measured crossover); both strategies produce the identical merge
     list, so the switch is performance-only.
 
-    Stops early when no pair reaches ``min_pair_count``."""
+    Stops early when no pair occurs at least twice."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     sep = "\x00"
@@ -589,11 +575,9 @@ def learn_bpe(
     def enc(syms_col):
         return F.concat(F.lit(sep), F.concat_ws(sep, syms_col), F.lit(sep))
 
-    words = _word_table(df, text_col)
-    if min_word_count > 1:
-        words = words.filter(F.col("cnt") >= int(min_word_count))
     words = (
-        words.select("cnt", F.split("word", r"(?!^)(?=.)").alias("syms"))
+        _word_table(df, text_col)
+        .select("cnt", F.split("word", r"(?!^)(?=.)").alias("syms"))
         .withColumn("_enc", enc(F.col("syms")))
         .localCheckpoint(eager=True)
     )
@@ -624,7 +608,7 @@ def learn_bpe(
                 .limit(1)
                 .collect()
             )
-            if not top or top[0]["pair_count"] < min_pair_count:
+            if not top or top[0]["pair_count"] < 2:
                 break
             a, b, c = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
             merges.append((a, b, c))
@@ -646,7 +630,7 @@ def learn_bpe(
         top = pairs.orderBy(
             F.desc("pair_count"), F.asc("left"), F.asc("right")
         ).limit(1).collect()
-        if not top or top[0]["pair_count"] < min_pair_count:
+        if not top or top[0]["pair_count"] < 2:
             break
         a, b, c = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
         merges.append((a, b, c))

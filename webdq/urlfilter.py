@@ -25,7 +25,7 @@ a derived key; domain blocking is the same predicate family over the
 url-derived host, re-expressed for the web payload.
 
 Scale notes (10^12 pages): the list path is a per-row expression —
-scales embarrassingly; the DataFrame path explodes ≤ max_labels rows
+scales embarrassingly; the DataFrame path explodes ≤ MAX_LABELS rows
 per page pre-shuffle and the only shuffle is the flag re-aggregation
 keyed by the page id (skew-free: page ids are unique).
 """
@@ -38,15 +38,19 @@ from pyspark.sql import functions as F
 from webdq.hostagg import host_col
 
 
-def domain_suffix_chain(url_col: str = "url", max_labels: int = 10) -> F.Column:
+# most dot-suffixes domain_suffix_chain emits per host
+MAX_LABELS = 10
+
+
+def domain_suffix_chain(url_col: str = "url") -> F.Column:
     """Array of the host's dot-suffixes, shortest first:
     ``a.b.example.com`` → [com, example.com, b.example.com,
-    a.b.example.com] (capped at ``max_labels`` longest-suffix entries
-    — a hostile 1000-label host cannot blow up the fanout)."""
+    a.b.example.com] (capped at ``MAX_LABELS`` shortest suffixes — a
+    hostile 1000-label host cannot blow up the fanout)."""
     labels = F.split(F.lower(host_col(url_col)), r"\.")
     n = F.size(labels)
     return F.transform(
-        F.sequence(F.lit(1), F.least(n, F.lit(int(max_labels)))),
+        F.sequence(F.lit(1), F.least(n, F.lit(MAX_LABELS))),
         lambda i: F.array_join(F.slice(labels, n - i + 1, i), "."),
     )
 
@@ -57,21 +61,20 @@ def domain_blocklist_flag(
     url_col: str = "url",
     id_col: str = "url",
     out: str = "blocked_domain",
-    max_labels: int = 10,
 ) -> DataFrame:
     """Add boolean ``out``: true iff the url's host or any parent
     domain appears in ``blocklist`` (a python iterable of domains —
     constant-folded codegen path — or a one-column DataFrame —
     broadcast-join path for registry-sized lists)."""
-    sfx = domain_suffix_chain(url_col, max_labels)
+    sfx = domain_suffix_chain(url_col)
     if not isinstance(blocklist, DataFrame):
         bad = sorted({str(d).lower() for d in blocklist})
         # all-literal array → constant-folded once by Catalyst; the
         # overlap test stays inside whole-stage codegen. coalesce: a
         # NULL url yields a NULL suffix chain and arrays_overlap would
         # return NULL — the DataFrame-blocklist path coalesces to
-        # false, so this path must too (ADVICE r4: mode='drop' was
-        # silently dropping NULL-url rows here).
+        # false, so this path must too (a filter on the flag would
+        # otherwise silently drop NULL-url rows).
         return df.withColumn(
             out,
             F.coalesce(
@@ -114,26 +117,18 @@ def apply_url_filters(
     patterns: list[str] | None = None,
     url_col: str = "url",
     id_col: str = "url",
-    mode: str = "flag",
 ) -> DataFrame:
-    """Both URL filters. ``mode='flag'`` keeps every row with
-    ``blocked_domain``/``blocked_pattern`` booleans; ``mode='drop'``
-    returns only clean rows (flags removed)."""
-    if mode not in ("flag", "drop"):
-        raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
+    """Both URL filters: every row, with ``blocked_domain`` and
+    ``blocked_pattern`` booleans (filter on them to drop; with patterns
+    given, a NULL url's ``blocked_pattern`` is NULL)."""
     out = domain_blocklist_flag(df, blocklist, url_col=url_col, id_col=id_col)
-    out = url_pattern_flag(out, list(patterns or []), url_col=url_col)
-    if mode == "drop":
-        return out.filter(~F.col("blocked_domain") & ~F.col("blocked_pattern")).drop(
-            "blocked_domain", "blocked_pattern"
-        )
-    return out
+    return url_pattern_flag(out, list(patterns or []), url_col=url_col)
 
 
 TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid|msclkid|ref)(=.*)?$"
 
 
-def canonicalize_url_col(url: F.Column, tracking_re: str = TRACKING_PARAM_RE) -> F.Column:
+def canonicalize_url_col(url: F.Column) -> F.Column:
     """Canonical URL as a pure native expression — the normalization
     that runs BEFORE url-level exact dedup so trivially-distinct spam
     variants (case-shifted hosts, tracking params, fragments, default
@@ -144,8 +139,8 @@ def canonicalize_url_col(url: F.Column, tracking_re: str = TRACKING_PARAM_RE) ->
     - default port stripped (``:80`` for http, ``:443`` for https)
     - fragment dropped
     - tracking query params removed (``utm_*``, fbclid, gclid,
-      msclkid, ref — the public C4/common-crawl hygiene set; override
-      via ``tracking_re``), the ``?`` dropped when nothing survives
+      msclkid, ref — the public C4/common-crawl hygiene set,
+      ``TRACKING_PARAM_RE``), the ``?`` dropped when nothing survives
     - strings without a ``scheme://`` prefix pass through UNCHANGED
       (opaque keys are not urls; don't corrupt them)
 
@@ -162,7 +157,7 @@ def canonicalize_url_col(url: F.Column, tracking_re: str = TRACKING_PARAM_RE) ->
     )
     path = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
     query = F.regexp_extract(url, r"^[^#]*\?([^#]*)", 1)
-    kept = F.filter(F.split(query, "&"), lambda p: ~p.rlike(tracking_re))
+    kept = F.filter(F.split(query, "&"), lambda p: ~p.rlike(TRACKING_PARAM_RE))
     newq = F.array_join(kept, "&")
     rebuilt = F.concat(
         scheme,
