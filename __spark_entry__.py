@@ -29,12 +29,15 @@ if _REPO not in sys.path:
 
 from webdq import normalize
 from webdq.pipeline import PipelineConfig, run_pipeline
+from webdq.storage import read_table
 from webdq.synth import pages_from_documents
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
-    """Read a testdata table. ``spread`` guards against under-split
-    inputs (storage.spread_scan): the driver parquet files are single
+    """Read a testdata table under its declared schema
+    (storage.read_table), so no read runs a schema-inference job.
+    ``spread`` guards against under-split inputs
+    (storage.spread_scan): the fixture parquet files are single
     row groups, so without it every scan+map stage runs on 1-2 tasks
     no matter the core count. Opt-IN per query: spreading pays exactly
     when per-row derived work (shingle explode + hashing, Arrow UDFs,
@@ -43,8 +46,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> Dat
     their byte movement (measured: q44 47.6s->1.9s with spread,
     q05/q12/q25 0.5-1.5s SLOWER with it), and zero-Exchange contract
     queries (q50/q51/q52/q56/q64/q88) must keep shuffle-free plans."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_table(spark, sf_dir, name)
     if spread:
+        # looked up per call: perfbench's tracer wraps storage.spread_scan
         from webdq.storage import spread_scan
 
         df = spread_scan(df)
@@ -2945,7 +2949,7 @@ def q82_video_frame_sample(spark, sf_dir):
     family (previously pytest-only)."""
     from webdq import multimodal
 
-    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    n = read_table(spark, sf_dir, "documents").count()
     media = multimodal.synth_avi_media(spark, n)
     frames = multimodal.sample_frames_avi(media, every=2)
     out = multimodal.frame_features(frames)

@@ -155,3 +155,41 @@ def test_every_webdq_option_is_set_by_a_root():
     assert not flagged, f"defaulted webdq options no root passes: {flagged}"
     stale = sorted(set(UNSET_ALLOWED) - set(unset))
     assert not stale, f"allowlisted options a root now passes (or that are gone): {stale}"
+
+
+def _reads_parquet_table(call: ast.Call) -> bool:
+    """``<...>.read<...>.parquet(f"<dir>/<table>.parquet")``: a
+    DataFrameReader call on a formatted path to a ``.parquet`` table."""
+    f = call.func
+    if not (isinstance(f, ast.Attribute) and f.attr == "parquet" and call.args):
+        return False
+    arg = call.args[0]
+    if not (isinstance(arg, ast.JoinedStr) and any(isinstance(v, ast.FormattedValue) for v in arg.values)):
+        return False
+    tail = "".join(v.value for v in arg.values if isinstance(v, ast.Constant))
+    node = f.value
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute) and node.attr == "read":
+            return tail.endswith(".parquet")
+        node = node.value if isinstance(node, ast.Attribute) else node.func
+    return False
+
+
+def test_contract_tables_are_read_through_read_table():
+    """A bare ``spark.read.parquet`` of a contract table infers its
+    schema in a Spark job; every such read goes through
+    ``storage.read_table``, which declares the schema."""
+    found = []
+
+    def walk(node, path):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef) and child.name == "read_table":
+                continue
+            if isinstance(child, ast.Call) and _reads_parquet_table(child):
+                found.append(f"{path.relative_to(REPO)}:{child.lineno}")
+            walk(child, path)
+
+    for path in [REPO / "__spark_entry__.py", *sorted((REPO / "webdq").glob("*.py")),
+                 *sorted((REPO / "tools").glob("*.py"))]:
+        walk(ast.parse(path.read_text()), path)
+    assert not found, f"contract-table reads outside storage.read_table: {found}"

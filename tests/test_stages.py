@@ -54,6 +54,37 @@ def test_resume_of_empty_run_after_crash_returns_empty_labels(tmp_path, spark):
     assert dict(second.dtypes) == {"url": "string", "cluster": "int", "keep": "boolean", "scrubbed_text": "string"}
 
 
+def _inference_jobs(spark, group: str) -> list[int]:
+    """Jobs of ``group`` that ran outside every SQL execution. In a
+    pipeline run those are parquet schema-inference jobs: every scan,
+    write, collect and observed noop write runs inside one."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    in_sql = set()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    while it.hasNext():
+        in_sql |= {int(j) for j in it.next().jobs().keys().mkString(",").split(",") if j}
+    return sorted(set(sc.statusTracker().getJobIdsForGroup(group)) - in_sql)
+
+
+def test_fresh_checkpoint_run_infers_no_schema(tmp_path, spark):
+    """A fresh checkpoint run reads every stage it writes back under
+    the written frame's schema: no schema-inference job, where a bare
+    spark.read.parquet would run one per stage (features, normalized,
+    labels)."""
+    pages = generate_pages(spark, 400).drop("_tier")
+    cfg = PipelineConfig(k=5, kmeans_init_sample=256, workdir=str(tmp_path / "run"))
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-inference", "ckpt-inference")
+    try:
+        out = run_pipeline(spark, pages, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _inference_jobs(spark, "ckpt-inference") == []
+    assert out.count() == 400
+
+
 def _cached_rdd_ids(jsc) -> set[int]:
     """Ids of the persisted RDDs, less the ``localCheckpoint`` ones.
     Earlier tests (dbscan, connected components, BPE) leave checkpoint

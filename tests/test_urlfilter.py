@@ -103,18 +103,25 @@ def test_null_url_parity_between_paths(spark):
     # ADVICE r4: list path returned NULL blocked_domain for NULL urls
     # (a filter on the flags then silently dropped the row); both paths
     # must coalesce to false
-    rows = [(0, None), (1, "https://ads.example.com/x")]
+    rows = [(0, None), (1, "https://ads.example.com/x"), (2, "https://ok.example.org/setup.exe")]
     df = spark.createDataFrame(rows, "doc_id long, url string")
     lst = urlfilter.domain_blocklist_flag(df, ["ads.example.com"], id_col="doc_id")
     bl = spark.createDataFrame([("ads.example.com",)], "domain string")
     dfp = urlfilter.domain_blocklist_flag(df, bl, id_col="doc_id")
     for out in (lst, dfp):
         got = {r["doc_id"]: r["blocked_domain"] for r in out.collect()}
-        assert got == {0: False, 1: True}
+        assert got == {0: False, 1: True, 2: False}
     dropped = urlfilter.apply_url_filters(df, ["ads.example.com"], id_col="doc_id").filter(
         ~F.col("blocked_domain") & ~F.col("blocked_pattern")
     )
-    assert {r["doc_id"] for r in dropped.collect()} == {0}
+    assert {r["doc_id"] for r in dropped.collect()} == {0, 2}
+    # with patterns given, the pattern flag is false (not NULL) on a
+    # NULL url too, so the same filter keeps the row
+    flagged = urlfilter.apply_url_filters(df, ["ads.example.com"], [r"\.exe$"], id_col="doc_id")
+    got = {r["doc_id"]: r["blocked_pattern"] for r in flagged.collect()}
+    assert got == {0: False, 1: False, 2: True}
+    kept = flagged.filter(~F.col("blocked_domain") & ~F.col("blocked_pattern"))
+    assert {r["doc_id"] for r in kept.collect()} == {0}
 
 
 # ---- canonicalize_urls ----

@@ -251,8 +251,9 @@ def _q46_lazy(spark, sf):
     from pyspark.sql import functions as F
 
     from webdq.density import dbscan
+    from webdq.storage import read_table
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
+    e = read_table(spark, sf, "embeddings")
     pts = e.select(
         "vec_id",
         F.element_at("embedding", 1).cast("double").alias("e0"),

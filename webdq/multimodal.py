@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .storage import read_table
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -157,7 +159,7 @@ def ppm_media_from_documents(spark, sf_dir: str) -> DataFrame:
     every field of the decode output is independently recomputable
     from (doc_id, md5(text)) — the q37 DuckDB oracle does exactly
     that."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     w = (F.col("doc_id") % 13 + 4).cast("int")
     h = (F.floor(F.col("doc_id") / 13) % 11 + 4).cast("int")
     body_len = (w * h * 3).cast("int")
@@ -190,7 +192,7 @@ def jpeg_media_from_documents(spark, sf_dir: str) -> DataFrame:
     gate. Non-8-multiple dims exercise the block edge-padding path."""
     from .jpegcodec import encode_jpeg
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = read_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -227,7 +229,7 @@ def png_media_from_documents(spark, sf_dir: str) -> DataFrame:
     decode path on non-trivial images."""
     from .pngcodec import encode_png
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = read_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -561,7 +563,7 @@ def wav_media_from_documents(spark, sf_dir: str) -> DataFrame:
                 }
             )
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return d.mapInPandas(gen, MEDIA_SCHEMA)
 
 

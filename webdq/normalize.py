@@ -78,7 +78,10 @@ def ecdf(
     aggregation (a shuffle-map job plus a result job under AQE). The
     driver-built lookup tables are ``pyarrow.Table``s: createDataFrame
     takes them through Arrow with no Python worker, so broadcasting
-    one is a plain JVM job.
+    one is a plain JVM job. All low-card columns share ONE lookup
+    table ``(_f, _v, _u)`` (column index, value, ecdf), joined per
+    column on ``struct(i, value)``, so the per-column broadcasts are
+    one reused exchange: one broadcast job, not one per column.
 
     Sketch precision (``_REL_ERR``, ``probe_buckets``) affects only
     bucket BALANCE, never exactness — ECDF values are exact integer
@@ -183,24 +186,45 @@ def ecdf(
 
     spark = df.sparkSession
     out = df
-    for c in low:
+    # every low-card column's (value → ecdf) map in ONE lookup table
+    # (_f = column index); see the join below
+    fs, vals, ranks, n_null = [], [], [], {}
+    for i, c in enumerate(low):
         # nulls sort FIRST (cume_dist semantics: nulls are the
         # lowest peer group) so non-null ranks count them below
         counts = sorted(by_col[c], key=lambda t: (t[0] is not None, t[0] if t[0] is not None else 0.0))
-        n_null_c = sum(cnt for v, cnt in counts if v is None)
-        acc, vals, ranks = 0, [], []
+        n_null[c] = sum(cnt for v, cnt in counts if v is None)
+        acc = 0
         for v, cnt in counts:
             acc += cnt
             if v is not None:
+                fs.append(i)
                 vals.append(float(v))
                 ranks.append(acc / n_rows)
+    if low:
+        dim = F.broadcast(
+            spark.createDataFrame(
+                pa.table({
+                    "_f": pa.array(fs, pa.int32()),
+                    "_v": pa.array(vals, pa.float64()),
+                    "_u": pa.array(ranks, pa.float64()),
+                })
+            )
+        )
+    for i, c in enumerate(low):
         u = prefix + c.removeprefix("n_")
-        dim = spark.createDataFrame(pa.table({c: pa.array(vals, pa.float64()), u: pa.array(ranks, pa.float64())}))
-        out = out.join(F.broadcast(dim), on=c, how="left")
-        if n_null_c:
+        # One struct key per column: every join's build side is the
+        # same (_f, _v) table, so the broadcast exchanges canonicalize
+        # as equal and AQE reuses one broadcast. A separate `_f = i`
+        # predicate would be pushed into the build side as a filter
+        # and make each exchange distinct.
+        key = F.struct(F.lit(i).alias("_f"), F.col(c).cast("double").alias("_v"))
+        rest = [x for x in out.columns if x != c]
+        out = out.join(dim, key == F.struct("_f", "_v"), "left").select(c, *rest, F.col("_u").alias(u))
+        if n_null[c]:
             # null inputs don't equi-join: fill their cume_dist value
             out = out.withColumn(
-                u, F.when(F.col(c).isNull(), F.lit(n_null_c / n_rows)).otherwise(F.col(u))
+                u, F.when(F.col(c).isNull(), F.lit(n_null[c] / n_rows)).otherwise(F.col(u))
             )
 
     # Per column: bucket-assign on the wide frame itself,

@@ -106,7 +106,10 @@ class StageRunner:
 
     def run(self, name: str, build) -> DataFrame:
         """Return the stage DataFrame; if checkpointing is on, write it
-        once and read it back (true barrier = resume point)."""
+        once and read it back (true barrier = resume point). The
+        read-back takes the written frame's schema, so it runs no
+        schema-inference job; only a stage resumed from an earlier
+        run's files (``resume``, the skip branch below) infers one."""
         if not self.workdir:
             # No disk checkpoint → persist in memory/disk: downstream ML
             # stages (min-max, covariance, Lloyd iterations) each rescan
@@ -121,7 +124,7 @@ class StageRunner:
         t0 = time.time()
         df = build()
         df.write.mode("overwrite").parquet(self._path(name))
-        out = self.spark.read.parquet(self._path(name))
+        out = self.spark.read.schema(df.schema).parquet(self._path(name))
         # per-partition lineage: rows per output partition, one
         # overwritten directory per stage (a re-run replaces, never
         # duplicates; ``_lineage`` reads back with a ``stage`` column)

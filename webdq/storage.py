@@ -1,4 +1,4 @@
-"""Storage layout and scan-width operators for stage tables.
+"""Contract-table reads, storage layout and scan-width operators.
 
 The reference's stages are flat CSV/HDF5 files (analysis_tasks.py
 to_csv/to_hdf at every boundary). At 100 TB the LAYOUT of a stage
@@ -13,11 +13,47 @@ table is a first-class operator:
 - ``spread_scan`` — restores scan-side parallelism for under-split
   inputs (one round-robin repartition when the physical scan has
   fewer partitions than the session has cores).
+- ``read_table`` — reads one of the fixed contract tables (TESTDATA.md)
+  under its declared schema (``TABLE_SCHEMAS``), the way table formats
+  that keep the schema in table metadata do. A bare
+  ``spark.read.parquet`` infers the schema from the file footers in a
+  one-task Spark job that the read waits for, once per read; a
+  declared schema skips that job. Each DDL string equals Spark's own
+  inference over the fixtures and the benchmark generator's tables
+  (tests/test_storage.py checks both). Trade-off: a file that lacks a
+  declared column reads it as NULL instead of raising.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+# one DDL per contract table, equal to spark.read.parquet(...).schema.toDDL()
+TABLE_SCHEMAS = {
+    "region": "r_regionkey INT,r_name STRING",
+    "nation": "n_nationkey INT,n_name STRING,n_regionkey INT",
+    "customer": "c_custkey BIGINT,c_name STRING,c_nationkey INT,c_acctbal DOUBLE,c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT,s_name STRING,s_nationkey INT,s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT,p_name STRING,p_brand STRING,p_type STRING,p_size INT,p_retailprice DOUBLE",
+    "orders": (
+        "o_orderkey BIGINT,o_custkey BIGINT,o_orderstatus STRING,o_totalprice DOUBLE,"
+        "o_orderdate TIMESTAMP_NTZ,o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT,l_partkey BIGINT,l_suppkey BIGINT,l_linenumber INT,l_quantity DOUBLE,"
+        "l_extendedprice DOUBLE,l_discount DOUBLE,l_tax DOUBLE,l_returnflag STRING,l_linestatus STRING,"
+        "l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": "event_id BIGINT,ts TIMESTAMP_NTZ,user_id BIGINT,event_type STRING,value DOUBLE,props STRING",
+    "documents": "doc_id BIGINT,text STRING,lang STRING,source STRING,n_chars BIGINT",
+    "embeddings": "vec_id BIGINT,embedding ARRAY<FLOAT>,label INT",
+}
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Contract table ``name`` under ``sf_dir``, read under its declared
+    schema: no schema-inference job."""
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .storage import read_table
+
 # Latent tiers. Only CLEAN (and, by language, FOREIGN-clean) documents
 # should be kept by a quality filter; the rest are drop material.
 TIER_CLEAN = 0
@@ -143,7 +145,9 @@ def generate_pages(
 
 def pages_from_documents(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
     """Adapt the driver's documents.parquet into the pages shape so the
-    same pipeline runs over driver testdata (TESTDATA.md).
+    same pipeline runs over the fixture tables (TESTDATA.md). The table is
+    read under its declared schema (storage.read_table), so no
+    schema-inference job runs.
 
     ``spread`` redistributes the under-split single-row-group driver
     parquet across the session's cores (storage.spread_scan) so the
@@ -151,8 +155,9 @@ def pages_from_documents(spark: SparkSession, sf_dir: str, spread: bool = True) 
     pipeline makes several heavy passes over pages, so the one-time
     base-row shuffle amortizes); zero-shuffle contract queries opt
     out."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     if spread:
+        # looked up per call: perfbench's tracer wraps storage.spread_scan
         from webdq.storage import spread_scan
 
         # bytes-scaled width: the pipeline runs ~20 short jobs over

@@ -13,7 +13,7 @@ describe it qualitatively; implementation is original).
 - ``url_pattern_flag``: one native ``rlike`` over a combined
   alternation of path/query patterns (single regex pass; no
   per-pattern scans).
-- ``apply_url_filters``: both flags, optionally dropping blocked rows.
+- ``apply_url_filters``: both flags on every row.
 
 Host extraction reuses webdq.hostagg.HOST_REGEX (RFC-3986 scheme,
 path-less URLs accepted) so the filter and the host-labeling pipeline
@@ -104,11 +104,13 @@ def url_pattern_flag(
     """Add boolean ``out``: true iff the url matches ANY of
     ``patterns`` — combined into one alternation, one native regexp
     pass (keep patterns in the Java/RE2-common subset so oracles can
-    replay them)."""
+    replay them). A NULL url is false, as in ``domain_blocklist_flag``:
+    ``rlike`` on NULL is NULL, and a filter on the flag would silently
+    drop the row."""
     if not patterns:
         return df.withColumn(out, F.lit(False))
     combined = "|".join(f"(?:{p})" for p in patterns)
-    return df.withColumn(out, F.col(url_col).rlike(combined))
+    return df.withColumn(out, F.coalesce(F.col(url_col).rlike(combined), F.lit(False)))
 
 
 def apply_url_filters(
@@ -119,8 +121,8 @@ def apply_url_filters(
     id_col: str = "url",
 ) -> DataFrame:
     """Both URL filters: every row, with ``blocked_domain`` and
-    ``blocked_pattern`` booleans (filter on them to drop; with patterns
-    given, a NULL url's ``blocked_pattern`` is NULL)."""
+    ``blocked_pattern`` booleans, never NULL (a NULL url is unblocked
+    on both), so a filter on them drops only blocked rows."""
     out = domain_blocklist_flag(df, blocklist, url_col=url_col, id_col=id_col)
     return url_pattern_flag(out, list(patterns or []), url_col=url_col)
 
