@@ -27,10 +27,9 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from webdq import normalize
+from webdq import normalize, synth
 from webdq.pipeline import PipelineConfig, run_pipeline
 from webdq.storage import read_table
-from webdq.synth import pages_from_documents
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
@@ -70,14 +69,14 @@ def _us(col) -> F.Column:
 def entry(spark: SparkSession) -> DataFrame:
     """Quality-filter the sf0.001 documents table adapted to the pages
     schema; returns (url, cluster, keep, scrubbed_text)."""
-    pages = pages_from_documents(spark, "/root/testdata/sf0.001")
+    pages = synth.pages_from_documents(spark, "/root/testdata/sf0.001")
     cfg = PipelineConfig(k=4, pca_components=3, kmeans_init_sample=256, keep_top=1)
     return run_pipeline(spark, pages, cfg)
 
 
 def q00_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-SQL-expressible (PCA+KMeans) — driver records rows-only."""
-    pages = pages_from_documents(spark, sf_dir)
+    pages = synth.pages_from_documents(spark, sf_dir)
     cfg = PipelineConfig(k=4, pca_components=3, kmeans_init_sample=512, keep_top=1)
     return run_pipeline(spark, pages, cfg)
 
@@ -238,7 +237,7 @@ def _sql_00b() -> str:
         ex = "0.0" if span == 0.0 else f"({c} - {mn!r}) / {span!r}"
         sc_exprs.append(f"{ex} AS f{i}")
 
-    # PCA projection, mirroring ml.pca_project: 0.0 + (c - mean)*w ...
+    # PCA projection, mirroring ml.pca_project's sql_sum: 0.0 + (c - mean)*w ...
     pcs = []
     for j in range(len(fz["loadings"][0])):
         terms = "".join(
@@ -247,7 +246,7 @@ def _sql_00b() -> str:
         )
         pcs.append(f"0.0{terms} AS pc_{j}")
 
-    # squared distances, mirroring ml._dist_array: 0.0 + diff*diff ...
+    # squared distances, mirroring kmeans_assign's sql_sum: 0.0 + diff*diff ...
     dists = []
     for k, ctr in enumerate(fz["centers"]):
         terms = "".join(
@@ -1375,13 +1374,12 @@ FROM orders GROUP BY 1, 2
 def q42_host_agg(spark, sf_dir):
     from webdq import hostagg
     from webdq.pipeline import PipelineConfig, extract_features
-    from webdq.synth import pages_from_documents
 
     # spread=False: host_metadata prunes the heavy scorer UDFs out of
     # extract_features (only n_words/warc_ts/host survive pruning), so
     # the per-row work is light and the spread shuffle is a measured
     # small net loss here (0.66 vs 0.89 s warm at sf1.0)
-    pages = pages_from_documents(spark, sf_dir, spread=False)
+    pages = synth.pages_from_documents(spark, sf_dir, spread=False)
     h = hostagg.host_metadata(extract_features(pages, PipelineConfig()))
     return h.select(
         "host",
@@ -1422,9 +1420,8 @@ def q43_host_pipeline(spark, sf_dir):
     KMeans ⇒ non-SQL-expressible, driver records rows-only. Pinned by
     tests/test_hostagg.py F1 gate instead."""
     from webdq import hostagg
-    from webdq.synth import pages_from_documents
 
-    pages = pages_from_documents(spark, sf_dir)
+    pages = synth.pages_from_documents(spark, sf_dir)
     return hostagg.run_host_pipeline(spark, pages, k=4, keep_top=1)
 
 
@@ -1964,9 +1961,8 @@ def q64_url_filter(spark, sf_dir):
     hostagg.HOST_REGEX with the host-labeling pipeline. DuckDB replays
     the url construction and both predicates."""
     from webdq import urlfilter
-    from webdq.synth import pages_from_documents
 
-    pages = pages_from_documents(spark, sf_dir, spread=False).select("url")
+    pages = synth.pages_from_documents(spark, sf_dir, spread=False).select("url")
     out = urlfilter.apply_url_filters(
         pages,
         blocklist=["src3.example", "src7.example", "src12.example"],
@@ -3107,7 +3103,7 @@ def q86_semantic_dedup(spark, sf_dir):
 
 def _sql_86():
     """Generated oracle for q86: unrolled fixed-order folds (same
-    left-assoc order as dedup._fold_sqdist/_fold_dot), first-min CASE
+    left-assoc order as semantic_dedup's ml.sql_sum), first-min CASE
     assignment, within-cluster pair screen, LEFT JOIN dup flag."""
     kk, dim = _SEMDEDUP_K, _SEMDEDUP_DIM
 

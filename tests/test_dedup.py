@@ -511,8 +511,8 @@ def test_cosine_col_fold_path_bitwise_parity(spark):
         pairs.select(
             "i",
             "j",
-            dedup.cosine_col(F.col("va"), F.col("vb")).alias("hof"),
-            dedup.cosine_col(F.col("va"), F.col("vb"), dim=dim).alias("fold"),
+            dedup.cosine_col("va", "vb").alias("hof"),
+            dedup.cosine_col("va", "vb", dim=dim).alias("fold"),
         )
         .collect()
     )
@@ -535,4 +535,4 @@ def test_cosine_col_fold_path_bitwise_parity(spark):
     for n in (3, 5):
         bad = spark.createDataFrame([([1.0] * 4, [1.0] * n)], "va array<double>, vb array<double>")
         with pytest.raises(Exception, match=f"sizes 4 and {n}"):
-            bad.select(dedup.cosine_col(F.col("va"), F.col("vb"), dim=4)).collect()
+            bad.select(dedup.cosine_col("va", "vb", dim=4)).collect()

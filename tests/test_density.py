@@ -83,46 +83,6 @@ def test_dbscan_partition_invariance(spark):
     assert ga == gb
 
 
-def test_dbscan_max_cell_parity_below_cap(spark):
-    """The hub-cell guard must be a no-op while every grid cell holds
-    ≤ max_cell points — bit-identical labels to the uncapped run."""
-    X = _blobs(seed=3)
-    rows = [(int(i), float(x), float(y)) for i, (x, y) in enumerate(X)]
-    df = spark.createDataFrame(rows, "pid long, x double, y double").repartition(5)
-    exact = {
-        r["pid"]: (r["cluster"], r["is_core"])
-        for r in dbscan(df, ["x", "y"], eps=0.6, min_pts=5, key_col="pid").collect()
-    }
-    capped = {
-        r["pid"]: (r["cluster"], r["is_core"])
-        for r in dbscan(
-            df, ["x", "y"], eps=0.6, min_pts=5, key_col="pid", max_cell=len(X)
-        ).collect()
-    }
-    assert capped == exact
-
-
-def test_dbscan_max_cell_bounds_degenerate_cell(spark):
-    """Above the cap the build side of the grid join keeps exactly
-    max_cell points per cell: a degenerate single-cell clump stops
-    generating O(m²) pairs, and core detection stays conservative
-    (undercounts only — no spurious cores)."""
-    # 200 coincident-ish points in one cell + 10 isolated points
-    rows = [(i, 0.001 * (i % 7), 0.0) for i in range(200)]
-    rows += [(1000 + i, 500.0 + 100.0 * i, 0.0) for i in range(10)]
-    df = spark.createDataFrame(rows, "pid long, x double, y double")
-    out = {
-        r["pid"]: (r["cluster"], r["is_core"])
-        for r in dbscan(df, ["x", "y"], eps=1.0, min_pts=3, key_col="pid", max_cell=8).collect()
-    }
-    # the clump still resolves (8 retained build points ≥ min_pts), the
-    # isolated points remain noise, and nothing crashed at bounded fanout
-    assert all(out[1000 + i] == (None, False) for i in range(10))
-    clump = [out[i] for i in range(200)]
-    assert all(c == 0 for c, _ in clump)  # one component labeled by min id
-    assert all(is_core for _, is_core in clump)  # 8 ≥ min_pts neighbors kept
-
-
 def test_dbscan_all_noise_and_single_cluster(spark):
     # sparse points: everything noise
     sparse = spark.createDataFrame(

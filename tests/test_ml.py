@@ -1,8 +1,14 @@
 """ML core vs numpy oracle: covariance, PCA variance rules, KMeans,
-elbow (SURVEY.md §2.8, M2-M7)."""
+elbow (SURVEY.md §2.8, M2-M7), and the fixed-order SQL-text builder."""
+
+import struct
 
 import numpy as np
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from webdq import ml
 
@@ -225,3 +231,92 @@ def test_pipeline_fused_sample_same_kmeans(spark):
     b = {r["url"]: r["cluster"] for r in out_base.select("url", "cluster").collect()}
     assert a == b
     feats.unpersist(); norm.unpersist()
+
+
+# ------------------------------------------------------ fixed-order SQL text
+
+_EDGE_DOUBLES = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e-05, 1e20, 1.797e308, -0.063316]
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(xs=st.lists(st.floats(allow_nan=False, allow_infinity=False), min_size=1, max_size=40))
+@example(xs=_EDGE_DOUBLES)
+def test_sql_lit_round_trips_every_finite_double(spark, xs):
+    row = spark.range(1).select(*[F.expr(f"{ml.sql_lit(x)} AS x{i}") for i, x in enumerate(xs)]).first()
+    for i, x in enumerate(xs):
+        assert struct.pack("<d", row[f"x{i}"]) == struct.pack("<d", x), (x, row[f"x{i}"])
+
+
+def test_sql_lit_refuses_nan_and_inf():
+    for x in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            ml.sql_lit(x)
+
+
+def test_sql_col_and_first_argmin(spark):
+    """A quoted name with a backtick in it resolves; first_argmin takes
+    the first of tied minima, as numpy argmin does."""
+    cols = ["d0", "d`1", "d2"]
+    schema = T.StructType([T.StructField(c, T.DoubleType()) for c in cols])
+    df = spark.createDataFrame([(1.0, 1.0, 2.0), (3.0, 2.0, 2.0), (5.0, 4.0, 3.0)], schema)
+    df = df.withColumn("m", F.expr(f"least({', '.join(ml.sql_col(c) for c in cols)})"))
+    got = df.select(
+        F.expr(ml.sql_sum(ml.sql_col(c) for c in cols)).alias("s"),
+        F.expr(ml.first_argmin(cols, "m")).alias("j"),
+    ).collect()
+    X = np.array([[1.0, 1.0, 2.0], [3.0, 2.0, 2.0], [5.0, 4.0, 3.0]])
+    assert [r["s"] for r in got] == [(a + b) + c for a, b, c in X]
+    assert [r["j"] for r in got] == list(np.argmin(X, axis=1)) == [0, 1, 2]
+
+
+def _py4j_commands(build) -> int:
+    """py4j commands that one warm call of ``build`` sends to the JVM,
+    without the releases of garbage-collected proxies (their timing is
+    Python's)."""
+    import py4j.clientserver as cs
+
+    build()
+    orig = cs.JavaClient.send_command
+    n = 0
+
+    def counting(self, command, *args, **kw):
+        nonlocal n
+        n += not command.startswith("m\n")
+        return orig(self, command, *args, **kw)
+
+    cs.JavaClient.send_command = counting
+    try:
+        build()
+    finally:
+        cs.JavaClient.send_command = orig
+    return n
+
+
+def test_fold_builds_cost_few_py4j_commands_at_any_dimension(spark):
+    """A fold is one SQL string per output column, so its build cost
+    does not grow with the dimension (a Column fold sends one command
+    per node: 1,896 for pca_project at 12×3). semantic_dedup and
+    pq_encode also build their join and select plumbing."""
+    from webdq import dedup, similarity
+
+    rng = np.random.RandomState(5)
+    cols = [f"f{i}" for i in range(12)]
+    feats = spark.createDataFrame([tuple(rng.rand(12).tolist())], ", ".join(f"{c} double" for c in cols))
+    model = ml.PCAModel(cols=cols, mean=rng.rand(12), loadings=rng.randn(12, 3), eigvals=rng.rand(12))
+    proj = ml.pca_project(feats, model)
+    cost = {
+        "pca_project": _py4j_commands(lambda: ml.pca_project(feats, model)),
+        "kmeans_assign": _py4j_commands(lambda: ml.kmeans_assign(proj, ["pc_0", "pc_1", "pc_2"], rng.randn(4, 3))),
+    }
+    assert cost["pca_project"] <= 50 and cost["kmeans_assign"] <= 50, cost
+    for dim in (8, 64):
+        vec = spark.createDataFrame([(0, [0.5] * dim)], "vec_id long, embedding array<double>")
+        pairs = vec.select(F.col("embedding").alias("a"), F.col("embedding").alias("b"))
+        cents, books = rng.randn(4, dim).tolist(), rng.randn(2, 4, dim // 2)
+        cost[f"cosine_col/{dim}"] = _py4j_commands(lambda: pairs.select(dedup.cosine_col("a", "b", dim=dim)))
+        cost[f"semantic_dedup/{dim}"] = _py4j_commands(lambda: dedup.semantic_dedup(vec, cents))
+        cost[f"pq_encode/{dim}"] = _py4j_commands(lambda: similarity.pq_encode(vec, books))
+    ceiling = {"pca_project": 50, "kmeans_assign": 50, "cosine_col": 50, "semantic_dedup": 600, "pq_encode": 170}
+    assert all(n <= ceiling[name.split("/")[0]] for name, n in cost.items()), cost
+    for name in ("cosine_col", "semantic_dedup", "pq_encode"):
+        assert cost[f"{name}/8"] == cost[f"{name}/64"], cost

@@ -34,9 +34,6 @@ UNSET_ALLOWED = {
     "hostagg.run_host_pipeline(broadcast_hosts_threshold)": "tests force the shuffle join the code picks above 10M hosts",
     "hostagg.run_host_pipeline(workdir)": "checkpoint mode: no workload runs it yet, tests cover its resume path",
     "label.keep_dim_plan(weights)": "perfbench wraps keep_dim_plan; the host weights mirror keep_clusters'",
-    "classifier.hashed_features(ngram_ns)": "roots run unigrams here and (1, 2) through dsir's shared ngram_array",
-    "density.dbscan(max_cell)": "hub-cell guard no query sets; tests check its capped join",
-    "rangejoin.interval_join(max_span_buckets)": "span guard no query sets; tests check it drops long intervals",
     "multimodal.synth_avi_media(partitions)": "tests vary the partition count of the synthetic media",
     "synth.generate_pages(tier_by_host)": "the host-pipeline tests need a host-tiered corpus",
 }
@@ -193,3 +190,30 @@ def test_contract_tables_are_read_through_read_table():
                  *sorted((REPO / "tools").glob("*.py"))]:
         walk(ast.parse(path.read_text()), path)
     assert not found, f"contract-table reads outside storage.read_table: {found}"
+
+
+def test_no_traced_name_is_bound_at_import():
+    """perfbench's tracer wraps a function by replacing its module
+    attribute, so a top-level ``from webdq.<module> import <name>`` of a
+    wrapped name keeps the unwrapped function: the traced run misses
+    its span, and the layer metric reads 0 with no error."""
+    tracing = ast.parse((REPO / "perfbench" / "tracing.py").read_text())
+    traced = {(c.args[0].id, c.args[1].value) for c in ast.walk(tracing)
+              if isinstance(c, ast.Call) and getattr(c.func, "attr", None) == "wrap" and len(c.args) >= 2
+              and isinstance(c.args[0], ast.Name) and isinstance(c.args[1], ast.Constant)}
+    assert ("synth", "pages_from_documents") in traced
+    found = []
+    for path in [REPO / "__spark_entry__.py", REPO / "bench.py", *sorted((REPO / "tools").glob("*.py")),
+                 *sorted((REPO / "webdq").glob("*.py"))]:
+        for stmt in ast.parse(path.read_text()).body:
+            if not isinstance(stmt, ast.ImportFrom) or not stmt.module:
+                continue
+            if stmt.level == 0 and stmt.module.startswith("webdq."):
+                module = stmt.module[len("webdq."):]
+            elif stmt.level == 1:
+                module = stmt.module
+            else:
+                continue
+            found += [f"{path.relative_to(REPO)}:{stmt.lineno} {module}.{a.name}"
+                      for a in stmt.names if (module, a.name) in traced]
+    assert not found, f"traced names bound at import time: {found}"

@@ -453,6 +453,11 @@ def test_bigram_lm_degenerate_model_null_scores(spark):
     assert len(out) == 3
     for r in out:
         assert r["avg_logprob"] is None and r["n_transitions"] == 0, r
+    # trim strips spaces only: tab/newline-only texts have ("", "")
+    # transitions but V = 0, and score NULL, not a log-probability > 0
+    blank = spark.createDataFrame([(12, "\t"), (13, "\n\n")], "doc_id long, text string")
+    out = textprep.bigram_lm_score(blank).collect()
+    assert [(r["avg_logprob"], r["n_transitions"]) for r in out] == [(None, 1), (None, 1)]
     # a sane corpus scores finitely
     docs = spark.createDataFrame([(1, "a b c"), (2, "x y")], "doc_id long, text string")
     ok = textprep.bigram_lm_score(docs).collect()

@@ -7,8 +7,8 @@ public literature).
 Spark-first decomposition (same pattern as webdq.ml's PCA/KMeans:
 distributed data scans, k-or-D-sized driver state):
 
-- ``hashed_features``: NATIVE featurization — explode word n-grams,
-  bucket = pmod(xxhash64(gram), dim), per-doc (bucket → count) pairs
+- ``hashed_features``: NATIVE featurization — explode words,
+  bucket = pmod(xxhash64(word), dim), per-doc (bucket → count) pairs
   re-assembled to aligned arrays with one groupBy. One shuffle total;
   the result is cached across training iterations.
 - ``logreg_fit``: full-batch gradient descent. Each iteration is ONE
@@ -49,7 +49,8 @@ from pyspark.sql.types import StructType
 def ngram_array(text_col: str = "text", ngram_ns: tuple = (1,)):
     """Column expression: every word n-gram of the given orders over a
     whitespace split, one concatenated array (n-grams joined by a
-    single space). Shared by ``hashed_features`` and ``webdq.dsir``."""
+    single space). Shared by ``hashed_features`` (words) and
+    ``webdq.dsir`` (words and bigrams)."""
     toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
     grams = []
     for n in ngram_ns:
@@ -76,11 +77,10 @@ def hashed_features(
     id_col: str = "doc_id",
     text_col: str = "text",
     dim: int = 1 << 15,
-    ngram_ns: tuple = (1,),
     portable: bool = False,
 ) -> DataFrame:
     """(id, buckets:array<int>, vals:array<double>) — hashed
-    bag-of-n-grams, L1-normalized per document (fastText averages
+    bag-of-words, L1-normalized per document (fastText averages
     token vectors; the linear model absorbs any fixed scaling).
     Buckets are sorted ascending (deterministic layout).
 
@@ -89,7 +89,7 @@ def hashed_features(
     any engine with md5 (DuckDB: ``('0x'||substr(md5(g),1,15))::BIGINT``),
     the same cross-engine pattern as dedup.simhash64_portable. xxhash64
     stays the default: one JVM hash beats a hex md5 round-trip."""
-    allg = ngram_array(text_col, ngram_ns)
+    allg = ngram_array(text_col, (1,))
     if portable:
         h = F.conv(F.substring(F.md5("_g"), 1, 15), 16, 10).cast("long")
     else:

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ml import first_argmin, sql_col, sql_elem, sql_lit, sql_sum
+
 
 def _tokens(text_col: str, distinct: bool = True):
     t = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
@@ -275,9 +277,9 @@ def winnow_fingerprints(
     )
 
 
-def cosine_col(a, b, dim: int | None = None):
-    """cos(a, b) for two array<float|double> columns, computed in
-    double. Two bitwise-identical code paths:
+def cosine_col(a: str, b: str, dim: int | None = None):
+    """cos(a, b) for two array<float|double> columns named ``a`` and
+    ``b``, computed in double. Two bitwise-identical code paths:
 
     - ``dim=None``: zip_with/aggregate higher-order functions. HOF
       lambdas are INTERPRETED per element (no codegen, CLAUDE.md), so
@@ -289,32 +291,25 @@ def cosine_col(a, b, dim: int | None = None):
       in OPTIMIZATION_r07.md), with identical outputs. That is not
       the per-query figure: the whole q32 went 332 → 72 s in single
       cold trials on the 10× stand-in. The fold replays the HOF order
-      exactly — each accumulator starts at 0.0 and adds terms left to
-      right, then dot/(sqrt(na)*sqrt(nb)) — so the doubles are
+      exactly — each accumulator (ml.sql_sum) starts at 0.0 and adds
+      terms left to right, then dot/(sqrt(na)*sqrt(nb)) — so the doubles are
       bit-for-bit the HOF values. Every non-null array must have
       exactly ``dim`` elements: any other length raises (a longer
       array would otherwise be silently truncated). At dim ≫ 64 stage
       the three folds as separate columns (janino 64 KB, CLAUDE.md).
     """
     if dim is not None:
-        def fold(terms):
-            e = F.lit(0.0)
-            for t in terms:
-                e = e + t
-            return e
-
+        qa, qb = sql_col(a), sql_col(b)
         # the guard wraps each array, not the fold: a CASE around the
         # fold would keep its element_at terms out of common-
         # subexpression elimination and push the method past 64 KB
-        bad = a.isNotNull() & b.isNotNull() & ((F.size(a) != dim) | (F.size(b) != dim))
-        err = F.raise_error(F.format_string(f"cosine_col(dim={dim}): array sizes %d and %d", F.size(a), F.size(b)))
-        a, b = (F.when(bad, err).otherwise(v) for v in (a, b))
-        ae = [F.element_at(a, i + 1).cast("double") for i in range(dim)]
-        be = [F.element_at(b, i + 1).cast("double") for i in range(dim)]
-        dot = fold([x * y for x, y in zip(ae, be)])
-        na = F.sqrt(fold([x * x for x in ae]))
-        nb = F.sqrt(fold([y * y for y in be]))
-        return dot / (na * nb)
+        bad = f"{qa} IS NOT NULL AND {qb} IS NOT NULL AND (size({qa}) != {dim} OR size({qb}) != {dim})"
+        err = f"raise_error(format_string('cosine_col(dim={dim}): array sizes %d and %d', size({qa}), size({qb})))"
+        ae, be = ([sql_elem(f"CASE WHEN {bad} THEN {err} ELSE {v} END", i + 1) for i in range(dim)] for v in (qa, qb))
+        dot = sql_sum(["0.0D", *(f"{x} * {y}" for x, y in zip(ae, be))])
+        na = sql_sum(["0.0D", *(f"{x} * {x}" for x in ae)])
+        nb = sql_sum(["0.0D", *(f"{y} * {y}" for y in be)])
+        return F.expr(f"({dot}) / (sqrt({na}) * sqrt({nb}))")
     ad = F.transform(a, lambda x: x.cast("double"))
     bd = F.transform(b, lambda x: x.cast("double"))
     dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -341,7 +336,7 @@ def embedding_neardup_pairs(
     return (
         a.join(b, ["_blk"])
         .filter(F.col("id1") < F.col("id2"))
-        .withColumn("cosine", cosine_col(F.col("_v1"), F.col("_v2"), dim=dim))
+        .withColumn("cosine", cosine_col("_v1", "_v2", dim=dim))
         .filter(F.col("cosine") >= threshold)
         .select("id1", "id2", F.round("cosine", 6).alias("cosine"))
     )
@@ -607,30 +602,6 @@ def span_dedup_corpus(
     )
 
 
-def _fold_sqdist(vec_col: str, centroid) -> "F.Column":
-    """Squared L2 distance vector↔literal centroid as a fixed
-    left-assoc native fold (the q77 order contract: every mul/add is
-    IEEE-correctly-rounded, so any engine replaying the same order
-    reproduces the double bit-for-bit)."""
-    e = None
-    for t, c in enumerate(centroid):
-        x = F.element_at(F.col(vec_col), t + 1).cast("double") - F.lit(float(c))
-        term = x * x
-        e = term if e is None else e + term
-    return e
-
-
-def _fold_dot(a_col: str, b_col: str, dim: int) -> "F.Column":
-    """Dot product of two array columns, fixed left-assoc fold."""
-    e = None
-    for t in range(dim):
-        term = F.element_at(F.col(a_col), t + 1).cast("double") * F.element_at(
-            F.col(b_col), t + 1
-        ).cast("double")
-        e = term if e is None else e + term
-    return e
-
-
 def semantic_dedup(
     df: DataFrame,
     centroids: list,
@@ -651,7 +622,8 @@ def semantic_dedup(
     from ``ml.fit_kmeans`` in production; the contract query freezes
     arithmetic centroids (the q72/q77 frozen-model pattern) so every
     float — assignment distances, norms, pair dots, the division —
-    is a fixed left-assoc fold an oracle engine replays bit-for-bit.
+    is a fixed left-assoc fold (ml.sql_sum, argmin by
+    ml.first_argmin) an oracle engine replays bit-for-bit.
 
     Scale shape: assignment + norms are pure projections (zero
     shuffle; k staged distance columns keep each generated method
@@ -673,23 +645,16 @@ def semantic_dedup(
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     dim = len(centroids[0])
-    kk = len(centroids)
+    dc = [f"_dc_{j}" for j in range(len(centroids))]
+    v = [sql_elem(sql_col(vec_col), t + 1) for t in range(dim)]
+    diffs = [[f"({x} - {sql_lit(c)})" for x, c in zip(v, ctr)] for ctr in centroids]
     staged = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        *[_fold_sqdist(vec_col, centroids[j]).alias(f"_dc_{j}") for j in range(kk)],
+        id_col, vec_col, *[F.expr(f"{sql_sum(f'{x} * {x}' for x in d)} AS {n}") for d, n in zip(diffs, dc)]
     )
     staged = staged.withColumn(
-        "_nm", F.sqrt(_fold_dot(vec_col, vec_col, dim))
-    ).withColumn("_mind", F.least(*[F.col(f"_dc_{j}") for j in range(kk)]))
-    cl = None
-    for j in range(kk - 1):
-        cond = F.col(f"_dc_{j}") == F.col("_mind")
-        cl = F.when(cond, j) if cl is None else cl.when(cond, j)
-    cl = (F.lit(0) if cl is None else cl.otherwise(kk - 1)).cast("int")
-    assigned = staged.select(
-        F.col(id_col), F.col(vec_col), F.col("_nm"), cl.alias(cluster_col)
-    )
+        "_nm", F.expr(f"sqrt({sql_sum(f'{x} * {x}' for x in v)})")
+    ).withColumn("_mind", F.least(*dc))
+    assigned = staged.select(id_col, vec_col, "_nm", F.expr(f"{first_argmin(dc, '_mind')} AS {sql_col(cluster_col)}"))
     a = assigned.select(
         F.col(id_col).alias("_ida"),
         F.col(vec_col).alias("_va"),
@@ -703,7 +668,8 @@ def semantic_dedup(
         F.col(cluster_col).alias("_cl"),
     )
     pairs = a.join(b, "_cl").filter(F.col("_ida") < F.col("_idb"))
-    cos = _fold_dot("_va", "_vb", dim) / (F.col("_na") * F.col("_nb"))
+    dot = sql_sum(f"{sql_elem('`_va`', t + 1)} * {sql_elem('`_vb`', t + 1)}" for t in range(dim))
+    cos = F.expr(f"({dot}) / (`_na` * `_nb`)")
     dups = (
         pairs.filter(cos >= F.lit(float(threshold)))
         .select(F.col("_idb").alias(id_col))

@@ -20,8 +20,8 @@ low-dimensional (d ≤ 3) feature spaces:
   the same rule). Noise → cluster NULL.
 
 Scale notes (10^12 points): candidate pairs are bounded by grid-cell
-occupancy (skewed dense cells can be capped like the LSH max_bucket
-knob); propagation state is one long per CORE point; every step is an
+occupancy (a dense cell of m points contributes m² pairs; no cell is
+capped); propagation state is one long per CORE point; every step is an
 equi-join or hash aggregation. For adversarial component diameters
 swap min-propagation for large-star/small-star — identical join
 shapes. DBSCAN itself: Ester/Kriegel/Sander/Xu, KDD '96 (public).
@@ -31,10 +31,11 @@ from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webdq.graph import connected_components
+from webdq.ml import sql_sum
 
 
 def dbscan(
@@ -43,7 +44,6 @@ def dbscan(
     eps: float,
     min_pts: int,
     key_col: str,
-    max_cell: int | None = None,
     eager: bool = True,
 ) -> DataFrame:
     """DBSCAN over the numeric columns ``cols`` (1 ≤ d ≤ 3).
@@ -53,15 +53,6 @@ def dbscan(
     for noise). ``key_col`` must be integral — the key doubles as the
     propagation label. ``min_pts`` counts the point itself (sklearn
     convention).
-
-    ``max_cell`` is the hub-cell guard (the LSH ``max_bucket`` analog):
-    a single degenerate grid cell with m points contributes O(m²)
-    candidate pairs, so the BUILD side keeps only the ``max_cell``
-    points with smallest xxhash64(key) per cell. Below the cap the
-    result is bit-identical to the uncapped run (parity-tested); above
-    it, neighbor counts are undercounted (core detection turns
-    conservative) — the standard bounded-fanout trade. Default None =
-    exact.
 
     ``eager`` (default) materializes the result (localCheckpoint) so
     every intermediate cache can be released before returning — the
@@ -99,21 +90,7 @@ def dbscan(
         *[F.col(f"_x{i}").alias(f"_y{i}") for i in range(d)],
         *[F.col(f"_c{i}").alias(f"_pc{i}") for i in range(d)],
     )
-    if max_cell is not None:
-        # deterministic per-cell TopK by hash — cheap (one window over
-        # the cell partitioning) and independent of input order
-        wcell = Window.partitionBy(*[f"_pc{i}" for i in range(d)]).orderBy(
-            F.xxhash64("_jd"), F.col("_jd")
-        )
-        build = (
-            build.withColumn("_rk", F.row_number().over(wcell))
-            .filter(F.col("_rk") <= max_cell)
-            .drop("_rk")
-        )
-    dist2 = F.lit(0.0)
-    for i in range(d):
-        diff = F.col(f"_x{i}") - F.col(f"_y{i}")
-        dist2 = dist2 + diff * diff
+    dist2 = F.expr(sql_sum(["0.0D", *(f"(`_x{i}` - `_y{i}`) * (`_x{i}` - `_y{i}`)" for i in range(d))]))
     # ordered pairs INCLUDING self (self-distance 0 ⇒ min_pts counts
     # the point itself); each pair appears exactly once because the
     # build side's cell is unique and the probe visits it once
@@ -141,15 +118,6 @@ def dbscan(
         .join(core.select(F.col("_id").alias("dst")), "dst")
         .select("src", "dst")
     )
-    if max_cell is not None:
-        # the capped build side makes the pair set ASYMMETRIC (a
-        # non-retained core appears as src but never as dst, so labels
-        # could not flow back to it) — symmetrize explicitly; the
-        # uncapped join is symmetric by construction. Duplicate edges
-        # are harmless: propagation is a min-aggregate.
-        core_edges = core_edges.unionByName(
-            core_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
     if eager:
         core_edges = core_edges.persist()
 

@@ -17,7 +17,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ml import cluster_means
+from .ml import cluster_means, sql_col, sql_lit, sql_sum
 
 # Weights over (min-max-scaled) feature columns. Positive = quality
 # signal, negative = junk signal. Unknown columns weigh 0.
@@ -83,23 +83,19 @@ def keep_dim_plan(
     weights: dict[str, float] | None = None,
 ) -> DataFrame:
     """cluster → keep verdict as a lazy plan (no driver collect): one
-    aggregation to k rows, composite score as an expression, rank via
+    aggregation to k rows, composite score as one ml.sql_sum, rank via
     a window over the k-row frame (single tiny partition — k ≤ 16).
     Same semantics as keep_map on collected centroids: rank by
     -score, ties by cluster id; fused into the consumer's job graph so
     label emission costs zero extra driver round-trips."""
     weights = weights or QUALITY_WEIGHTS
     agg = clustered.groupBy(cluster_col).agg(*[F.avg(c).alias(c) for c in cols])
-    score = F.lit(0.0)
-    for c in cols:
-        w = weights.get(c, 0.0)
-        if w:
-            score = score + F.lit(float(w)) * F.col(c)
+    score = sql_sum(["0.0D", *(f"{sql_lit(weights[c])} * {sql_col(c)}" for c in cols if weights.get(c, 0.0))])
     from pyspark.sql import Window
 
     rank_w = Window.orderBy(F.desc("_score"), F.asc(cluster_col))
     return (
-        agg.withColumn("_score", score)
+        agg.withColumn("_score", F.expr(score))
         .withColumn("_r", F.row_number().over(rank_w))
         .select(cluster_col, (F.col("_r") <= keep_top).alias("keep"))
     )

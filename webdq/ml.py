@@ -9,6 +9,12 @@ k×d / d×d matrices ever reach the driver.
   /root/reference/osmdq/unsupervised_learning.py:25-53 (np.cov + eig).
 - PCA projection = centered dot-product expressions (no VectorUDT, no
   Python): survives whole-stage codegen.
+- The fold-order rule lives in one builder (``sql_lit``, ``sql_col``,
+  ``sql_elem``, ``sql_sum``, ``first_argmin``): every unrolled float
+  dot product, squared distance and projection in webdq is a
+  left-associated sum written as SQL text and parsed by one
+  ``F.expr``, so an oracle engine replays it bit for bit and the
+  driver builds it in a few py4j commands, not one per node.
 - Small global statistics (each Lloyd round, the cluster ranking in
   label.keep_clusters, the ECDF probe) reach the driver through
   ``observe_row``: one Spark job with one stage, no exchange and no
@@ -33,6 +39,44 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+# ------------------------------------------------- fixed-order SQL text
+# Spark's parser groups ``a + b + c`` as ``(a + b) + c``: a sum written
+# with sql_sum is evaluated left to right, term by term, in IEEE
+# doubles.
+
+def sql_lit(x: float) -> str:
+    """``x`` as a DOUBLE literal; ``repr`` round-trips every finite
+    double (-0.0 and subnormals included). NaN and ±inf have no
+    literal and raise, as _exact_sum refuses them."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"sql_lit: {x} is not a finite double")
+    return repr(x) + "D"
+
+
+def sql_col(name: str) -> str:
+    """The column ``name`` quoted for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_elem(arr: str, i: int) -> str:
+    """Element ``i`` (1-based) of the array SQL text ``arr``, as DOUBLE."""
+    return f"CAST(element_at({arr}, {i}) AS DOUBLE)"
+
+
+def sql_sum(terms) -> str:
+    """The left-associated sum of the SQL terms, in their order."""
+    return " + ".join(terms)
+
+
+def first_argmin(cols: list[str], min_col: str) -> str:
+    """Index of the first of ``cols`` (two or more, like ``least``)
+    equal to ``min_col``, their least: numpy argmin's first-minimum
+    rule, as an INT."""
+    whens = " ".join(f"WHEN {sql_col(c)} = {sql_col(min_col)} THEN {j}" for j, c in enumerate(cols[:-1]))
+    return f"CAST(CASE {whens} ELSE {len(cols) - 1} END AS INT)"
 
 
 # --------------------------------------------------------- driver stats
@@ -315,10 +359,9 @@ def pca_project(df: DataFrame, model: PCAModel, prefix: str = "pc_") -> DataFram
     """Append pc_0..pc_{k-1} — centered dot products, pure expressions."""
     out = {}
     for j in range(model.loadings.shape[1]):
-        expr: Column = F.lit(0.0)
-        for i, c in enumerate(model.cols):
-            expr = expr + (F.col(c) - F.lit(float(model.mean[i]))) * F.lit(float(model.loadings[i, j]))
-        out[f"{prefix}{j}"] = expr
+        terms = [f"({sql_col(c)} - {sql_lit(model.mean[i])}) * {sql_lit(model.loadings[i, j])}"
+                 for i, c in enumerate(model.cols)]
+        out[f"{prefix}{j}"] = F.expr(sql_sum(["0.0D", *terms]))
     return df.withColumns(out)
 
 
@@ -326,13 +369,10 @@ def pca_project(df: DataFrame, model: PCAModel, prefix: str = "pc_") -> DataFram
 
 def _dist_array(cols: list[str], centers: np.ndarray) -> Column:
     dists = []
-    for c in centers:
-        expr: Column = F.lit(0.0)
-        for i, col in enumerate(cols):
-            diff = F.col(col) - F.lit(float(c[i]))
-            expr = expr + diff * diff
-        dists.append(expr)
-    return F.array(*dists)
+    for ctr in centers:
+        diffs = [f"({sql_col(c)} - {sql_lit(v)})" for c, v in zip(cols, ctr)]
+        dists.append(sql_sum(["0.0D", *(f"{x} * {x}" for x in diffs)]))
+    return F.expr(f"array({', '.join(dists)})")
 
 
 def kmeans_assign(df: DataFrame, cols: list[str], centers: np.ndarray, out: str = "cluster") -> DataFrame:

@@ -27,9 +27,8 @@ analog: events inside incident/session windows):
 
 Scale notes (10^12 events): the bucket join shuffles on a uniform
 time-bucket key (time is naturally balanced; a thundering-herd second
-can be salted by appending a hash-mod column to both sides);
-``max_span_buckets`` guards degenerate intervals the way the LSH
-``max_bucket`` knob guards hub buckets. Sessionize is one shuffle on
+can be salted by appending a hash-mod column to both sides).
+Sessionize is one shuffle on
 the session key — the same partitioning any per-user downstream agg
 reuses.
 """
@@ -54,7 +53,6 @@ def interval_join(
     end_col: str,
     bucket_width_s: float = 600.0,
     on: list[str] | None = None,
-    max_span_buckets: int | None = None,
 ) -> DataFrame:
     """All (row, interval) pairs with ``start <= ts <= end`` (closed on
     both ends), plus optional extra equi-keys ``on``.
@@ -62,10 +60,8 @@ def interval_join(
     Output: every column of ``rows`` then every column of
     ``intervals`` (callers alias collisions away first). Intervals
     with ``end < start`` match nothing (consistent with the SQL
-    predicate). ``max_span_buckets`` (None = unlimited) DROPS intervals
-    covering more buckets — the disclosed skew guard for degenerate
-    spans; pick ``bucket_width_s`` near the typical span so fanout
-    stays ~2."""
+    predicate). Pick ``bucket_width_s`` near the typical span so
+    fanout stays ~2."""
     w_us = int(bucket_width_s * 1_000_000)
     if w_us <= 0:
         raise ValueError(
@@ -77,8 +73,6 @@ def interval_join(
     sb = F.floor(_us(F.col(start_col)) / F.lit(w_us))
     eb = F.floor(_us(F.col(end_col)) / F.lit(w_us))
     iv = intervals.filter(F.col(end_col) >= F.col(start_col))
-    if max_span_buckets is not None:
-        iv = iv.filter(eb - sb < F.lit(max_span_buckets))
     iv = iv.withColumn("_bkt", F.explode(F.sequence(sb, eb)))
 
     joined = r.join(iv, ["_bkt", *on]).filter(
@@ -118,8 +112,8 @@ def bbox_join(
     its single cell. No CartesianProduct, no BroadcastNestedLoopJoin.
 
     ``max_span_cells`` DROPS boxes whose covered-cell count reaches
-    the cap — the disclosed skew guard for degenerate rectangles
-    (same role as interval_join's max_span_buckets); pick cell sizes
+    the cap — the disclosed skew guard for degenerate rectangles;
+    pick cell sizes
     near the typical box span so fanout stays ~4. Boxes with
     ``xmax < xmin`` or ``ymax < ymin`` match nothing (consistent with
     the SQL predicate). Coordinates are compared as doubles; floor

@@ -20,8 +20,8 @@ per batch) — the idiomatic fast path for per-row linear algebra.
   al. 2011) — the compressed-domain ANN path: m sub-codes per vector
   against caller-supplied (m, k, dim/m) codebooks, asymmetric distance
   computation against a broadcast query set. Encode and ADC are
-  NATIVE fixed-fold-order expressions (no UDF), so they are
-  engine-replayable and stay in codegen.
+  NATIVE fixed-fold-order expressions (ml.sql_sum text, no UDF), so
+  they are engine-replayable and stay in codegen.
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .dedup import cosine_col
+from .ml import first_argmin, sql_col, sql_elem, sql_lit, sql_sum
 
 
 def cosine_topk(
@@ -53,7 +54,7 @@ def cosine_topk(
     scored = (
         c.join(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("_qid"))
-        .withColumn("cosine", cosine_col(F.col("_cv"), F.col("_qv")))
+        .withColumn("cosine", cosine_col("_cv", "_qv"))
     )
     w = Window.partitionBy("_qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -133,7 +134,7 @@ def lsh_topk(
     cand = (
         c.join(q, join_keys)
         .filter(F.col("neighbor_id") != F.col("_qid"))
-        .withColumn("cosine", cosine_col(F.col("_cv"), F.col("_qv"), dim=dim))
+        .withColumn("cosine", cosine_col("_cv", "_qv", dim=dim))
         .dropDuplicates(["_qid", "neighbor_id"])
     )
     w = Window.partitionBy("_qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -225,7 +226,7 @@ def ivf_topk(
         # centroids carry the fixed corpus dimension — fold path free
         .withColumn(
             "cosine",
-            cosine_col(F.col("_cv"), F.col("_qv"), dim=int(np.asarray(centroids).shape[1])),
+            cosine_col("_cv", "_qv", dim=int(np.asarray(centroids).shape[1])),
         )
         .dropDuplicates(["_qid", "neighbor_id"])
     )
@@ -255,8 +256,6 @@ def embedding_neardup_pairs_lsh(
     near-duplicate recall follows 1−(1−(1−θ/π)^b)^L. Buckets of more
     than 10,000 rows are dropped as degenerate hubs (the LSH skew guard
     — a bucket of m rows contributes m² candidate pairs)."""
-    from .dedup import cosine_col as _cos
-
     keyed = lsh_buckets(
         df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
         dim, n_bits, "_v", n_tables=n_tables,
@@ -269,7 +268,7 @@ def embedding_neardup_pairs_lsh(
     return (
         a.join(b, join_keys)
         .filter(F.col("id1") < F.col("id2"))
-        .withColumn("cosine", _cos(F.col("_v1"), F.col("_v2"), dim=dim))
+        .withColumn("cosine", cosine_col("_v1", "_v2", dim=dim))
         .filter(F.col("cosine") >= threshold)
         .dropDuplicates(["id1", "id2"])
         .select("id1", "id2", F.round("cosine", 6).alias("cosine"))
@@ -291,19 +290,15 @@ def ann_recall(exact: DataFrame, approx: DataFrame) -> float:
 # Nearest Neighbor Search", TPAMI 2011 (the FAISS PQ baseline).
 
 
-def _pq_sqdist_expr(vec_col, s: int, dsub: int, centroid, offset: int = 0):
-    """Squared L2 distance between one subvector and one centroid as a
-    NATIVE expression with a FIXED left-to-right fold order
-    (((t0+t1)+t2)+...) — the order contract that lets an oracle engine
-    replay the float arithmetic bit-for-bit. element_at is O(1) per
-    term on the array; the whole thing stays inside whole-stage
-    codegen (no UDF, no Arrow hop)."""
-    e = None
-    for t, c in enumerate(centroid):
-        x = F.element_at(F.col(vec_col), offset + s * dsub + t + 1).cast("double") - F.lit(float(c))
-        term = x * x
-        e = term if e is None else e + term
-    return e
+def _pq_sqdist(vec_col: str, s: int, centroid) -> str:
+    """Squared L2 distance from subvector ``s`` of ``vec_col`` to one
+    centroid: the fixed left-to-right fold (((t0+t1)+t2)+...) of
+    ml.sql_sum, the order an oracle engine replays bit for bit.
+    element_at is O(1) per term, and the expression stays inside
+    whole-stage codegen (no UDF, no Arrow hop)."""
+    dsub = len(centroid)
+    diffs = [f"({sql_elem(sql_col(vec_col), s * dsub + t + 1)} - {sql_lit(c)})" for t, c in enumerate(centroid)]
+    return sql_sum(f"{x} * {x}" for x in diffs)
 
 
 def pq_encode(
@@ -314,7 +309,7 @@ def pq_encode(
     codes_col: str = "codes",
 ) -> DataFrame:
     """Distributed PQ encoding: codes[s] = argmin_j ||x_s − c_{s,j}||²
-    (first minimum on ties — the least()+first-match CASE below ≡
+    (first minimum on ties — least() then ml.first_argmin ≡
     numpy argmin). Pure projection — encoding 10^12 vectors is a
     single map stage with zero shuffle and zero Python. Built as
     STAGED selects that materialize each of the m·k distances as its
@@ -327,28 +322,15 @@ def pq_encode(
     codegen splits them into separate methods and the stage compiles."""
     mm, kk, dsub = codebooks.shape
     d = df.select(
-        F.col(id_col),
-        *[
-            _pq_sqdist_expr(vec_col, s, dsub, codebooks[s, j]).alias(f"_d_{s}_{j}")
-            for s in range(mm)
-            for j in range(kk)
-        ],
+        id_col,
+        *[F.expr(f"{_pq_sqdist(vec_col, s, codebooks[s, j])} AS _d_{s}_{j}") for s in range(mm) for j in range(kk)],
     )
     mins = d.select(
         "*",
-        *[
-            F.least(*[F.col(f"_d_{s}_{j}") for j in range(kk)]).alias(f"_m_{s}")
-            for s in range(mm)
-        ],
+        *[F.least(*[f"_d_{s}_{j}" for j in range(kk)]).alias(f"_m_{s}") for s in range(mm)],
     )
-    codes = []
-    for s in range(mm):
-        c = None
-        for j in range(kk - 1):
-            cond = F.col(f"_d_{s}_{j}") == F.col(f"_m_{s}")
-            c = F.when(cond, j) if c is None else c.when(cond, j)
-        codes.append((F.lit(0) if c is None else c.otherwise(kk - 1)).cast("int"))
-    return mins.select(F.col(id_col), F.array(*codes).alias(codes_col))
+    codes = [first_argmin([f"_d_{s}_{j}" for j in range(kk)], f"_m_{s}") for s in range(mm)]
+    return mins.select(id_col, F.expr(f"array({', '.join(codes)}) AS {sql_col(codes_col)}"))
 
 
 def pq_lut(
@@ -371,11 +353,7 @@ def pq_lut(
     # 64 KB trap — see pq_encode); from attributes it is tiny
     d = q.select(
         "_qid",
-        *[
-            _pq_sqdist_expr("_qv", s, dsub, codebooks[s, j]).alias(f"_d_{s}_{j}")
-            for s in range(mm)
-            for j in range(kk)
-        ],
+        *[F.expr(f"{_pq_sqdist('_qv', s, codebooks[s, j])} AS _d_{s}_{j}") for s in range(mm) for j in range(kk)],
     )
     entries = [
         F.struct(
@@ -405,7 +383,7 @@ def pq_adc_topk(
     matched distances back to columns with per-subspace conditional
     aggregates (each (query, vector, subspace) matches EXACTLY one
     lut row, so max() is selection, not reduction), and sum the m
-    columns in a FIXED left-to-right fold — deterministic,
+    columns in a FIXED left-to-right fold (ml.sql_sum) — deterministic,
     partition-invariant, engine-replayable, and every expression
     small enough to stay in whole-stage codegen (a single monolithic
     CASE-tree ADC expression blows janino's 64 KB method limit and
@@ -440,11 +418,7 @@ def pq_adc_topk(
     g = scored.groupBy("_qid", "neighbor_id").agg(
         *[F.max(F.when(F.col("_s") == s, F.col("_d"))).alias(f"_d{s}") for s in range(mm)]
     )
-    adc = None
-    for s in range(mm):
-        c = F.col(f"_d{s}")
-        adc = c if adc is None else adc + c
-    g = g.withColumn("adc_dist", adc)
+    g = g.withColumn("adc_dist", F.expr(sql_sum(f"_d{s}" for s in range(mm))))
     w = Window.partitionBy("_qid").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (
         g.withColumn("rank", F.row_number().over(w))

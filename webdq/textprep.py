@@ -350,10 +350,9 @@ def bigram_lm_score(
     aggregate OVER the bigram table (one row per distinct bigram —
     no second pass over the corpus); V is a 1-row aggregate broadcast
     via crossJoin (no driver sync). The count tables join back on
-    (prev, cur) / prev as left joins with coalesce(0): every scored
-    transition is in them, but that plan shape is the one the q87/q92
-    oracles were checked against. At 10^12 docs the scored side is
-    one explode + two equi-joins + one map-side-combined groupBy —
+    (prev, cur) / prev as inner joins: the corpus scores itself, so
+    every scored transition is in them. At 10^12 docs the scored side
+    is one explode + two equi-joins + one map-side-combined groupBy —
     no window, no Python.
 
     Reference analog: the reference's per-record quality features
@@ -386,20 +385,14 @@ def bigram_lm_score(
     )
     st = _transitions(df)
     k = F.lit(_ADD_K)
-    # V = 0 would make the smoothed denominator 0 and every logp +Inf.
-    # A self-scored corpus has V = 0 only when it has no transition to
-    # score, so this guard never fires; it stays because it is part of
-    # the q87/q92 plans their oracles were checked against.
-    logp = F.when(
-        F.col("_v") > 0,
-        F.log(
-            (F.coalesce(F.col("_cb"), F.lit(0)) + k)
-            / (F.coalesce(F.col("_cc"), F.lit(0)) + k * F.col("_v"))
-        ),
-    )
+    # V counts non-empty tokens only, and trim strips spaces only: a
+    # corpus of tab- or newline-only texts has ("", "") transitions but
+    # V = 0, where add-1 would give a log-probability above 0. Such a
+    # corpus scores NULL.
+    logp = F.when(F.col("_v") > 0, F.log((F.col("_cb") + k) / (F.col("_cc") + k * F.col("_v"))))
     scored = (
-        st.join(big, ["_prev", "_cur"], "left")
-        .join(ctx, "_prev", "left")
+        st.join(big, ["_prev", "_cur"])
+        .join(ctx, "_prev")
         .crossJoin(F.broadcast(vocab))
         .groupBy(id_col)
         .agg(
