@@ -269,35 +269,14 @@ def test_sql_col_and_first_argmin(spark):
     assert [r["j"] for r in got] == list(np.argmin(X, axis=1)) == [0, 1, 2]
 
 
-def _py4j_commands(build) -> int:
-    """py4j commands that one warm call of ``build`` sends to the JVM,
-    without the releases of garbage-collected proxies (their timing is
-    Python's)."""
-    import py4j.clientserver as cs
-
-    build()
-    orig = cs.JavaClient.send_command
-    n = 0
-
-    def counting(self, command, *args, **kw):
-        nonlocal n
-        n += not command.startswith("m\n")
-        return orig(self, command, *args, **kw)
-
-    cs.JavaClient.send_command = counting
-    try:
-        build()
-    finally:
-        cs.JavaClient.send_command = orig
-    return n
-
-
-def test_fold_builds_cost_few_py4j_commands_at_any_dimension(spark):
+def test_fold_builds_cost_few_py4j_commands_at_any_dimension(spark, py4j_commands):
     """A fold is one SQL string per output column, so its build cost
     does not grow with the dimension (a Column fold sends one command
     per node: 1,896 for pca_project at 12×3). semantic_dedup and
-    pq_encode also build their join and select plumbing."""
-    from webdq import dedup, similarity
+    pq_encode also build their join and select plumbing. The ECDF's
+    bucket tree is one string at any bucket count: 4 commands (as
+    Columns, 1,970 for 63 boundaries)."""
+    from webdq import dedup, normalize, similarity
 
     rng = np.random.RandomState(5)
     cols = [f"f{i}" for i in range(12)]
@@ -305,18 +284,47 @@ def test_fold_builds_cost_few_py4j_commands_at_any_dimension(spark):
     model = ml.PCAModel(cols=cols, mean=rng.rand(12), loadings=rng.randn(12, 3), eigvals=rng.rand(12))
     proj = ml.pca_project(feats, model)
     cost = {
-        "pca_project": _py4j_commands(lambda: ml.pca_project(feats, model)),
-        "kmeans_assign": _py4j_commands(lambda: ml.kmeans_assign(proj, ["pc_0", "pc_1", "pc_2"], rng.randn(4, 3))),
+        "pca_project": py4j_commands(lambda: ml.pca_project(feats, model)),
+        "kmeans_assign": py4j_commands(lambda: ml.kmeans_assign(proj, ["pc_0", "pc_1", "pc_2"], rng.randn(4, 3))),
     }
     assert cost["pca_project"] <= 50 and cost["kmeans_assign"] <= 50, cost
     for dim in (8, 64):
         vec = spark.createDataFrame([(0, [0.5] * dim)], "vec_id long, embedding array<double>")
         pairs = vec.select(F.col("embedding").alias("a"), F.col("embedding").alias("b"))
         cents, books = rng.randn(4, dim).tolist(), rng.randn(2, 4, dim // 2)
-        cost[f"cosine_col/{dim}"] = _py4j_commands(lambda: pairs.select(dedup.cosine_col("a", "b", dim=dim)))
-        cost[f"semantic_dedup/{dim}"] = _py4j_commands(lambda: dedup.semantic_dedup(vec, cents))
-        cost[f"pq_encode/{dim}"] = _py4j_commands(lambda: similarity.pq_encode(vec, books))
-    ceiling = {"pca_project": 50, "kmeans_assign": 50, "cosine_col": 50, "semantic_dedup": 600, "pq_encode": 170}
+        cost[f"cosine_col/{dim}"] = py4j_commands(lambda: pairs.select(dedup.cosine_col("a", "b", dim=dim)))
+        cost[f"semantic_dedup/{dim}"] = py4j_commands(lambda: dedup.semantic_dedup(vec, cents))
+        cost[f"pq_encode/{dim}"] = py4j_commands(lambda: similarity.pq_encode(vec, books))
+    for nb in (63, 4095):
+        bs = sorted(rng.rand(nb).tolist())
+        cost[f"bucket_expr/{nb}"] = py4j_commands(
+            lambda: feats.withColumn("_b", F.expr(normalize.bucket_expr("`f0`", bs, 0, nb)))
+        )
+    ceiling = {"pca_project": 50, "kmeans_assign": 50, "cosine_col": 50, "semantic_dedup": 600, "pq_encode": 170,
+               "bucket_expr": 20}
     assert all(n <= ceiling[name.split("/")[0]] for name, n in cost.items()), cost
     for name in ("cosine_col", "semantic_dedup", "pq_encode"):
         assert cost[f"{name}/8"] == cost[f"{name}/64"], cost
+    assert cost["bucket_expr/63"] == cost["bucket_expr/4095"], cost
+
+
+def test_cluster_means_exact_sums_and_guard(spark):
+    """cluster_means sums in exact DECIMAL: each mean is the exact
+    decimal total over the count at any partitioning (a double sum
+    loses the 1.0 between ±1e18 and reads 0.1 + 0.2 + 0.3 as
+    0.6000000000000001); a cluster with no members is a NaN row. NaN,
+    +inf and 1e19 raise instead of being dropped by the decimal cast."""
+    from decimal import Decimal
+
+    rows = [(0, 1e18), (0, 1.0), (0, -1e18), (1, 0.1), (1, 0.2), (1, 0.3)]
+    df = spark.createDataFrame(rows, "c int, x double")
+    exact = [float(sum(Decimal(repr(x)) for c, x in rows if c == j)) / 3 for j in (0, 1)]
+    assert exact == [1.0 / 3, 0.6 / 3]
+    for parts in (1, 3):
+        sizes, means = ml.cluster_means(df.repartition(parts), "c", ["x"], 3)
+        assert sizes.tolist() == [3, 3, 0]
+        assert means[:2, 0].tolist() == exact and np.isnan(means[2, 0])
+    for bad in (float("nan"), float("inf"), 1e19):
+        bad_df = spark.createDataFrame([(0, 1.0), (1, bad)], "c int, x double")
+        with pytest.raises(Exception, match="_exact_sum"):
+            ml.cluster_means(bad_df, "c", ["x"], 2)

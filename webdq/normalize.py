@@ -24,7 +24,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ml import observe_row
+from .ml import observe_row, sql_col, sql_lit
 
 # ecdf's percentile-sketch accuracy is 1/_REL_ERR; high-cardinality
 # columns get n_rows/_ROWS_PER_BUCKET range buckets, clamped to
@@ -33,6 +33,23 @@ _REL_ERR = 0.01
 _MIN_BUCKETS = 64
 _MAX_BUCKETS = 4096
 _ROWS_PER_BUCKET = 1_000_000
+
+
+def bucket_expr(col: str, bs: list[float], lo: int, hi: int) -> str:
+    """SQL text of the bucket id of ``col`` (SQL text): lo + the number
+    of boundaries in ``bs[lo:hi]`` (sorted) strictly below it, as a
+    balanced CASE-WHEN binary-search tree — codegen'd, ≤ log2(B)
+    compares, where an array-filter HOF is interpreted and re-evaluated
+    per reference. Equal values always land in the same bucket; null
+    comparisons fall through every WHEN → bucket ``lo`` (nulls lowest).
+    One string: the tree costs one ``F.expr`` at any bucket count."""
+    if lo >= hi:
+        return str(lo)
+    mid = (lo + hi) // 2
+    return (
+        f"CASE WHEN {col} > {sql_lit(bs[mid])} THEN {bucket_expr(col, bs, mid + 1, hi)}"
+        f" ELSE {bucket_expr(col, bs, lo, mid)} END"
+    )
 
 
 def ecdf_naive(df: DataFrame, cols: list[str], prefix: str = "u_") -> DataFrame:
@@ -91,8 +108,20 @@ def ecdf(
     auto-scaled bucket count outgrows the probe grid (≳256M rows) the
     full-resolution re-probe below restores the grid. ``probe_buckets``
     is an internal knob: tests shrink it to exercise the re-probe path
-    at small scale."""
-    qs = [i / probe_buckets for i in range(1, probe_buckets)]
+    at small scale.
+
+    Every expression it builds is SQL text (ml.sql_col, ml.sql_lit):
+    the probe's aggregate list, with each column's fractions as ONE
+    array literal, the bucket trees, and the lookup joins with their
+    null fill. A warm build of the pipeline's 4-column ECDF sends ~250
+    py4j commands, where a Column costs ~11-13 per call and a Python
+    list of fractions one ``lit`` each."""
+    def pct(c: str, n: int) -> str:
+        # the n-quantile grid of c: ONE array literal of the fractions
+        # i/n, 0 < i < n (a Python list would cost a py4j `lit` each)
+        qs = ", ".join(sql_lit(i / n) for i in range(1, n))
+        return f"percentile_approx({sql_col(c)}, array({qs}), {int(1 / _REL_ERR)}) AS {sql_col('pct_' + c)}"
+
     # cardinality rsd 0.05 (not 0.02): the estimate only picks the
     # low/high PATH per column — both paths produce exact ECDF values,
     # so precision here buys nothing, while the HLL register width it
@@ -101,9 +130,9 @@ def ecdf(
     # the ±5% estimate error for the path decision)
     probe = observe_row(
         df.select(*cols),
-        F.count(F.lit(1)).alias("_n"),
-        *[F.approx_count_distinct(c, 0.05).alias(f"card_{c}") for c in cols],
-        *[F.percentile_approx(F.col(c), qs, int(1 / _REL_ERR)).alias(f"pct_{c}") for c in cols],
+        "count(1) AS _n",
+        *[f"approx_count_distinct({sql_col(c)}, 0.05D) AS {sql_col('card_' + c)}" for c in cols],
+        *[pct(c, probe_buckets) for c in cols],
     )
     n_rows = int(probe["_n"])
     if stats_out is not None:
@@ -130,10 +159,7 @@ def ecdf(
         # unreachable (fixed 1024-grid) and per-bucket window
         # partitions silently grew ~4× past the ~1M-row design bound
         # (ADVICE r2).
-        qs2 = [i / n_buckets for i in range(1, n_buckets)]
-        probe2 = observe_row(
-            df.select(*high), *[F.percentile_approx(F.col(c), qs2, int(1 / _REL_ERR)).alias(f"pct_{c}") for c in high]
-        )
+        probe2 = observe_row(df.select(*high), *[pct(c, n_buckets) for c in high])
         probe_vals = {c: probe2[f"pct_{c}"] for c in high}
         probe_buckets = n_buckets
 
@@ -145,29 +171,14 @@ def ecdf(
         grid = [float(x) for x in (probe_vals[c] or [])]
         bounds[c] = sorted(set(grid[step - 1 :: step]))
 
-    # bucket id = #boundaries strictly below value, via a balanced
-    # CASE-WHEN binary-search tree (codegen'd, ≤log2(B) compares —
-    # an array-filter HOF here is interpreted and re-evaluated per
-    # reference). Equal values always land in the same bucket; null
-    # comparisons fall through every WHEN → bucket 0 (nulls lowest).
-    def bucket_expr(col, bs: list[float], lo: int, hi: int):
-        # returns #boundaries in bs[lo:hi] strictly below col, offset lo
-        if lo >= hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return (
-            F.when(col > F.lit(bs[mid]), bucket_expr(col, bs, mid + 1, hi))
-            .otherwise(bucket_expr(col, bs, lo, mid))
-        )
-
     # fused counts job: melt EVERY ecdf column once; low-card columns
     # group by raw value, high-card by bucket id. One aggregation
     # replaces the former value-count job + bucket-count job.
-    stack_all = ", ".join(f"'{c}', CAST(`{c}` AS DOUBLE)" for c in cols)
+    stack_all = ", ".join(f"'{c}', CAST({sql_col(c)} AS DOUBLE)" for c in cols)
     melted = df.select(F.expr(f"stack({len(cols)}, {stack_all}) as (_f, _v)"))
-    g = F.col("_v")
+    g = "_v"
     for c in high:
-        g = F.when(F.col("_f") == c, bucket_expr(F.col("_v"), bounds[c], 0, len(bounds[c])).cast("double")).otherwise(g)
+        g = f"CASE WHEN _f = '{c}' THEN CAST({bucket_expr('_v', bounds[c], 0, len(bounds[c]))} AS DOUBLE) ELSE {g} END"
     # Driver-size bound of this collect: low-card columns contribute
     # ≤ low_card_threshold rows each, high-card ≤ n_buckets (4096 cap)
     # — worst case low_card_threshold × n_cols ≈ 65k × #features. With
@@ -176,8 +187,8 @@ def ecdf(
     # ``low_card_threshold`` (a public parameter) scale this collect
     # linearly and should keep threshold × n_cols ≲ 10M.
     fused = (
-        melted.groupBy("_f", g.alias("_g"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        melted.groupBy("_f", F.expr(f"{g} AS _g"))
+        .agg(F.expr("count(1) AS cnt"))
         .collect()
     )
     by_col: dict[str, list] = {c: [] for c in cols}
@@ -218,14 +229,13 @@ def ecdf(
         # as equal and AQE reuses one broadcast. A separate `_f = i`
         # predicate would be pushed into the build side as a filter
         # and make each exchange distinct.
-        key = F.struct(F.lit(i).alias("_f"), F.col(c).cast("double").alias("_v"))
-        rest = [x for x in out.columns if x != c]
-        out = out.join(dim, key == F.struct("_f", "_v"), "left").select(c, *rest, F.col("_u").alias(u))
+        key = f"struct({i} AS _f, CAST({sql_col(c)} AS DOUBLE) AS _v) = struct(_f, _v)"
+        rest = [sql_col(x) for x in out.columns if x != c]
+        out = out.join(dim, F.expr(key), "left").selectExpr(sql_col(c), *rest, f"_u AS {sql_col(u)}")
         if n_null[c]:
             # null inputs don't equi-join: fill their cume_dist value
-            out = out.withColumn(
-                u, F.when(F.col(c).isNull(), F.lit(n_null[c] / n_rows)).otherwise(F.col(u))
-            )
+            fill = sql_lit(n_null[c] / n_rows)
+            out = out.withColumn(u, F.expr(f"CASE WHEN {sql_col(c)} IS NULL THEN {fill} ELSE {sql_col(u)} END"))
 
     # Per column: bucket-assign on the wide frame itself,
     # broadcast-join the (bucket → cumulative offset) dim, and run ONE
@@ -242,7 +252,7 @@ def ecdf(
             acc += bucket_counts[bkt]
         u = prefix + c.removeprefix("n_")
         bcol, ocol, ncol = f"_b_{u}", f"_below_{u}", f"_nf_{u}"
-        out = out.withColumn(bcol, bucket_expr(F.col(c), bounds[c], 0, len(bounds[c])))
+        out = out.withColumn(bcol, F.expr(bucket_expr(sql_col(c), bounds[c], 0, len(bounds[c]))))
         off_df = spark.createDataFrame(
             pa.table({
                 bcol: pa.array(bkts, pa.int32()),
